@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftShim, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -288,13 +290,36 @@ object Sinks {
       |WHERE b.c_custkey NOT IN (SELECT c_custkey FROM batch)
       |ORDER BY c_custkey""".stripMargin
 
+  private val LocalFsKey = "fs.AbstractFileSystem.file.impl"
+
+  /** Start `body` as a checkpointed foreachBatch query.
+    *
+    * Before the start it installs [[NioLocalFs]] as the session's
+    * `file:` FileContext binding, unless a value for that key is
+    * already set (in the session, the SparkContext's Hadoop conf or a
+    * site file). Every trigger writes its offset and commit logs, the
+    * state-store deltas and the batch ledger through FileContext, and
+    * the stock binding forks a `chmod` or `readlink` child for most of
+    * those calls when libhadoop is absent — the bulk of a trigger's
+    * time on a small live stream. The driver's metadata logs and the
+    * executors' state stores both build their FileContext from the
+    * session's Hadoop conf, so one session conf reaches both. Files
+    * and `.crc` sidecars are byte-identical to the stock binding's, so
+    * checkpoints written under either resume under the other; other
+    * schemes are untouched.
+    */
   private def startForeachBatch(ticks: DataFrame, checkpoint: String)(
-      body: (DataFrame, Long) => Unit): StreamingQuery =
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val spark = ticks.sparkSession
+    val sources = GraftShim.hadoopConf(spark).getPropertySources(LocalFsKey)
+    if (sources == null || sources.forall(_ == "core-default.xml"))
+      spark.conf.set(LocalFsKey, classOf[NioLocalFs].getName)
     ticks.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) => body(batch, id) }
       .start()
+  }
 
   /** Streaming sink: the consumer→database leg (consumer/consumer.py
     * + analytics_consumer.py:97-192) as a foreachBatch upsert —
@@ -306,57 +331,45 @@ object Sinks {
       upsertParquet(batch, path, keyCols, versionCol)
     }
 
-  // the ledger lives beside the CHECKPOINT, which Spark treats as a
-  // Hadoop path (file:/, hdfs://, s3a://...) — so it must be accessed
-  // through the Hadoop FileSystem API, not java.io.File, or a URI
-  // checkpoint would silently mangle into a cwd-relative local path
-  private def ledgerFs(spark: SparkSession, ledgerPath: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(ledgerPath)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def committedBatch(fs: org.apache.hadoop.fs.FileSystem,
-      ledger: org.apache.hadoop.fs.Path): Long =
-    if (!fs.exists(ledger)) -1L
-    else
-      // an unreadable/truncated ledger (crash between rename and data
-      // flush) must degrade to RE-APPLY — the merge is idempotent —
-      // never to a permanently failing sink
-      scala.util.Try {
-        val in = fs.open(ledger)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      }.getOrElse(-1L)
+  // a missing, unreadable or truncated ledger degrades to RE-APPLY —
+  // the merge is idempotent — never to a permanently failing sink
+  private def committedBatch(fm: CheckpointFileManager, ledger: Path): Long =
+    scala.util.Try {
+      val in = fm.open(ledger)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
+      finally in.close()
+    }.getOrElse(-1L)
 
   /** One exactly-once microbatch commit: run `apply`, then record the
-    * batch id in the ledger file (written staged + atomic rename). A
-    * RE-DELIVERED batch (id ≤ ledger) is skipped entirely. foreachBatch
-    * is at-least-once after failures; the merge body is already
-    * idempotent per key, so the ledger's job is to also make side
-    * effects (file churn, write amplification) happen once per batch.
-    * Returns true when the batch was applied.
+    * batch id in the ledger file. A RE-DELIVERED batch (id ≤ ledger)
+    * is skipped entirely. foreachBatch is at-least-once after
+    * failures; the merge body is already idempotent per key, so the
+    * ledger's job is to also make side effects (file churn, write
+    * amplification) happen once per batch. Returns true when the batch
+    * was applied.
     *
     * The ledger lives with the CHECKPOINT, not the table: batch ids
     * are only monotonic within one checkpoint lineage, so a checkpoint
     * reset (ids restart at 0) gets a fresh ledger and re-applies
-    * idempotently instead of silently dropping the first batches.
+    * idempotently instead of silently dropping the first batches. It
+    * is read and written through Spark's checkpoint file manager, as
+    * the checkpoint itself is: a Hadoop path (file:/, hdfs://,
+    * s3a://...) replaced by an atomic create.
     */
   private[graft] def commitOnce(spark: SparkSession, ledgerPath: String,
       batchId: Long)(apply: => Unit): Boolean = {
-    val (fs, ledger) = ledgerFs(spark, ledgerPath)
-    if (batchId <= committedBatch(fs, ledger)) return false
-    apply
-    val staged = new org.apache.hadoop.fs.Path(ledgerPath + ".staging")
-    val out = fs.create(staged, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    // HDFS-style rename refuses to overwrite: drop the old ledger
-    // first. A crash in the gap leaves NO ledger, which degrades to
-    // re-apply (idempotent), never to data loss.
-    if (fs.exists(ledger)) fs.delete(ledger, false)
-    if (!fs.rename(staged, ledger))
-      throw new java.io.IOException(s"could not commit batch ledger $ledgerPath")
-    true
+    val ledger = new Path(ledgerPath)
+    val fm = CheckpointFileManager.create(ledger, GraftShim.hadoopConf(spark))
+    try {
+      if (batchId <= committedBatch(fm, ledger)) return false
+      apply
+      fm.mkdirs(ledger.getParent)
+      val out = fm.createAtomic(ledger, overwriteIfPossible = true)
+      try out.write(batchId.toString.getBytes("UTF-8"))
+      catch { case e: Throwable => out.cancel(); throw e }
+      out.close()
+      true
+    } finally fm.close()
   }
 
   private[graft] def commitBatchOnce(batch: DataFrame, path: String,

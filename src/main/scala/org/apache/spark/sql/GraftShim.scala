@@ -37,6 +37,12 @@ object GraftShim {
       case _ => ()
     }
 
+  /** The session's Hadoop configuration: the SparkContext's, overlaid
+    * with the session's SQL confs — what the session's own checkpoint
+    * and state-store file managers are built from. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
   /** Idempotently add a planner strategy to the session. */
   def addStrategy(spark: SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {

@@ -7,6 +7,35 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Split the tick table into `nParts` time-ordered files staged with
+    * STRICTLY INCREASING mtimes (the file source orders batches by
+    * modification time; same-ms copies would arrive in arbitrary
+    * order, violating the per-key-ordered arrival the stateful
+    * operators assume). Returns a dir to readStream with
+    * maxFilesPerTrigger=1.
+    */
+  protected def stageTimeOrderedSplit(nParts: Int): String = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, ntile}
+    val staged = java.nio.file.Files.createTempDirectory(s"split$nParts").toString
+    val ev = Tables.events(spark, sfDir)
+      .withColumn("part", ntile(nParts).over(Window.orderBy("ts", "event_id")))
+    (1 to nParts).foreach { p =>
+      ev.filter(col("part") === p).drop("part").coalesce(1)
+        .write.parquet(s"$staged/f$p.parquet")
+    }
+    val streamDir = java.nio.file.Files.createTempDirectory(s"flat$nParts")
+    new java.io.File(staged).listFiles().filter(_.isDirectory).sortBy(_.getName)
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+      .zipWithIndex.foreach { case (f, i) =>
+        val dst = streamDir.resolve(f"part$i%02d.parquet")
+        java.nio.file.Files.copy(f.toPath, dst)
+        require(dst.toFile.setLastModified(1700000000000L + i * 60000L),
+          s"could not set mtime on $dst — arrival order would be arbitrary")
+      }
+    streamDir.toString
+  }
 }
 
 object SparkSuite {
