@@ -39,7 +39,8 @@ SKIP_ARGS=""
 for q in "${SKIP[@]}"; do SKIP_ARGS+=" skip:$q"; done
 
 echo "[sweep] generating ${REPLICAS}x replica of $SRC -> $REP"
-sbt -batch "runMain graft.ReplicaGen $REPLICAS $SRC $REP"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
+  sbt -batch "runMain graft.ReplicaGen $REPLICAS $SRC $REP"
 echo "[sweep] dumping SQL-oracled queries on the replica"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
   sbt -batch "runMain graft.Verify $REP $DUMP sqlonly$SKIP_ARGS"

@@ -27,7 +27,8 @@ DUMP="${4:-/tmp/verify_rep100}"
 ORACLED="q_syndication q_dedup_scorecard q_boilerplate q_dedup_edit"
 
 echo "[spot] generating ${REPLICAS}x documents/embeddings replica of $SRC -> $REP"
-sbt -batch "runMain graft.ReplicaGen $REPLICAS $SRC $REP only:documents,embeddings"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
+  sbt -batch "runMain graft.ReplicaGen $REPLICAS $SRC $REP only:documents,embeddings"
 
 echo "[spot] dumping the byte-comparable four on the replica"
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \

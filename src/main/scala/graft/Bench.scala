@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: runs the headline queries at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON metrics line. Results are materialized through the
@@ -52,15 +52,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
 
     // PER-QUERY EXECUTOR TASK-TIME (round 14, additive): the driver's
     // 8-vs-32-core scaling check reads wall-clock ratios, and after
@@ -71,28 +64,10 @@ object Bench {
     // change leaves it ~constant while per-core occupancy shifts —
     // wall ≈ task/cores only when compute-bound. Recorded per query
     // (the run that set the warm minimum) under NEW JSON keys; every
-    // pre-existing key and its meaning is unchanged.
-    val taskTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) { taskTimeMs.addAndGet(m.executorRunTime): Unit }
-        }
-      })
-    // the listener bus is async — settle until the counter is quiet so
-    // per-query deltas attribute to the query that ran, not its
-    // successor (worst case a few ms of bleed, bounded by the spins)
-    def settledTaskMs(): Long = {
-      var last = -1L
-      var cur = taskTimeMs.get()
-      var spins = 0
-      while (cur != last && spins < 60) {
-        last = cur; Thread.sleep(5); cur = taskTimeMs.get(); spins += 1
-      }
-      cur
-    }
+    // pre-existing key and its meaning is unchanged. The counter
+    // drains the listener bus on every read, so a query's deltas
+    // hold exactly its own tasks.
+    val counter = JobCounter.attach(spark)
     val taskSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
 
     // JVM/session warmup outside the timed region; never let it kill
@@ -178,7 +153,7 @@ object Bench {
       var halted = false
       var i = 0
       while (!halted && i < runs) {
-        val task0 = settledTaskMs()
+        val task0 = counter.read().taskMs
         val t0 = System.nanoTime()
         val ok =
           try { thunk().write.format("noop").mode("overwrite").save(); true }
@@ -192,7 +167,7 @@ object Bench {
           if (secs < best) {
             best = secs
             // task seconds of the SAME run the warm minimum came from
-            taskSec(name) = (settledTaskMs() - task0) / 1e3
+            taskSec(name) = (counter.read().taskMs - task0) / 1e3
           }
         }
         else { halted = true; lastErrSecs = secs }
@@ -247,14 +222,14 @@ object Bench {
 
     // STREAMING group: end-to-end rows/second of the four stateful
     // operators over the events table staged as an 8-file stream
-    // (identical source shape to StreamProbe, whose numbers previously
+    // (identical source shape to `Probe stream`, whose numbers previously
     // lived only in SURVEY prose — in the artifact, a streaming-tier
     // regression is visible round over round). One run each: a
     // streaming query amortizes source+state+sink over the whole
     // table, so per-run variance is far below the batch queries'.
     // Rates are rows/s (HIGHER is better, unlike the seconds above);
     // a crashed operator reports -1 and lands in errors.
-    // The group runs at StreamProbe's shuffle-partition shape (8, not
+    // The group runs at `Probe stream`'s shuffle-partition shape (8, not
     // the batch session's cpus-sized count): the stateful operators'
     // per-batch cost is dominated by state-store tasks × batches, so
     // the divisor — not the operator — owned the number when the two
@@ -276,14 +251,14 @@ object Bench {
     val cleanups = scala.collection.mutable.ArrayBuffer.empty[String]
     val streaming: Seq[(String, Double)] = try {
       spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      val (flat, schema, total) = StreamProbe.stageEvents(spark, sfDir, 8, 1)
+      val (flat, schema, total) = Probe.stageEvents(spark, sfDir, 8)
       cleanups += flat
       // best-of-N per stream, N=3 (round 12; see streamRuns — first
       // shipped as 2, raised to match the batch discipline): the
       // batch queries have
       // graded min-of-3 steady state since round 4, while each stream
       // ran ONCE — so its number carried the one-time codegen/JIT cost
-      // of the fold path (BarProfile: run 1 → 2 on a warm session is
+      // of the fold path (run 1 → 2 on a warm session is
       // +50-70% for the daily-bar leg) and two rounds of driver
       // artifacts printed ambient-inflated stream numbers nobody could
       // attribute. Each run gets a FRESH checkpoint (fresh state —
@@ -294,31 +269,16 @@ object Bench {
           build: DataFrame => DataFrame): (String, Double) = {
         var best = -1.0
         for (_ <- 1 to streamRuns) {
-          val stream = spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(flat)
           val ckpt = java.nio.file.Files.createTempDirectory(s"bench_$name").toString
           cleanups += ckpt
-          val t0 = System.nanoTime()
-          // hold the handle OUTSIDE the try and stop in a finally: a
-          // probe that throws mid-run must not leave its query running
-          // in the background, competing for cores with the remaining
-          // probes. On the success path the query is ALREADY stopped
-          // when the finally runs — stop() stays inside the timed
-          // region, as in every prior round's artifact, so the metric
-          // definition is unchanged.
-          var q: org.apache.spark.sql.streaming.StreamingQuery = null
+          // stop() stays inside the timed region, as in every prior
+          // round's artifact, so the metric definition is unchanged;
+          // a run that throws is stopped before the error reaches here
           try {
-            q = build(stream).writeStream.format("noop")
-              .option("checkpointLocation", ckpt).start()
-            q.processAllAvailable()
-            q.stop()
-            best = math.max(best, total / ((System.nanoTime() - t0) / 1e9))
+            val (secs, _) = Probe.runLeg(spark, flat, schema, ckpt)(build)
+            best = math.max(best, total / secs)
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $name: $e")
-          } finally {
-            if (q != null && q.isActive)
-              try q.stop() catch { case e: Throwable =>
-                System.err.println(s"[bench] $name stop: $e") }
           }
         }
         // a stream with ZERO successful runs grades failed (-1 rate +
@@ -326,25 +286,15 @@ object Bench {
         if (best < 0) failed += name
         name -> best
       }
-      Seq(
-        sprobe("stream_indicators")(s =>
-          graft.streaming.TickStream.statefulIndicators(spark, s).toDF()),
-        sprobe("stream_sessionize")(s =>
-          graft.streaming.TickStream.sessionizeStream(spark, s).toDF()),
-        sprobe("stream_price_ffill")(s =>
-          graft.streaming.TickStream.priceFfillStream(spark, s).toDF()),
-        sprobe("stream_windowed_agg")(s =>
-          graft.streaming.TickStream.windowedAgg(s)),
-        // round 9: the daily-bar close engine — input ticks/s through
-        // the full live indicator carry (vwap/stoch/keltner/adx/obv)
-        sprobe("stream_daily_bars")(s =>
-          graft.streaming.TickStream.dailyBarStream(spark, s).toDF()))
+      Probe.streamLegs.map { case (leg, build) =>
+        sprobe(s"stream_$leg")(build(spark, _))
+      }
     } catch { case e: Throwable =>
       System.err.println(s"[bench] streaming stage: $e")
       failed += "streaming_stage"
       Seq.empty
     } finally {
-      cleanups.foreach(StreamProbe.deleteRecursively)
+      cleanups.foreach(Probe.deleteRecursively)
       spark.conf.set("spark.sql.shuffle.partitions", cpus)
     }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Quantization-error probe: reconstruction MSE of parametric OPQ vs
@@ -16,10 +15,7 @@ import org.apache.spark.sql.functions._
 object MseProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     def mse(idx: operators.Similarity.OpqIndex): Double = {
       val corpus = operators.Similarity.vecs(spark, dir).toDF("vec_id", "v", "norm")
       val rot = idx.rot

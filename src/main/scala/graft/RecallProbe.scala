@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** ANN parameter-sweep harness: recall@10 (and candidate-set cost)
   * of the LSH multiprobe radius and the IVF nProbe against the
   * brute-force ground truth. This is the tuning loop an operator of
@@ -14,14 +12,7 @@ import org.apache.spark.sql.SparkSession
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
 
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("probe_id", "neighbor_id").collect()

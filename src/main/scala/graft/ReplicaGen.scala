@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Replica-dataset generator for the SCALE-REGRESSION strict sweep:
@@ -34,14 +33,7 @@ object ReplicaGen {
     val out = pos.lift(2).getOrElse("/tmp/sf_rep10")
     val onlyTables: Option[Set[String]] = args.find(_.startsWith("only:"))
       .map(_.stripPrefix("only:").split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     new java.io.File(out).mkdirs()
 
     def copy(t: String): Unit =

@@ -361,8 +361,9 @@ object Classifier {
   }
 
   /** Separation floor for [[clfGate]] — mean target prob minus mean
-    * non-target prob over the full scored corpus (GateProbe-measured
-    * 0.39 / 0.36 / 0.069 at sf0.001/0.01/0.1 — the fixed GD epoch
+    * non-target prob over the full scored corpus (measured when the
+    * floor was set: 0.39 / 0.36 / 0.069 at sf0.001/0.01/0.1;
+    * q_clf_gate holds it, run by GateSpec — the fixed GD epoch
     * budget separates less as the corpus grows, so the floor sits
     * under the weakest measured point); a classifier that stops
     * learning or diverges reads ~0 or negative.
@@ -370,8 +371,9 @@ object Classifier {
   private[graft] val ClfSeparationFloor = 0.02
 
   /** Ceiling for the mean |clf − DSIR| percentile gap (uniform-
-    * random rankings read ~33; GateProbe-measured 19.8 / 19.8 /
-    * 17.0 — agreement well above chance but honest about the two
+    * random rankings read ~33; measured 19.8 / 19.8 / 17.0 when the
+    * ceiling was set, held by q_clf_gate — agreement well above
+    * chance but honest about the two
     * scorers' different geometry).
     */
   private[graft] val ClfAgreementGapCeiling = 28.0

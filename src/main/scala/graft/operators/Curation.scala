@@ -2199,8 +2199,9 @@ object Curation {
 
   /** Pearson floor for [[dsirHashGate]] — hashing collapses the
     * vocabulary into buckets, so exact and hashed log-weights agree
-    * up to collision noise (GateProbe-measured r = 0.65 / 0.54 /
-    * 0.51 at sf0.001/0.01/0.1 with the default bucket count on this
+    * up to collision noise (measured when the floor was set:
+    * r = 0.65 / 0.54 / 0.51 at sf0.001/0.01/0.1; q_dsir_hash_gate
+    * holds it, run by GateSpec — default bucket count on this
     * synthetic low-vocabulary corpus — heavy collision load, honest
     * number); a broken hasher, bucket indexing, or model fold
     * decorrelates toward 0.
@@ -3853,7 +3854,7 @@ object Curation {
     // for a doc-count-sized table). LAZY checkpoint (round 12): the
     // plan is already the truncated ExistingRDD either way, but the
     // scoring job now runs on FIRST ACTION, not at DataFrame
-    // construction — plan-only consumers (PlanDump, PlanSpec's
+    // construction — plan-only consumers (`Probe plans`, PlanSpec's
     // all-query sweep) no longer execute a corpus job to inspect a
     // plan, and q_curriculum stops being the one registry entry with
     // construction-time side effects.

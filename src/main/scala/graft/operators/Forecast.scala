@@ -1587,7 +1587,8 @@ object Forecast {
     * documented min-5-scored-steps contract): keys with ≥
     * MinObservations + 5 valid ticks are backtest-eligible (pure
     * SQL), and the accuracy surface must cover ≥ 80% of them
-    * (GateProbe-measured 0.94-1.0; a broken walk-forward reads 0).
+    * (measured 0.94-1.0 when the floor was set; q_forecast_gate
+    * holds it, run by GateSpec; a broken walk-forward reads 0).
     */
   def forecastGate(spark: SparkSession, dir: String): DataFrame = {
     val counts = Warehouse.validTicks(spark, dir)

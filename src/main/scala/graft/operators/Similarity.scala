@@ -3073,8 +3073,9 @@ object Similarity {
       |FROM embeddings""".stripMargin
 
   /** Recall floor for [[annFilteredGate]] — loose for the same
-    * reason as [[RecallGateFloors]] (GateProbe-measured: 0.34 /
-    * 0.50 / 0.50 at sf0.001/0.01/0.1 — the label constraint thins
+    * reason as [[RecallGateFloors]] (measured when the floor was set:
+    * 0.34 / 0.50 / 0.50 at sf0.001/0.01/0.1; q_ann_filtered_gate
+    * holds it, run by GateSpec — the label constraint thins
     * each cell, so nProbe=3 of 16 costs more recall than unfiltered
     * IVF; a broken pushdown or label join reads ~0).
     */

@@ -43,6 +43,13 @@ object GraftShim {
   def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 
+  /** Block until every listener-bus event posted so far has been
+    * delivered. An action returns before its task-end events reach
+    * the listeners; draining makes a listener's counts after the
+    * action exact instead of racing the bus. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Idempotently add a planner strategy to the session. */
   def addStrategy(spark: SparkSession,
       strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {

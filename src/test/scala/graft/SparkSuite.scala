@@ -40,17 +40,8 @@ trait SparkSuite extends AnyFunSuite {
 
 object SparkSuite {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // fixed at 4 cores, independent of SPARK_GRAFT_CPUS
+    val s = Session.local(4)
     // TEST-ONLY log filter (round 14): the global Window.partitionBy()
     // WARNs all come from aggregated, documented small-by-construction
     // frames (cluster-id sets, per-source mixes, log-bucket
