@@ -51,9 +51,18 @@ object Tables {
     *    the session TZ (pinned UTC by every entry point), the same
     *    naive reading DuckDB applies.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    eventsOf(spark, dir)(identity)
+
+  /** The one event-time normalization, for any reader of the events
+    * file: `source` gets the batch frame (its schema inferred under
+    * the legacy nanos flag) and returns the frame to normalize — the
+    * batch frame itself, or a stream declared with its schema.
+    */
+  private[graft] def eventsOf(spark: SparkSession, dir: String)(
+      source: DataFrame => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = apply(spark, dir, "events")
+    val raw = source(apply(spark, dir, "events"))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(

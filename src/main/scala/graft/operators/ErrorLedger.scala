@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * rejected tick is RECORDED with component, error class, a fixed
   * human-readable message and the offending payload, instead of being
   * silently dropped. The reject predicate here is the exact
-  * complement of [[Warehouse.validTicksOf]] by construction (one
+  * complement of [[Warehouse.validTick]] by construction (one
   * spec-pinned partition of the input: every tick lands in the valid
   * stream or this ledger, never both, never neither).
   *
@@ -32,13 +32,11 @@ object ErrorLedger {
 
   val Component = "tick_ingest"
 
-  /** The single reject predicate (complement of the valid-tick filter
-    * in [[Warehouse.validTicksOf]], written null-safely: a null never
-    * silently escapes the three-valued logic).
+  /** The single reject predicate: the negation of
+    * [[Warehouse.validTick]], which is never null, so no tick escapes
+    * the three-valued logic.
     */
-  private[graft] def invalidTick =
-    col("user_id").isNull || col("value").isNull ||
-      isnan(col("value")) || col("value") <= 0
+  private[graft] val invalidTick = !Warehouse.validTick
 
   /** Classified reject ledger over an events-shaped frame (batch OR
     * streaming — stateless). First matching class wins, in the same

@@ -131,11 +131,7 @@ object Indicators {
     * window pass (zero extra shuffle — see [[Recurrence.withEmaMacd]]).
     */
   def analyticsFull(spark: SparkSession, dir: String): DataFrame =
-    analyticsFullBase(spark, dir)
-
-  private def analyticsFullBase(spark: SparkSession, dir: String): DataFrame = {
-    val windowed = base(spark, dir)
-    Recurrence.withEmaMacd(windowed)
+    Recurrence.withEmaMacd(base(spark, dir))
       .select(
         col("user_id"), col("ts"), col("event_id"),
         col("value").as("current_price"),
@@ -153,7 +149,6 @@ object Indicators {
         round(guard(21, col("vol_raw")), 4).as("volatility"),
         round(guard(2, col("delta") / (col("value") - col("delta")) * 100.0), 6)
           .as("price_change_percent"))
-  }
 
   /** Recent-analytics feed (dashboard fetch_analytics_data,
     * app.py:86-120): every indicator column for the trailing 7 days,
@@ -165,7 +160,7 @@ object Indicators {
     val maxTs = Warehouse.validTicks(spark, dir).agg(max("ts").as("max_ts"))
     val dim = graft.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_name").as("symbol_name"))
-    analyticsFullBase(spark, dir)
+    analyticsFull(spark, dir)
       .crossJoin(broadcast(maxTs))
       .filter(col("ts") >= col("max_ts") - expr("INTERVAL 7 DAYS"))
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
@@ -185,12 +180,20 @@ object Indicators {
 
   /** Threshold alerts (analytics_consumer.py:226-268): RSI overbought
     * >70 / oversold <30 (HIGH), volatility >0.05 (MEDIUM).
+    */
+  def alerts(spark: SparkSession, dir: String): DataFrame =
+    alertsOf(analyticsFull(spark, dir))
+
+  /** The ONE alert rule set, over indicator rows (user_id, ts,
+    * event_id, rsi_14, volatility) whose `rsi_14` and `volatility` are
+    * already rounded to 4 places; the batch surfaces and
+    * [[graft.streaming.TickStream.alertsStream]] all apply it.
     *
     * Emitted in ONE pass via array-build + inline rather than a union
     * of filters — a union would recompute the whole indicator window
     * stage per branch (measured: 3 exchanges vs 1).
     */
-  private def alertsBase(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def alertsOf(rows: DataFrame): DataFrame = {
     val rsi = col("rsi_14")
     val vol = col("volatility")
     val alertStructs = array(
@@ -203,14 +206,11 @@ object Indicators {
       when(vol.isNotNull && vol > 0.05,
         struct(lit("HIGH_VOLATILITY").as("alert_type"), vol.as("indicator_value"),
           lit(0.05).as("threshold_value"), lit("MEDIUM").as("severity"))))
-    analyticsFull(spark, dir)
+    rows
       .select(col("user_id"), col("ts"), col("event_id"),
         explode(filter(alertStructs, a => a.isNotNull)).as("alert"))
       .select(col("user_id"), col("ts"), col("event_id"), col("alert.*"))
   }
-
-  def alerts(spark: SparkSession, dir: String): DataFrame =
-    alertsBase(spark, dir)
 
   /** Recent-alerts feed (dashboard fetch_alerts, app.py:121-144):
     * newest `limit` alerts first, enriched with the broadcast symbol
@@ -222,7 +222,7 @@ object Indicators {
   def recentAlerts(spark: SparkSession, dir: String, limit: Int = 50): DataFrame = {
     val dim = graft.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_name").as("symbol_name"))
-    alertsBase(spark, dir)
+    alerts(spark, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .drop("c_custkey")
       .orderBy(col("ts").desc, col("event_id").desc, col("alert_type"))

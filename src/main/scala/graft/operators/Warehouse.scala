@@ -30,14 +30,21 @@ object Warehouse {
   def validTicks(spark: SparkSession, dir: String): DataFrame =
     validTicksOf(Tables.events(spark, dir))
 
-  /** The validation predicate on an arbitrary events-shaped input —
-    * the ONE definition of "valid tick" (ScaleProbe and the dir-based
-    * path share it, so they can't drift apart).
+  /** The ONE definition of "valid tick" (producer.py:255-288): every
+    * batch and streaming tick path filters on it, and
+    * [[ErrorLedger.invalidTick]] is its negation. It is never null, so
+    * the two split any input exactly.
+    */
+  private[graft] val validTick: Column =
+    col("value").isNotNull && col("value") > 0 && !isnan(col("value")) &&
+      col("user_id").isNotNull
+
+  /** [[validTick]] on an arbitrary events-shaped input, projected to
+    * the tick columns (the streaming gates, ScaleProbe and the
+    * dir-based loaders share it).
     */
   def validTicksOf(events: DataFrame): DataFrame =
-    events
-      .filter(col("value").isNotNull && col("value") > 0 && !isnan(col("value"))
-        && col("user_id").isNotNull)
+    events.filter(validTick)
       .select("event_id", "ts", "user_id", "event_type", "value")
 
   /** [[validTicks]] as a registry query entry (unordered — the driver
@@ -2041,11 +2048,8 @@ object Warehouse {
     * partials only. The 100 TB shape by construction.
     */
   def vwap(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .filter(col("value").isNotNull && col("value") > 0 &&
-        !isnan(col("value")) && col("user_id").isNotNull)
-      .withColumn("vol", get_json_object(col("props"), "$.k").cast("long"))
-      .filter(col("vol").isNotNull && col("vol") > 0)
+    validTicksVol(spark, dir)
+      .filter(col("vol") > 0)
       .groupBy(col("user_id"), to_date(col("ts")).as("trade_date"))
       .agg(
         (round(
@@ -2093,8 +2097,7 @@ object Warehouse {
   private[graft] def validTicksVol(spark: SparkSession,
       dir: String): DataFrame =
     Tables.events(spark, dir)
-      .filter(col("value").isNotNull && col("value") > 0 &&
-        !isnan(col("value")) && col("user_id").isNotNull)
+      .filter(validTick)
       .withColumn("vol", coalesce(
         get_json_object(col("props"), "$.k").cast("long"), lit(0L)))
 
@@ -3219,11 +3222,8 @@ object Warehouse {
     val rets = ohlcBy(spark, dir, to_date(col("ts")).as("trade_date"),
       "trade_date", validated = true)
       .select(col("user_id"), col("trade_date"), rm.as("rm"))
-    val dv = Tables.events(spark, dir)
-      .filter(col("value").isNotNull && col("value") > 0 &&
-        !isnan(col("value")) && col("user_id").isNotNull)
-      .withColumn("vol", get_json_object(col("props"), "$.k").cast("long"))
-      .filter(col("vol").isNotNull && col("vol") > 0)
+    val dv = validTicksVol(spark, dir)
+      .filter(col("vol") > 0)
       .groupBy(col("user_id"), to_date(col("ts")).as("trade_date"))
       .agg((sum(round(col("value") * 1e6, 0).cast("decimal(38,0)")
         * col("vol")).cast("double") / 1e6).as("dollar_vol"))

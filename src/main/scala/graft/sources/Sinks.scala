@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftShim, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,16 +16,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch_predict_linear_regression.py:60-76). On a cluster the target
   * is a table-format/parquet sink, and the same contract is
   * merge-by-key-keep-latest, implemented here as a deterministic
-  * read-merge-write. In production the JDBC variant is the same
-  * `foreachBatch` body with `batch.write.jdbc(...)` and a staging
-  * table + MERGE.
+  * read-merge-write ([[upsertParquet]]) and, for the reference's own
+  * target, as a staging table + MERGE ([[upsertJdbc]]); both keep the
+  * winner [[mergeByKey]] picks.
   */
 object Sinks {
 
-  /** The merge-by-key kernel both upsert sinks (and the companies-dim
-    * write path) share: one row per `keyCols` survives, newest by
-    * `versionCol`, ties → the update side wins. Pure plan — callers
-    * own materialization and durability.
+  /** The merge-by-key kernel every upsert sink (and the companies-dim
+    * write path) shares: one row per `keyCols` survives, newest by
+    * `versionCol`, ties → the update side wins, and equal versions on
+    * the same side → the greatest row content (the orderable non-key
+    * columns, in schema order, descending). The winner is therefore a
+    * function of the rows, not of their arrival order, so a replayed
+    * batch writes the same row. Pure plan — callers own
+    * materialization and durability.
     */
   private[graft] def mergeByKey(existing: Option[DataFrame],
       updates: DataFrame, keyCols: Seq[String],
@@ -34,16 +39,20 @@ object Sinks {
       case Some(e) => e.withColumn("_src", lit(0)).unionByName(tagged)
       case None => tagged
     }
+    val content = updates.schema.fields
+      .filter(f => !keyCols.contains(f.name) && f.name != versionCol &&
+        RowOrdering.isOrderable(f.dataType))
+      .map(f => col(f.name).desc)
     val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(versionCol).desc, col("_src").desc)
+      .orderBy(col(versionCol).desc +: col("_src").desc +: content: _*)
     all
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn", "_src")
   }
 
-  /** Merge `updates` into the parquet table at `path`: one row per
-    * `keyCols` survives, newest by `versionCol` (ties → update wins).
+  /** Merge `updates` into the parquet table at `path` with
+    * [[mergeByKey]].
     */
   def upsertParquet(updates: DataFrame, path: String, keyCols: Seq[String],
       versionCol: String): Unit = {
@@ -60,29 +69,23 @@ object Sinks {
     val merged = mergeByKey(existing, updates, keyCols, versionCol)
     // stage-and-swap: writing over the path being read would corrupt
     // the table if cached partitions were evicted mid-write. Swap via
-    // rename(live→old) + rename(staging→live) + delete(old): every
-    // crash point leaves a recoverable copy (see readPath above).
+    // delete(stale old) + rename(live→old) + rename(staging→live) +
+    // delete(old). Every crash point leaves a dir readPath recovers
+    // from: live, or .old while live is absent. Without live, .old is
+    // the only durable copy and is dropped only after the promote.
     val staged = path + ".staging"
     merged.write.mode(SaveMode.Overwrite).parquet(staged)
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }
-    val stagedDir = new java.io.File(staged)
     if (live.exists()) {
-      if (old.exists()) rm(old) // stale leftover from a completed swap
+      rm(old) // stale leftover from a completed swap
       if (!live.renameTo(old))
         throw new java.io.IOException(s"could not retire $path")
-      if (!stagedDir.renameTo(live))
-        throw new java.io.IOException(s"could not promote $staged into $path")
-      rm(old)
-    } else {
-      // recovery path: .old (if present) is the only durable copy —
-      // promote staging to live FIRST, only then drop .old, so every
-      // crash point still leaves a dir that readPath recovers from
-      if (!stagedDir.renameTo(live))
-        throw new java.io.IOException(s"could not promote $staged into $path")
-      if (old.exists()) rm(old)
     }
+    if (!new java.io.File(staged).renameTo(live))
+      throw new java.io.IOException(s"could not promote $staged into $path")
+    rm(old)
   }
 
   /** Partition-aware upsert: merge `updates` into a table
@@ -321,16 +324,6 @@ object Sinks {
       .start()
   }
 
-  /** Streaming sink: the consumer→database leg (consumer/consumer.py
-    * + analytics_consumer.py:97-192) as a foreachBatch upsert —
-    * exactly-once per key via idempotent merge.
-    */
-  def streamUpsert(ticks: DataFrame, path: String, checkpoint: String,
-      keyCols: Seq[String], versionCol: String): StreamingQuery =
-    startForeachBatch(ticks, checkpoint) { (batch, _) =>
-      upsertParquet(batch, path, keyCols, versionCol)
-    }
-
   // a missing, unreadable or truncated ledger degrades to RE-APPLY —
   // the merge is idempotent — never to a permanently failing sink
   private def committedBatch(fm: CheckpointFileManager, ledger: Path): Long =
@@ -372,23 +365,19 @@ object Sinks {
     } finally fm.close()
   }
 
-  private[graft] def commitBatchOnce(batch: DataFrame, path: String,
-      ledgerPath: String, keyCols: Seq[String], versionCol: String,
-      batchId: Long): Boolean =
-    commitOnce(batch.sparkSession, ledgerPath, batchId) {
-      upsertParquet(batch, path, keyCols, versionCol)
-    }
-
-  /** [[streamUpsert]] with a per-batch commit ledger: exactly-once in
-    * effects as well as in results — Structured Streaming replays the
-    * last uncommitted microbatch after a crash, and the ledger makes
-    * the replay a no-op when the previous attempt got through.
+  /** Streaming sink: the consumer→database leg (consumer/consumer.py
+    * + analytics_consumer.py:97-192) as a foreachBatch [[upsertParquet]]
+    * under the per-batch commit ledger — exactly-once in effects as
+    * well as in results: Structured Streaming replays the last
+    * uncommitted microbatch after a crash, and the ledger makes the
+    * replay a no-op when the previous attempt got through.
     */
   def streamUpsertExactlyOnce(ticks: DataFrame, path: String, checkpoint: String,
       keyCols: Seq[String], versionCol: String): StreamingQuery =
     startForeachBatch(ticks, checkpoint) { (batch, id) =>
-      commitBatchOnce(batch, path, s"$checkpoint/graft.commit",
-        keyCols, versionCol, id): Unit
+      commitOnce(batch.sparkSession, s"$checkpoint/graft.commit", id) {
+        upsertParquet(batch, path, keyCols, versionCol)
+      }: Unit
     }
 
   // ---------------------------------------------------------------- JDBC
@@ -402,12 +391,15 @@ object Sinks {
     * ANSI MERGE. Same contract as [[upsertParquet]]: one row per
     * `keyCols` survives, newest by `versionCol`, ties → update wins.
     *
-    * The batch is deduped per key BEFORE staging (MERGE requires one
-    * source row per target row), written with Spark's parallel JDBC
-    * writer, then merged in one set-based server-side statement — no
-    * per-row driver round-trips. Verified against embedded Derby in
-    * SinksSpec (the in-container stand-in); against PostgreSQL the
-    * same staging+MERGE shape applies verbatim.
+    * The batch is deduped per key with [[mergeByKey]] BEFORE staging
+    * (MERGE requires one source row per target row), written with
+    * Spark's parallel JDBC writer, then merged in one set-based
+    * server-side statement — no per-row driver round-trips. Verified
+    * against embedded Derby in SinksSpec (the in-container stand-in);
+    * against PostgreSQL the same staging+MERGE shape applies verbatim.
+    * A target this function creates gets a UNIQUE constraint on
+    * `keyCols` (the index `ON CONFLICT` needs); a pre-existing target
+    * is used as it is.
     *
     * String columns are pinned to VARCHAR (Spark's Derby default is
     * CLOB, which cannot be compared or indexed in a MERGE ON clause).
@@ -427,17 +419,7 @@ object Sinks {
     */
   def upsertJdbc(updates: DataFrame, url: String, table: String,
       keyCols: Seq[String], versionCol: String): Unit = {
-    // tie-break equal versions on the remaining columns so the winner
-    // is a function of batch CONTENT — a crash-replayed batch then
-    // stages the same row and the re-MERGE is a true no-op
-    val tieBreak = updates.schema.fieldNames
-      .filterNot(c => keyCols.contains(c) || c == versionCol)
-      .map(col(_).desc)
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(versionCol).desc +: tieBreak: _*)
-    val deduped = updates
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
+    val deduped = mergeByKey(None, updates, keyCols, versionCol)
     // unique per invocation: concurrent writers (batch job + streaming
     // foreachBatch) must not share or race a fixed staging name
     val staging = table + "_stg_" +
@@ -470,9 +452,14 @@ object Sinks {
         } catch { case _: java.sql.SQLException => false }
       val st = conn.createStatement()
       try {
-        if (!exists)
+        if (!exists) {
           st.executeUpdate(
             s"CREATE TABLE $table AS SELECT * FROM $staging WITH NO DATA")
+          // the key constraint's index makes each MERGE O(batch)
+          // instead of a scan of the whole target
+          st.executeUpdate(
+            s"ALTER TABLE $table ADD UNIQUE (${keyCols.map(qid).mkString(", ")})")
+        }
         st.executeUpdate(
           s"""MERGE INTO $table t USING $staging s ON $onClause
              |WHEN MATCHED AND s.${qid(versionCol)} >= t.${qid(versionCol)}

@@ -104,30 +104,13 @@ object TickStream extends Serializable {
     })
 
   /** Streaming source over the events tick table (file source standing
-    * in for Kafka; same schema as Tables.events).
+    * in for Kafka; same schema and event-time normalization as
+    * Tables.events).
     */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // peek the batch-inferred ts type once (footer read): the generator
-    // has shipped both TIMESTAMP(NANOS)→long and MICROS→NTZ layouts,
-    // and the stream must declare the matching source schema before
-    // normalizing to session-TZ TIMESTAMP exactly like Tables.events
-    val tsType = spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", tsType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val raw = spark.readStream.schema(schema)
-      .parquet(stageFile(dir, "events.parquet").toString)
-    tsType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.eventsOf(spark, dir)(batch =>
+      spark.readStream.schema(batch.schema)
+        .parquet(stageFile(dir, "events.parquet").toString))
 
   /** Streaming source over the documents table — the ingestion leg of
     * a streaming curation pipeline (file source standing in for the
@@ -1898,10 +1881,7 @@ object TickStream extends Serializable {
       out.result().iterator
     }
     ticks
-      // the batch validation predicate, kept inline because the bar
-      // engine also needs the props column validTicksOf projects away
-      .filter(col("value").isNotNull && col("value") > 0 &&
-        !isnan(col("value")) && col("user_id").isNotNull)
+      .filter(graft.operators.Warehouse.validTick)
       .withColumn("vol", coalesce(
         get_json_object(col("props"), "$.k").cast("long"), lit(0L)))
       .withWatermark("ts", watermarkDelay)
@@ -2050,15 +2030,14 @@ object TickStream extends Serializable {
     graft.operators.ErrorLedger.ingestionErrorsOf(events)
 
   /** Streaming per-symbol indicators via flatMapGroupsWithState.
-    * Applies the same tick validation as the batch path
-    * (Warehouse.validTicks) so streaming state never ingests the
-    * invalid prices the batch pipeline rejects.
+    * Filters on the batch path's predicate (Warehouse.validTick) so
+    * streaming state never ingests the invalid prices the batch
+    * pipeline rejects.
     */
   def statefulIndicators(spark: SparkSession, ticks: DataFrame): Dataset[IndicatorRow] = {
     import spark.implicits._
     ticks
-      .filter(col("value").isNotNull && col("value") > 0 && !isnan(col("value"))
-        && col("user_id").isNotNull)
+      .filter(graft.operators.Warehouse.validTick)
       .select("user_id", "event_id", "ts", "value").as[Tick]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(updateIndicators)
@@ -2139,28 +2118,14 @@ object TickStream extends Serializable {
       .dropDuplicatesWithinWatermark("user_id", "ts")
 
   /** Streaming threshold alerts — the per-message alert generation of
-    * analytics_consumer.py:226-268 over the stateful indicator stream.
-    * Thresholds compare the 4-decimal-rounded indicator exactly like
-    * the batch [[graft.operators.Indicators.alerts]] surface, so the
-    * streamed alert rows equal the batch q_alerts rows (spec-proven).
+    * analytics_consumer.py:226-268 over the stateful indicator stream:
+    * the batch rule set ([[graft.operators.Indicators.alertsOf]]) over
+    * the indicators rounded to 4 places as the batch surface rounds
+    * them, so the streamed alert rows equal the batch q_alerts rows
+    * (spec-proven).
     */
-  def alertsStream(spark: SparkSession, ticks: DataFrame): DataFrame = {
-    // Spark's round(): HALF_UP on the shortest decimal representation
-    def r4(x: Double): Double = FastRound.scale(x, 10000.0, 4)
-    import spark.implicits._
-    statefulIndicators(spark, ticks).flatMap { row =>
-      val rsi = row.rsi_14.map(r4)
-      val vol = row.volatility.map(r4)
-      val over = rsi.filter(_ > 70.0).map(v =>
-        ("RSI_OVERBOUGHT", v, 70.0, "HIGH"))
-      val under = rsi.filter(_ < 30.0).map(v =>
-        ("RSI_OVERSOLD", v, 30.0, "HIGH"))
-      val hot = vol.filter(_ > 0.05).map(v =>
-        ("HIGH_VOLATILITY", v, 0.05, "MEDIUM"))
-      (over.toSeq ++ under.toSeq ++ hot.toSeq).map { case (t, v, th, sev) =>
-        (row.user_id, row.ts, row.event_id, t, v, th, sev)
-      }
-    }.toDF("user_id", "ts", "event_id", "alert_type", "indicator_value",
-      "threshold_value", "severity")
-  }
+  def alertsStream(spark: SparkSession, ticks: DataFrame): DataFrame =
+    graft.operators.Indicators.alertsOf(statefulIndicators(spark, ticks).toDF()
+      .withColumn("rsi_14", round(col("rsi_14"), 4))
+      .withColumn("volatility", round(col("volatility"), 4)))
 }

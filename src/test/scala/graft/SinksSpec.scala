@@ -153,13 +153,22 @@ class SinksSpec extends SparkSuite {
     assert(before.sameElements(after), "compaction changed the data")
   }
 
-  test("commitBatchOnce applies a batch once and skips the replay") {
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** One parquet upsert of `batch` under the commit ledger. */
+  private def upsertOnce(batch: org.apache.spark.sql.DataFrame, path: String,
+      ledger: String, batchId: Long): Boolean =
+    Sinks.commitOnce(spark, ledger, batchId) {
+      Sinks.upsertParquet(batch, path, Seq("id"), "v")
+    }
+
+  test("commitOnce applies a parquet upsert once and skips the replay") {
     val dir = java.nio.file.Files.createTempDirectory("once").toString
     val path = dir + "/t"
     val ledger = dir + "/ckpt/graft.commit"
     val batch = Seq((1L, 1L, 10.0)).toDF("id", "v", "price")
-    assert(graft.sources.Sinks.commitBatchOnce(
-      batch, path, ledger, Seq("id"), "v", 0L))
+    assert(upsertOnce(batch, path, ledger, 0L))
     def state() = {
       val files = new java.io.File(path).listFiles()
         .filter(_.getName.endsWith(".parquet"))
@@ -169,35 +178,30 @@ class SinksSpec extends SparkSuite {
     val before = state()
     // crash-replay of the SAME batch id must be a complete no-op
     val differentPayload = Seq((1L, 9L, 99.0)).toDF("id", "v", "price")
-    assert(!graft.sources.Sinks.commitBatchOnce(
-      differentPayload, path, ledger, Seq("id"), "v", 0L))
+    assert(!upsertOnce(differentPayload, path, ledger, 0L))
     assert(state() == before, "replayed batch must not touch the table")
     // the NEXT batch id applies normally
-    assert(graft.sources.Sinks.commitBatchOnce(
-      Seq((2L, 2L, 20.0)).toDF("id", "v", "price"), path, ledger, Seq("id"), "v", 1L))
+    assert(upsertOnce(Seq((2L, 2L, 20.0)).toDF("id", "v", "price"), path, ledger, 1L))
     assert(spark.read.parquet(path).count() == 2)
     // a truncated/corrupt ledger degrades to re-apply, never to a crash
     java.nio.file.Files.writeString(java.nio.file.Paths.get(ledger), "")
-    assert(graft.sources.Sinks.commitBatchOnce(
-      Seq((3L, 3L, 30.0)).toDF("id", "v", "price"), path, ledger, Seq("id"), "v", 0L))
+    assert(upsertOnce(Seq((3L, 3L, 30.0)).toDF("id", "v", "price"), path, ledger, 0L))
     assert(spark.read.parquet(path).count() == 3)
   }
 
-  test("commitBatchOnce handles a URI-style ledger path (Hadoop FS)") {
+  test("commitOnce handles a URI-style ledger path (Hadoop FS)") {
     val dir = java.nio.file.Files.createTempDirectory("once_uri").toString
     val path = dir + "/t"
     val ledgerUri = s"file:$dir/ckpt/graft.commit"
     val batch = Seq((1L, 1L, 10.0)).toDF("id", "v", "price")
-    assert(graft.sources.Sinks.commitBatchOnce(
-      batch, path, ledgerUri, Seq("id"), "v", 0L))
+    assert(upsertOnce(batch, path, ledgerUri, 0L))
     // the ledger landed at the REAL location, not a cwd-mangled one
     assert(new java.io.File(s"$dir/ckpt/graft.commit").exists(),
       "URI ledger path must resolve through the Hadoop filesystem")
-    assert(!graft.sources.Sinks.commitBatchOnce(
-      batch, path, ledgerUri, Seq("id"), "v", 0L), "replay must be skipped")
+    assert(!upsertOnce(batch, path, ledgerUri, 0L), "replay must be skipped")
   }
 
-  test("streamUpsertExactlyOnce lands the stream like streamUpsert") {
+  test("streamUpsertExactlyOnce lands the stream like a batch upsertParquet") {
     val out = java.nio.file.Files.createTempDirectory("stream_once").toString
     val q = graft.sources.Sinks.streamUpsertExactlyOnce(
       TickStream.eventsStream(spark, sfDir),
@@ -207,6 +211,10 @@ class SinksSpec extends SparkSuite {
     val landed = spark.read.parquet(s"$out/table")
     assert(landed.groupBy("user_id", "ts").count().filter("count > 1").count() == 0)
     assert(landed.count() > 0)
+    Sinks.upsertParquet(Tables.events(spark, sfDir), s"$out/batch",
+      Seq("user_id", "ts"), "event_id")
+    assert(rowsOf(landed) == rowsOf(spark.read.parquet(s"$out/batch")),
+      "the stream must land what one batch upsert of the same input does")
     // ledger recorded the last batch, namespaced under the checkpoint
     assert(new java.io.File(s"$out/ckpt/graft.commit").exists())
   }
@@ -262,7 +270,7 @@ class SinksSpec extends SparkSuite {
 
   test("streaming foreachBatch upsert lands deduped ticks") {
     val out = java.nio.file.Files.createTempDirectory("stream_upsert").toString
-    val q = Sinks.streamUpsert(
+    val q = Sinks.streamUpsertExactlyOnce(
       TickStream.eventsStream(spark, sfDir),
       s"$out/table", s"$out/ckpt", Seq("user_id", "ts"), "event_id")
     q.processAllAvailable()
@@ -282,5 +290,81 @@ class SinksSpec extends SparkSuite {
     val parsed = TickStream.parseTicks(json)
     assert(parsed.count() == Tables.events(spark, sfDir)
       .filter("value > 0 AND user_id IS NOT NULL").count())
+  }
+
+  test("the merge ignores input order, in parquet and in JDBC, and on re-apply") {
+    // key 1 has two rows at the same version in the same batch
+    val a = Seq((1L, 1L, 10.0, "a")).toDF("id", "v", "price", "tag")
+    val b = Seq((1L, 1L, 12.0, "b"), (2L, 1L, 20.0, "c")).toDF("id", "v", "price", "tag")
+    val orders = Seq(a.union(b), b.union(a))
+    val dir = java.nio.file.Files.createTempDirectory("merge_order").toString
+    val url = s"jdbc:derby:$dir/db;create=true"
+    def applyAll(batches: Seq[org.apache.spark.sql.DataFrame]): Seq[Seq[String]] =
+      batches.zipWithIndex.flatMap { case (u, i) =>
+        Sinks.upsertParquet(u, s"$dir/t$i", Seq("id"), "v")
+        Sinks.upsertJdbc(u, url, s"t$i", Seq("id"), "v")
+        Seq(rowsOf(spark.read.parquet(s"$dir/t$i").select("id", "v", "price", "tag")),
+          rowsOf(readJdbc(url, s"t$i").select("id", "v", "price", "tag")))
+      }
+    val first = applyAll(orders)
+    assert(first.distinct.size == 1, s"results differ by input order: $first")
+    assert(first.head.size == 2)
+    // each table re-applies the batch in the other union order
+    assert(applyAll(orders.reverse) == first, "re-applying a batch changed a table")
+  }
+
+  test("upsertParquet recovers from each crash point of its swap") {
+    val b1 = Seq((1L, 1L, 10.0), (2L, 1L, 20.0)).toDF("id", "v", "price")
+    val b2 = Seq((2L, 2L, 21.0), (3L, 1L, 30.0)).toDF("id", "v", "price")
+    val stale = Seq((9L, 9L, 99.0)).toDF("id", "v", "price")
+    val dir = java.nio.file.Files.createTempDirectory("swap_crash").toString
+    def upsert(u: org.apache.spark.sql.DataFrame, path: String): Unit =
+      Sinks.upsertParquet(u, path, Seq("id"), "v")
+    def rename(from: String, to: String): Unit =
+      assert(new java.io.File(from).renameTo(new java.io.File(to)))
+    upsert(b1, s"$dir/expected")
+    upsert(b2, s"$dir/expected")
+    val expected = rowsOf(spark.read.parquet(s"$dir/expected"))
+    // each state is laid out over a table holding b1 (the last durable
+    // table); a leftover directory holds rows that must not survive
+    val crashes = Seq[(String, String => Unit)](
+      "staging written, live intact" -> { p =>
+        stale.write.parquet(s"$p.staging") },
+      "live renamed to .old, no live directory" -> { p =>
+        stale.write.parquet(s"$p.staging"); rename(p, s"$p.old") },
+      "staging promoted, .old left behind" -> { p =>
+        stale.write.parquet(s"$p.old") })
+    crashes.zipWithIndex.foreach { case ((state, crash), i) =>
+      val path = s"$dir/t$i"
+      upsert(b1, path)
+      crash(path)
+      upsert(b2, path)
+      assert(rowsOf(spark.read.parquet(path)) == expected, state)
+      assert(!new java.io.File(s"$path.old").exists() &&
+        !new java.io.File(s"$path.staging").exists(), s"$state: a swap dir is left")
+    }
+  }
+
+  test("upsertJdbc creates its target with a unique index on the key columns") {
+    val db = java.nio.file.Files.createTempDirectory("derby_key").toString + "/db"
+    val url = s"jdbc:derby:$db;create=true"
+    Sinks.upsertJdbc(Seq((1L, "x", 1L, 10.0)).toDF("id", "kind", "v", "price"),
+      url, "keyed", Seq("id", "kind"), "v")
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      // Derby backs a UNIQUE constraint on nullable columns with an
+      // index it lists as non-unique (nulls may repeat), so list all
+      val rs = conn.getMetaData.getIndexInfo(null, null, "KEYED", false, false)
+      val indexed = Iterator.continually(rs).takeWhile(_.next())
+        .map(r => r.getString("INDEX_NAME") -> r.getString("COLUMN_NAME")).toSeq
+        .groupBy(_._1).values.map(_.map(_._2).toSet).toSeq
+      assert(indexed.contains(Set("id", "kind")), s"indexes: $indexed")
+      val st = conn.createStatement()
+      try {
+        val dup = intercept[java.sql.SQLException](st.executeUpdate(
+          """INSERT INTO keyed ("id", "kind", "v", "price") VALUES (1, 'x', 2, 11.0)"""))
+        assert(dup.getSQLState == "23505", "a repeated key must violate the constraint")
+      } finally st.close()
+    } finally conn.close()
   }
 }
