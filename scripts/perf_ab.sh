@@ -1,0 +1,114 @@
+#!/usr/bin/env bash
+# Paired A/B of the benchmark: this checkout (the change) against a parent
+# revision, on one workload.
+#
+#   scripts/perf_ab.sh <parent-rev> <workload> <pairs> [first-seed]
+#
+# The parent revision is checked out into a temporary git worktree (under
+# $TMPDIR, default /tmp), removed on exit. Each pair runs
+# `python3 perfbench/run.py --workload <workload> --seed <s> --seconds 10
+# --trace 0` once in each checkout with the same seed; pair i uses seed
+# first-seed + i (default 101) and the side that runs first alternates
+# from pair to pair. Every run's last two stdout lines (run record and
+# result) are kept in a .jsonl file whose path is printed at the end.
+#
+# Output: per end-to-end metric of BENCHMARK.json, each side's median
+# [first–third quartile], the relative change of the medians and the
+# pairs the change won; then each side's range of calib.cpu_ms,
+# calib.mt_ms and host.steal_pct, and its total of failed operations.
+set -euo pipefail
+
+if [ $# -lt 3 ] || [ $# -gt 4 ]; then
+  echo "usage: $0 <parent-rev> <workload> <pairs> [first-seed]" >&2
+  exit 2
+fi
+rev=$1 workload=$2 pairs=$3 seed0=${4:-101}
+
+change=$(git rev-parse --show-toplevel)
+parent=$(mktemp -d "${TMPDIR:-/tmp}/perf_ab.XXXXXX")
+out=$(mktemp "${TMPDIR:-/tmp}/perf_ab.$workload.XXXXXX.jsonl")
+cleanup() { git -C "$change" worktree remove --force "$parent" 2>/dev/null || rm -rf "$parent"; }
+trap cleanup EXIT
+git -C "$change" worktree add --detach --quiet "$parent" "$rev"
+
+run_side() { # side dir seed
+  local lines
+  lines=$(cd "$2" && python3 perfbench/run.py --workload "$workload" \
+    --seed "$3" --seconds 10 --trace 0 2>/dev/null | tail -n 2) || true
+  python3 -c 'import json, sys
+side, seed, text = sys.argv[1], int(sys.argv[2]), sys.argv[3]
+lines = text.splitlines()
+try:
+    record, result = json.loads(lines[0])["record"], json.loads(lines[1])
+except Exception:
+    record, result = {}, {"failed": 1}
+print(json.dumps({"side": side, "seed": seed, "record": record, "result": result}))' \
+    "$1" "$3" "$lines" >> "$out"
+}
+
+for ((i = 0; i < pairs; i++)); do
+  seed=$((seed0 + i))
+  if ((i % 2 == 0)); then
+    run_side parent "$parent" "$seed"; run_side change "$change" "$seed"
+  else
+    run_side change "$change" "$seed"; run_side parent "$parent" "$seed"
+  fi
+  echo "pair $((i + 1))/$pairs done (seed $seed)" >&2
+done
+
+python3 - "$change/BENCHMARK.json" "$out" "$workload" <<'PY'
+import json, sys
+
+bench, path, workload = sys.argv[1], sys.argv[2], sys.argv[3]
+metrics = json.load(open(bench))["end_to_end"]
+runs = [json.loads(l) for l in open(path)]
+by = {"parent": {}, "change": {}}
+for r in runs:
+    by[r["side"]][r["seed"]] = r
+
+def quart(xs):
+    xs = sorted(xs)
+    def q(p):
+        k = (len(xs) - 1) * p
+        lo = int(k)
+        hi = min(lo + 1, len(xs) - 1)
+        return xs[lo] + (xs[hi] - xs[lo]) * (k - lo)
+    return q(0.5), q(0.25), q(0.75)
+
+def e2e(r, name):
+    return (r.get("record") or {}).get("end_to_end", {}).get(name)
+
+def fmt(v):
+    return f"{v:.4g}"
+
+seeds = sorted(set(by["parent"]) & set(by["change"]))
+print(f"{workload}: {len(seeds)} pairs, seeds {seeds[0]}-{seeds[-1]}" if seeds
+      else f"{workload}: no complete pair")
+print()
+print("| metric | parent | change | Δ | won |")
+print("| --- | --- | --- | --- | --- |")
+for m in metrics:
+    name, lower = m["name"], m["better"] == "lower"
+    pairs = [(e2e(by["parent"][s], name), e2e(by["change"][s], name)) for s in seeds]
+    pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
+    if not pairs:
+        print(f"| `{name}` | – | – | | |")
+        continue
+    (pm, p1, p3), (cm, c1, c3) = quart([p for p, _ in pairs]), quart([c for _, c in pairs])
+    won = sum(1 for p, c in pairs if (c < p if lower else c > p))
+    delta = (cm / pm - 1.0) * 100.0 if pm else float("nan")
+    print(f"| `{name}` | {fmt(pm)} [{fmt(p1)}–{fmt(p3)}] | {fmt(cm)} [{fmt(c1)}–{fmt(c3)}] "
+          f"| {delta:+.1f}% (bound {m['bound'] * 100:.0f}%) | {won}/{len(pairs)} |")
+print()
+for side in ("parent", "change"):
+    rs = [by[side][s] for s in seeds]
+    def rng(get):
+        xs = [v for v in (get(r) for r in rs) if v is not None]
+        return f"{min(xs):.4g}–{max(xs):.4g}" if xs else "–"
+    cal = lambda k: (lambda r: ((r.get("record") or {}).get("calibration") or {}).get(k))
+    steal = lambda r: (r.get("record") or {}).get("host_steal_pct")
+    failed = sum(int(r["result"].get("failed", 1)) for r in rs)
+    print(f"{side}: calib.cpu_ms {rng(cal('cpu_ms'))}, calib.mt_ms {rng(cal('mt_ms'))}, "
+          f"host.steal_pct {rng(steal)}, failed {failed}")
+PY
+echo "raw runs: $out"

@@ -105,10 +105,11 @@ object PerfLedger {
   }
 
   /** Durable ledger append: merge new records into the standing
-    * parquet ledger through the crash-safe stage-and-swap upsert
-    * (idempotent on (component_name, ts_ms) — a retried flush cannot
-    * double-count a batch, the same exactly-once discipline the tick
-    * sinks keep).
+    * parquet ledger through the crash-safe parquet upsert, which
+    * appends records whose `ts_ms` lie past the ledger's and merges
+    * any others (idempotent on (component_name, ts_ms) — a retried
+    * flush cannot double-count a batch, the same exactly-once
+    * discipline the tick sinks keep).
     */
   def appendLedger(spark: SparkSession, recs: Seq[PerfRec],
       path: String): Unit =

@@ -1,12 +1,14 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, GraftShim, SaveMode, SparkSession}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 /** Sink-side semantics of the reference pipeline re-expressed for a
   * data-lake target.
@@ -15,9 +17,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * db/current_schema.sql:165-200; predictions upsert,
   * batch_predict_linear_regression.py:60-76). On a cluster the target
   * is a table-format/parquet sink, and the same contract is
-  * merge-by-key-keep-latest, implemented here as a deterministic
-  * read-merge-write ([[upsertParquet]]) and, for the reference's own
-  * target, as a staging table + MERGE ([[upsertJdbc]]); both keep the
+  * merge-by-key-keep-latest. [[upsertParquet]] appends a batch whose
+  * keys provably cannot collide with the table's (the live tick case:
+  * each batch's event ids lie past the table's) and runs a full
+  * read-merge-write only for any other batch. For the reference's own
+  * target, [[upsertJdbc]] runs a staging table + MERGE. Both keep the
   * winner [[mergeByKey]] picks.
   */
 object Sinks {
@@ -52,40 +56,198 @@ object Sinks {
   }
 
   /** Merge `updates` into the parquet table at `path` with
-    * [[mergeByKey]].
+    * [[mergeByKey]], in work that scales with the batch whenever the
+    * batch cannot touch a row already in the table.
+    *
+    * Every call first writes the batch, deduplicated by
+    * [[mergeByKey]], to `<path>.staging`, and observes on that write
+    * each key column's range and null count (no extra job). Then one
+    * of three paths:
+    *  - Append: the staged part files (and their `.crc` sidecars) are
+    *    moved into the live directory. Taken only when this process
+    *    recorded the live table's key range, the live directory holds
+    *    exactly the part files that range covers, no `.old` directory
+    *    exists, the batch has the table's column layout, the table
+    *    stays within [[MaxAppendFiles]] part files, and on at least one
+    *    key column the batch's range and the table's are disjoint. Only
+    *    integral, date and timestamp columns can prove that: a string's
+    *    order depends on its collation (and UTF-8 vs UTF-16), a float's
+    *    on NaN and ±0.0. A column in which both sides hold a null
+    *    cannot prove it either.
+    *  - First write: with no table yet (and no `.old`), the staging
+    *    directory is promoted as the live one.
+    *  - Full merge: anything else (no record in this process, key
+    *    overlap, a foreign file, crash leftovers, the file bound). The
+    *    live table (or `.old`, see below) is read, merged with the
+    *    staged batch, written to `<path>.merged` and swapped in:
+    *    delete(stale `.old`) + rename(live→`.old`) + rename(merged→live)
+    *    + delete(`.old`). Every crash point leaves a directory the next
+    *    call recovers from: live, or `.old` while live is absent.
+    *    Without live, `.old` is the only durable copy and is dropped
+    *    only after the promote. The merged write is observed as well,
+    *    so the next batch can append again; the merge also compacts the
+    *    table back to one write's files.
+    *
+    * The recorded range lives in the Spark driver's memory, keyed by
+    * table path. It is dropped before any step that changes the live
+    * directory and set again only after that step completes, so a
+    * failed step leaves no record and the next call merges.
+    *
+    * Crash and replay: under [[commitOnce]], a crash after some or all
+    * staged files were moved but before the ledger was written replays
+    * the batch. The replay overlaps the table on every key column — in
+    * a fresh process because there is no record, in the same process
+    * because the record was widened over the batch or dropped — so it
+    * takes the full merge, which leaves one row per key.
+    *
+    * Readers: a reader that lists the table during an append may see
+    * part of the batch; one that lists it during a swap may find no
+    * table at all. Nothing stronger is promised.
     */
   def upsertParquet(updates: DataFrame, path: String, keyCols: Seq[String],
       versionCol: String): Unit = {
     val spark = updates.sparkSession
-    // crash recovery: if a previous swap renamed the live table to
-    // .old but died before promoting the staging copy, the .old dir
-    // still holds the last durable state — read from it
     val live = new java.io.File(path)
     val old = new java.io.File(path + ".old")
-    val readPath = if (live.exists()) Some(path)
-      else if (old.exists()) Some(path + ".old")
-      else None
-    val existing = readPath.map(spark.read.parquet(_))
-    val merged = mergeByKey(existing, updates, keyCols, versionCol)
-    // stage-and-swap: writing over the path being read would corrupt
-    // the table if cached partitions were evicted mid-write. Swap via
-    // delete(stale old) + rename(live→old) + rename(staging→live) +
-    // delete(old). Every crash point leaves a dir readPath recovers
-    // from: live, or .old while live is absent. Without live, .old is
-    // the only durable copy and is dropped only after the promote.
-    val staged = path + ".staging"
-    merged.write.mode(SaveMode.Overwrite).parquet(staged)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+    val staging = new java.io.File(path + ".staging")
+    val table = live.getAbsoluteFile.toPath.normalize.toString
+    val batch = mergeByKey(None, updates, keyCols, versionCol)
+    val (rows, batchKeys) = writeObserved(batch, staging, keyCols)
+    val layout = layoutOf(batch)
+    val staged = if (rows == 0) Map.empty[String, Long]
+      else filesOf(staging).filter(_._1.endsWith(".parquet"))
+    Option(tableRanges.remove(table)).filter { t =>
+      live.isDirectory && !old.exists() && filesOf(live) == t.files &&
+        t.layout == layout && t.files.size + staged.size <= MaxAppendFiles &&
+        t.keys.zip(batchKeys).exists {
+          case (Some(a), Some(b)) => disjoint(a, b)
+          case _ => false
+        }
+    } match {
+      case Some(t) =>
+        staged.keys.foreach { name =>
+          move(staging, live, name)
+          if (new java.io.File(staging, s".$name.crc").exists())
+            move(staging, live, s".$name.crc")
+        }
+        rm(staging)
+        val keys = t.keys.zip(batchKeys).map { case (a, b) =>
+          for (x <- a; y <- b) yield widen(x, y)
+        }
+        tableRanges.put(table, TableRange(layout, keys, t.files ++ staged))
+      case None if !live.exists() && !old.exists() =>
+        val files = filesOf(staging)
+        if (!staging.renameTo(live))
+          throw new java.io.IOException(s"could not promote $staging into $path")
+        tableRanges.put(table, TableRange(layout, batchKeys, files))
+      case None =>
+        val existing = spark.read.parquet(if (live.exists()) path else old.getPath)
+        val merged = mergeByKey(Some(existing),
+          spark.read.schema(batch.schema).parquet(staging.getPath),
+          keyCols, versionCol)
+        val mergedDir = new java.io.File(path + ".merged")
+        val (_, keys) = writeObserved(merged, mergedDir, keyCols)
+        val files = filesOf(mergedDir)
+        if (live.exists()) {
+          rm(old) // stale leftover from a completed swap
+          if (!live.renameTo(old))
+            throw new java.io.IOException(s"could not retire $path")
+        }
+        if (!mergedDir.renameTo(live))
+          throw new java.io.IOException(s"could not promote $mergedDir into $path")
+        rm(old)
+        rm(staging)
+        tableRanges.put(table, TableRange(layoutOf(merged), keys, files))
     }
-    if (live.exists()) {
-      rm(old) // stale leftover from a completed swap
-      if (!live.renameTo(old))
-        throw new java.io.IOException(s"could not retire $path")
+  }
+
+  /** One key column's observed values: the range of the non-null ones
+    * as longs (None when there are none) and whether a null occurs. */
+  private case class KeyRange(bounds: Option[(Long, Long)], nulls: Boolean)
+
+  /** What this process knows of a live table it last changed: its
+    * column layout, each key column's range (None for a column whose
+    * type cannot prove two ranges disjoint), and the part files
+    * (name → size) that range covers. */
+  private case class TableRange(layout: Seq[(String, DataType)],
+      keys: Seq[Option[KeyRange]], files: Map[String, Long])
+
+  private val tableRanges =
+    new java.util.concurrent.ConcurrentHashMap[String, TableRange]()
+
+  /** Part files a table may hold before an append is refused and the
+    * full merge compacts it. */
+  private val MaxAppendFiles = 256
+
+  /** An order-preserving long for the key types whose order can prove
+    * two ranges disjoint: integral, date and timestamp. */
+  private def ordinalOf(c: Column, t: DataType): Option[Column] = t match {
+    case ByteType | ShortType | IntegerType | LongType => Some(c.cast(LongType))
+    case DateType => Some(unix_date(c).cast(LongType))
+    case TimestampType => Some(unix_micros(c))
+    case _ => None
+  }
+
+  /** Write `df` over `dir` as parquet, observing its row count and each
+    * key column's [[KeyRange]] on the same job.
+    *
+    * The write is coalesced to one part file per AQE advisory partition
+    * size (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) of the
+    * plan's size estimate. AQE coalesces only the partitions of a
+    * shuffle, and a stateful stream's output is already partitioned by
+    * key, so the dedup adds none: without this, a live batch of 50 rows
+    * lands as one file per state partition.
+    */
+  private def writeObserved(df: DataFrame, dir: java.io.File,
+      keyCols: Seq[String]): (Long, Seq[Option[KeyRange]]) = {
+    val target = JavaUtils.byteStringAsBytes(df.sparkSession.conf.get(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")).max(1L)
+    val files = ((df.queryExecution.analyzed.stats.sizeInBytes + target - 1) / target)
+      .max(1).min(Int.MaxValue).toInt
+    val ordinals = keyCols.map(k => ordinalOf(col(k), df.select(k).schema.head.dataType))
+    val ranges = ordinals.zipWithIndex.collect { case (Some(o), i) =>
+      Seq(min(o).as(s"lo$i"), max(o).as(s"hi$i"),
+        count_if(col(keyCols(i)).isNull).as(s"nulls$i"))
+    }.flatten
+    val obs = Observation()
+    df.coalesce(files).observe(obs, count(lit(1)).as("rows"), ranges: _*)
+      .write.mode(SaveMode.Overwrite).parquet(dir.getPath)
+    val m = obs.get
+    val keys = ordinals.indices.map { i =>
+      if (ordinals(i).isEmpty) None
+      else Some(KeyRange(
+        Option(m(s"lo$i")).map(lo => (lo.asInstanceOf[Long], m(s"hi$i").asInstanceOf[Long])),
+        m(s"nulls$i").asInstanceOf[Long] > 0))
     }
-    if (!new java.io.File(staged).renameTo(live))
-      throw new java.io.IOException(s"could not promote $staged into $path")
-    rm(old)
+    (m("rows").asInstanceOf[Long], keys)
+  }
+
+  private def disjoint(a: KeyRange, b: KeyRange): Boolean =
+    !(a.nulls && b.nulls) && ((a.bounds, b.bounds) match {
+      case (Some((aLo, aHi)), Some((bLo, bHi))) => aHi < bLo || bHi < aLo
+      case _ => true
+    })
+
+  private def widen(a: KeyRange, b: KeyRange): KeyRange =
+    KeyRange((a.bounds ++ b.bounds).reduceOption { (x, y) =>
+      (math.min(x._1, y._1), math.max(x._2, y._2))
+    }, a.nulls || b.nulls)
+
+  private def layoutOf(df: DataFrame): Seq[(String, DataType)] =
+    df.schema.map(f => f.name -> f.dataType)
+
+  /** The entries a parquet reader of `dir` lists, name → size. */
+  private def filesOf(dir: java.io.File): Map[String, Long] =
+    Option(dir.listFiles()).toSeq.flatten
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .map(f => f.getName -> f.length).toMap
+
+  private def move(from: java.io.File, to: java.io.File, name: String): Unit =
+    java.nio.file.Files.move(new java.io.File(from, name).toPath,
+      new java.io.File(to, name).toPath): Unit
+
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
   }
 
   /** Partition-aware upsert: merge `updates` into a table
@@ -398,8 +560,12 @@ object Sinks {
     * against embedded Derby in SinksSpec (the in-container stand-in);
     * against PostgreSQL the same staging+MERGE shape applies verbatim.
     * A target this function creates gets a UNIQUE constraint on
-    * `keyCols` (the index `ON CONFLICT` needs); a pre-existing target
-    * is used as it is.
+    * `keyCols` (the index `ON CONFLICT` needs). On its first use in
+    * this process, a pre-existing target is checked through
+    * `DatabaseMetaData.getIndexInfo`: without an index on exactly the
+    * key columns it gets the same constraint, so no MERGE runs as a
+    * scan of the whole target. That `ALTER TABLE` fails, and with it
+    * this call, if the target already holds duplicate keys.
     *
     * String columns are pinned to VARCHAR (Spark's Derby default is
     * CLOB, which cannot be compared or indexed in a MERGE ON clause).
@@ -452,13 +618,17 @@ object Sinks {
         } catch { case _: java.sql.SQLException => false }
       val st = conn.createStatement()
       try {
-        if (!exists) {
+        val target = (url, table, keyCols)
+        if (!exists)
           st.executeUpdate(
             s"CREATE TABLE $table AS SELECT * FROM $staging WITH NO DATA")
+        if (!exists || !keyedTargets.contains(target)) {
           // the key constraint's index makes each MERGE O(batch)
           // instead of a scan of the whole target
-          st.executeUpdate(
-            s"ALTER TABLE $table ADD UNIQUE (${keyCols.map(qid).mkString(", ")})")
+          if (!exists || !hasKeyIndex(conn, table, keyCols))
+            st.executeUpdate(
+              s"ALTER TABLE $table ADD UNIQUE (${keyCols.map(qid).mkString(", ")})")
+          keyedTargets.add(target)
         }
         st.executeUpdate(
           s"""MERGE INTO $table t USING $staging s ON $onClause
@@ -474,6 +644,37 @@ object Sinks {
         st.close()
       }
     } finally conn.close()
+  }
+
+  /** The (url, table, key columns) targets known in this process to
+    * hold an index on exactly their key columns. */
+  private val keyedTargets =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String, Seq[String])]()
+
+  /** Does `table` have an index on exactly the columns `keyCols`?
+    * `table` is folded to the engine's identifier case (Derby upper,
+    * PostgreSQL lower), as its unquoted use in SQL is; an unqualified
+    * name is looked up in the connection's current schema. Any index
+    * counts, unique or not: Derby lists the index behind a UNIQUE
+    * constraint on nullable columns as non-unique.
+    */
+  private def hasKeyIndex(conn: java.sql.Connection, table: String,
+      keyCols: Seq[String]): Boolean = {
+    val md = conn.getMetaData
+    def fold(id: String): String =
+      if (md.storesUpperCaseIdentifiers) id.toUpperCase(java.util.Locale.ROOT)
+      else if (md.storesLowerCaseIdentifiers) id.toLowerCase(java.util.Locale.ROOT)
+      else id
+    val (schema, name) = table.split('.') match {
+      case Array(s, t) => (fold(s), fold(t))
+      case _ => (conn.getSchema, fold(table))
+    }
+    val rs = md.getIndexInfo(null, schema, name, false, false)
+    try {
+      Iterator.continually(rs).takeWhile(_.next())
+        .flatMap(r => Option(r.getString("COLUMN_NAME")).map(r.getString("INDEX_NAME") -> _))
+        .toSeq.groupBy(_._1).values.exists(_.map(_._2).toSet == keyCols.toSet)
+    } finally rs.close()
   }
 
   /** Streaming JDBC upsert with the per-batch commit ledger — the

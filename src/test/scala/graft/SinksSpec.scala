@@ -367,4 +367,251 @@ class SinksSpec extends SparkSuite {
       } finally st.close()
     } finally conn.close()
   }
+
+  // ------------------------------------------- upsertParquet's append path
+
+  private type Frame = org.apache.spark.sql.DataFrame
+
+  private def idRows(rows: (Long, Long, Double)*): Frame =
+    rows.toDF("id", "v", "price")
+
+  private def upsertById(batch: Frame, path: String): Unit =
+    Sinks.upsertParquet(batch, path, Seq("id"), "v")
+
+  /** The table one full-merge application of `batch` onto `prior`
+    * leaves, as sorted row strings. */
+  private def mergedOnce(prior: Frame, batch: Frame): Seq[String] =
+    rowsOf(Sinks.mergeByKey(Some(prior), batch, Seq("id"), "v"))
+
+  /** Assert that the table at `path` equals `expected` and holds one
+    * row per key. */
+  private def assertTable(path: String, expected: Seq[String], clue: String): Unit = {
+    val t = spark.read.parquet(path).select("id", "v", "price")
+    assert(rowsOf(t) == expected, clue)
+    assert(t.groupBy("id").count().filter("count > 1").count() == 0,
+      s"$clue: a key is held twice")
+  }
+
+  /** The data files of a table directory, name → mtime. */
+  private def partFiles(path: String): Map[String, Long] =
+    new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.lastModified()).toMap
+
+  private def tempPath(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+
+  private val b1 = Seq((1L, 1L, 10.0), (2L, 1L, 20.0))
+  private val b2 = Seq((3L, 1L, 30.0), (4L, 1L, 40.0), (5L, 1L, 50.0), (6L, 1L, 60.0))
+
+  test("upsertParquet appends a key-disjoint batch, keeping every part file") {
+    val path = tempPath("append_keep")
+    upsertById(idRows(b1: _*), path)
+    val before = partFiles(path)
+    upsertById(idRows(b2: _*), path)
+    val after = partFiles(path)
+    assert(before.forall { case (f, t) => after.get(f).contains(t) },
+      "an existing part file was rewritten")
+    assert(after.size > before.size, "the batch's files were not moved in")
+    assertTable(path, mergedOnce(idRows(b1: _*), idRows(b2: _*)), "append")
+    assert(!new java.io.File(s"$path.staging").exists(), "staging left behind")
+  }
+
+  test("a streamed parquet table grows by one part file per small key-disjoint microbatch") {
+    // four single-file inputs, key-disjoint, arriving in mtime order
+    val input = java.nio.file.Files.createTempDirectory("stream_files_in")
+    val batches = (0 until 4).map(i =>
+      idRows((1 to 200).map(k => (i * 1000L + k, 1L, k.toDouble)): _*))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val dir = tempPath(s"stream_files_b$i")
+      b.coalesce(1).write.parquet(dir)
+      val dst = input.resolve(f"part$i%02d.parquet")
+      java.nio.file.Files.copy(java.nio.file.Paths.get(dir, partFiles(dir).keys.head), dst)
+      assert(dst.toFile.setLastModified(1700000000000L + i * 60000L))
+    }
+    val out = java.nio.file.Files.createTempDirectory("stream_files").toString
+    // through a stateful operator, whose output stays partitioned by
+    // key into the state partitions: the dedup then needs no shuffle
+    // that AQE could coalesce, and each batch would land as one file
+    // per state partition
+    val q = Sinks.streamUpsertExactlyOnce(
+      spark.readStream.schema(batches.head.schema)
+        .option("maxFilesPerTrigger", 1).parquet(input.toString)
+        .dropDuplicates("id"),
+      s"$out/table", s"$out/ckpt", Seq("id"), "v")
+    q.processAllAvailable()
+    q.stop()
+    assert(partFiles(s"$out/table").size == batches.size,
+      partFiles(s"$out/table").keys)
+    assertTable(s"$out/table", rowsOf(batches.reduce(_ union _)), "streamed")
+  }
+
+  test("upsertParquet merges a String- or Double-keyed batch whatever its range") {
+    val keyed = Seq(
+      "string" -> (Seq(("a", 1L, 1.0), ("b", 1L, 2.0)).toDF("id", "v", "price"),
+        Seq(("y", 1L, 3.0), ("z", 1L, 4.0)).toDF("id", "v", "price")),
+      "double" -> (Seq((1.0, 1L, 1.0), (2.0, 1L, 2.0)).toDF("id", "v", "price"),
+        Seq((8.0, 1L, 3.0), (9.0, 1L, 4.0)).toDF("id", "v", "price")))
+    keyed.foreach { case (kind, (first, second)) =>
+      val path = tempPath(s"merge_$kind")
+      Sinks.upsertParquet(first, path, Seq("id"), "v")
+      val before = partFiles(path)
+      Sinks.upsertParquet(second, path, Seq("id"), "v")
+      assert(partFiles(path).keySet.intersect(before.keySet).isEmpty,
+        s"$kind keys: the batch was appended, not merged")
+      assert(rowsOf(spark.read.parquet(path)) == rowsOf(first.union(second)), kind)
+    }
+  }
+
+  test("upsertParquet merges when both sides hold a null in every key column") {
+    val path = tempPath("null_keys")
+    def frame(rows: (Option[Long], Long, Double)*): Frame = rows.toDF("id", "v", "price")
+    val first = frame((None, 1L, 1.0), (Some(1L), 1L, 10.0))
+    val second = frame((None, 2L, 2.0), (Some(5L), 1L, 50.0))
+    Sinks.upsertParquet(first, path, Seq("id"), "v")
+    Sinks.upsertParquet(second, path, Seq("id"), "v")
+    assert(rowsOf(spark.read.parquet(path)) ==
+      rowsOf(Sinks.mergeByKey(Some(first), second, Seq("id"), "v")))
+    assert(spark.read.parquet(path).filter("id IS NULL").count() == 1,
+      "the null key is held twice")
+  }
+
+  test("upsertParquet compacts the table when an append would cross the file bound") {
+    // one file per shuffle partition: no coalescing by size
+    val conf = Seq("spark.sql.shuffle.partitions" -> "64",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1b")
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val path = tempPath("file_bound")
+      val batches = (0 until 5).map(i =>
+        idRows((1 to 400).map(k => (i * 1000L + k, 1L, k.toDouble)): _*))
+      val counts = batches.map { b => upsertById(b, path); partFiles(path).size }
+      val perWrite = counts.head
+      assert(perWrite > 32, s"a write should spread over many files: $counts")
+      assert(counts.sliding(2).forall(p => p(1) > p(0) || p(1) <= perWrite),
+        s"file counts: $counts")
+      val crossed = counts.indexWhere(_ <= perWrite, 1)
+      assert(crossed > 1 && counts(crossed - 1) + perWrite > 256,
+        s"the merge ran before the bound was reached: $counts")
+      // a full merge of the same rows into a fresh table writes this many
+      val fresh = tempPath("file_bound_fresh")
+      upsertById(batches.take(crossed + 1).reduce(_ union _), fresh)
+      assert(counts(crossed) == partFiles(fresh).size, s"file counts: $counts")
+      assertTable(path, rowsOf(batches.reduce(_ union _)), "after compaction")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("upsertParquet re-applies an appended batch as one merge, in the same process") {
+    val path = tempPath("replay_same")
+    upsertById(idRows(b1: _*), path)
+    upsertById(idRows(b2: _*), path) // appended; the ledger write is lost
+    upsertById(idRows(b2: _*), path)
+    assertTable(path, mergedOnce(idRows(b1: _*), idRows(b2: _*)), "replay")
+  }
+
+  test("upsertParquet re-applies an appended batch as one merge, in a fresh process") {
+    val path = tempPath("replay_fresh")
+    upsertById(idRows(b1: _*), path)
+    upsertById(idRows(b2: _*), path)
+    // a copy of the directory is a table no process has a record of
+    val copy = tempPath("replay_fresh_copy")
+    val src = java.nio.file.Paths.get(path)
+    java.nio.file.Files.walk(src).forEach { f =>
+      java.nio.file.Files.copy(f, java.nio.file.Paths.get(copy).resolve(src.relativize(f)),
+        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+    }
+    upsertById(idRows(b2: _*), copy)
+    assertTable(copy, mergedOnce(idRows(b1: _*), idRows(b2: _*)), "fresh replay")
+  }
+
+  test("upsertParquet re-applies a batch whose files were half moved in") {
+    val path = tempPath("replay_half")
+    upsertById(idRows(b1: _*), path)
+    val written = tempPath("replay_half_batch")
+    idRows(b2: _*).repartition(4).write.parquet(written)
+    val files = partFiles(written).keys.toSeq.sorted
+    assert(files.size > 1, "the batch should span several files")
+    files.take(files.size / 2).foreach { f =>
+      java.nio.file.Files.move(java.nio.file.Paths.get(written, f),
+        java.nio.file.Paths.get(path, f))
+    }
+    upsertById(idRows(b2: _*), path)
+    assertTable(path, mergedOnce(idRows(b1: _*), idRows(b2: _*)), "half moved")
+  }
+
+  test("upsertParquet merges after a foreign part file appears in the table") {
+    val path = tempPath("foreign")
+    upsertById(idRows(b1: _*), path)
+    val foreign = idRows((7L, 1L, 70.0))
+    val written = tempPath("foreign_file")
+    foreign.coalesce(1).write.parquet(written)
+    partFiles(written).keys.foreach { f =>
+      java.nio.file.Files.move(java.nio.file.Paths.get(written, f),
+        java.nio.file.Paths.get(path, s"foreign-$f"))
+    }
+    val next = idRows((7L, 2L, 71.0))
+    upsertById(next, path)
+    assertTable(path, mergedOnce(idRows(b1: _*).union(foreign), next), "foreign file")
+  }
+
+  test("upsertParquet keeps the latest version of a key updated after several appends") {
+    val path = tempPath("update_after_appends")
+    val batches = Seq(b1, b2, Seq((10L, 1L, 100.0)), Seq((11L, 1L, 110.0)))
+      .map(b => idRows(b: _*))
+    batches.foreach(upsertById(_, path))
+    val update = idRows((1L, 2L, 11.0), (10L, 0L, 0.0))
+    upsertById(update, path)
+    assertTable(path, mergedOnce(batches.reduce(_ union _), update), "update")
+    val r = spark.read.parquet(path).filter("id IN (1, 10)").orderBy("id").collect()
+    assert(r(0).getAs[Double]("price") == 11.0, "the newer version must win")
+    assert(r(1).getAs[Double]("price") == 100.0, "an older version must lose")
+  }
+
+  // --------------------------------------- upsertJdbc on a pre-existing target
+
+  private def keyIndexes(url: String, table: String): Seq[Set[String]] = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = conn.getMetaData.getIndexInfo(null, null, table, false, false)
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => r.getString("INDEX_NAME") -> r.getString("COLUMN_NAME")).toSeq
+        .groupBy(_._1).values.map(_.map(_._2).toSet).toSeq
+    } finally conn.close()
+  }
+
+  private def ddl(url: String, sql: String*): Unit = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try sql.foreach(st.executeUpdate) finally st.close()
+    } finally conn.close()
+  }
+
+  test("upsertJdbc adds the key index to a target pre-created without one") {
+    val db = java.nio.file.Files.createTempDirectory("derby_pre").toString + "/db"
+    val url = s"jdbc:derby:$db;create=true"
+    ddl(url, """CREATE TABLE pre ("id" BIGINT, "kind" VARCHAR(16), "v" BIGINT, "price" DOUBLE)""",
+      """INSERT INTO pre VALUES (1, 'x', 1, 10.0)""")
+    assert(!keyIndexes(url, "PRE").contains(Set("id", "kind")))
+    val batch = Seq((1L, "x", 2L, 11.0), (2L, "y", 1L, 20.0)).toDF("id", "kind", "v", "price")
+    Sinks.upsertJdbc(batch, url, "pre", Seq("id", "kind"), "v")
+    assert(keyIndexes(url, "PRE").contains(Set("id", "kind")), "no key index was added")
+    Sinks.upsertJdbc(batch, url, "pre", Seq("id", "kind"), "v")
+    assert(rowsOf(readJdbc(url, "pre")) == Seq("[1,x,2,11.0]", "[2,y,1,20.0]"))
+  }
+
+  test("upsertJdbc fails on a pre-existing target that holds duplicate keys") {
+    val db = java.nio.file.Files.createTempDirectory("derby_dup").toString + "/db"
+    val url = s"jdbc:derby:$db;create=true"
+    ddl(url, """CREATE TABLE dup ("id" BIGINT, "v" BIGINT, "price" DOUBLE)""",
+      """INSERT INTO dup VALUES (1, 1, 10.0)""", """INSERT INTO dup VALUES (1, 2, 12.0)""")
+    val e = intercept[java.sql.SQLException](
+      Sinks.upsertJdbc(idRows((2L, 1L, 20.0)), url, "dup", Seq("id"), "v"))
+    assert(e.getSQLState == "23505", e.getMessage)
+    assert(readJdbc(url, "dup").count() == 2, "a failed upsert must not write")
+  }
 }
