@@ -4,18 +4,26 @@
 #
 #   scripts/perf_ab.sh <parent-rev> <workload> <pairs> [first-seed]
 #
-# The parent revision is checked out into a temporary git worktree (under
-# $TMPDIR, default /tmp), removed on exit. Each pair runs
-# `python3 perfbench/run.py --workload <workload> --seed <s> --seconds 10
-# --trace 0` once in each checkout with the same seed; pair i uses seed
-# first-seed + i (default 101) and the side that runs first alternates
-# from pair to pair. Every run's last two stdout lines (run record and
-# result) are kept in a .jsonl file whose path is printed at the end.
+# The parent revision's files are exported with `git archive` into a
+# temporary directory (under $TMPDIR, default /tmp), removed on exit.
+# Each pair runs `python3 perfbench/run.py --workload <workload> --seed
+# <s> --seconds 10 --trace 0` once in each checkout with the same seed;
+# pair i uses seed first-seed + i (default 101) and the side that runs
+# first alternates from pair to pair. Each run is one line of a .jsonl
+# file whose path is printed at the end: side, seed, run.py's exit code,
+# the last 20 lines of its stderr, its run record and its result line.
+#
+# A run is malformed when its last stdout line is not a strict-JSON
+# object (NaN and Infinity rejected) holding `correct`, `attempted`,
+# `failed` and `metrics`. A malformed run is never counted as failed
+# operations: it is reported on its own line per side, with seed, exit
+# code and reason, and its pair is left out of the metric table.
 #
 # Output: per end-to-end metric of BENCHMARK.json, each side's median
 # [first–third quartile], the relative change of the medians and the
 # pairs the change won; then each side's range of calib.cpu_ms,
-# calib.mt_ms and host.steal_pct, and its total of failed operations.
+# calib.mt_ms and host.steal_pct and its total of failed operations;
+# then each side's malformed runs.
 set -euo pipefail
 
 if [ $# -lt 3 ] || [ $# -gt 4 ]; then
@@ -27,23 +35,49 @@ rev=$1 workload=$2 pairs=$3 seed0=${4:-101}
 change=$(git rev-parse --show-toplevel)
 parent=$(mktemp -d "${TMPDIR:-/tmp}/perf_ab.XXXXXX")
 out=$(mktemp "${TMPDIR:-/tmp}/perf_ab.$workload.XXXXXX.jsonl")
-cleanup() { git -C "$change" worktree remove --force "$parent" 2>/dev/null || rm -rf "$parent"; }
+cleanup() { rm -rf "$parent"; }
 trap cleanup EXIT
-git -C "$change" worktree add --detach --quiet "$parent" "$rev"
+git -C "$change" archive "$rev" | tar -x -C "$parent"
 
 run_side() { # side dir seed
-  local lines
-  lines=$(cd "$2" && python3 perfbench/run.py --workload "$workload" \
-    --seed "$3" --seconds 10 --trace 0 2>/dev/null | tail -n 2) || true
-  python3 -c 'import json, sys
-side, seed, text = sys.argv[1], int(sys.argv[2]), sys.argv[3]
-lines = text.splitlines()
+  local so se rc=0
+  so=$(mktemp "${TMPDIR:-/tmp}/perf_ab.stdout.XXXXXX")
+  se=$(mktemp "${TMPDIR:-/tmp}/perf_ab.stderr.XXXXXX")
+  (cd "$2" && python3 perfbench/run.py --workload "$workload" \
+    --seed "$3" --seconds 10 --trace 0 >"$so" 2>"$se") || rc=$?
+  python3 - "$1" "$3" "$rc" "$so" "$se" >> "$out" <<'PY'
+import json, sys
+
+side, seed, rc, so, se = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), sys.argv[4], sys.argv[5]
+lines = open(so, errors="replace").read().splitlines()
+run = {"side": side, "seed": seed, "exit_code": rc,
+       "stderr_tail": open(se, errors="replace").read().splitlines()[-20:],
+       "record": {}, "result": None, "malformed": None}
+
+def reject(name):
+    raise ValueError(f"non-finite number {name}")
+
 try:
-    record, result = json.loads(lines[0])["record"], json.loads(lines[1])
+    if not lines:
+        raise ValueError("no stdout")
+    result = json.loads(lines[-1], parse_constant=reject)
+    if not isinstance(result, dict):
+        raise ValueError("last line is not a JSON object")
+    missing = [k for k in ("correct", "attempted", "failed", "metrics") if k not in result]
+    if missing:
+        raise ValueError(f"result line lacks {missing}")
+    if type(result["failed"]) is not int or not isinstance(result["metrics"], dict):
+        raise ValueError("result line has a non-integer failed or non-object metrics")
+    run["result"] = result
+except ValueError as e:
+    run["malformed"] = f"{e}; last line: {lines[-1][:200] if lines else ''}"
+try:
+    run["record"] = json.loads(lines[-2])["record"]
 except Exception:
-    record, result = {}, {"failed": 1}
-print(json.dumps({"side": side, "seed": seed, "record": record, "result": result}))' \
-    "$1" "$3" "$lines" >> "$out"
+    pass
+print(json.dumps(run))
+PY
+  rm -f "$so" "$se"
 }
 
 for ((i = 0; i < pairs; i++)); do
@@ -81,8 +115,10 @@ def e2e(r, name):
 def fmt(v):
     return f"{v:.4g}"
 
-seeds = sorted(set(by["parent"]) & set(by["change"]))
-print(f"{workload}: {len(seeds)} pairs, seeds {seeds[0]}-{seeds[-1]}" if seeds
+ok = lambda r: r["malformed"] is None
+seeds = sorted(s for s in set(by["parent"]) & set(by["change"])
+               if ok(by["parent"][s]) and ok(by["change"][s]))
+print(f"{workload}: {len(seeds)} pairs, seeds {', '.join(map(str, seeds))}" if seeds
       else f"{workload}: no complete pair")
 print()
 print("| metric | parent | change | Δ | won |")
@@ -107,8 +143,12 @@ for side in ("parent", "change"):
         return f"{min(xs):.4g}–{max(xs):.4g}" if xs else "–"
     cal = lambda k: (lambda r: ((r.get("record") or {}).get("calibration") or {}).get(k))
     steal = lambda r: (r.get("record") or {}).get("host_steal_pct")
-    failed = sum(int(r["result"].get("failed", 1)) for r in rs)
+    failed = sum(r["result"]["failed"] for r in rs)
     print(f"{side}: calib.cpu_ms {rng(cal('cpu_ms'))}, calib.mt_ms {rng(cal('mt_ms'))}, "
           f"host.steal_pct {rng(steal)}, failed {failed}")
+for side in ("parent", "change"):
+    bad = [r for _, r in sorted(by[side].items()) if not ok(r)]
+    print(f"{side}: malformed {len(bad)}" + "".join(
+        f"; seed {r['seed']} (exit {r['exit_code']}): {r['malformed']}" for r in bad))
 PY
 echo "raw runs: $out"

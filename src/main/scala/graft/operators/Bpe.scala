@@ -156,8 +156,8 @@ object Bpe {
 
   /** The encode leg alone over an arbitrary documents frame with an
     * already-learned merge table — shared by [[tokenizeDocs]] and
-    * the streaming dual
-    * [[graft.streaming.TickStream.bpeDocsStream]] (the standing
+    * the streaming dual (this over
+    * [[graft.streaming.DocStream.docsStream]]; the standing
     * merges are the batch training artifact; refitting is the batch
     * job, exactly the curriculumScoreStream model contract).
     */

@@ -2158,8 +2158,8 @@ object Curation {
   /** Score documents against a trained hashed model: per-row
     * Σ model[hash(feature)] over the same unigram∪bigram features the
     * model counted — a pure projection (the model rides in the plan
-    * as a literal), so it runs unchanged inside the streaming tier
-    * ([[graft.streaming.TickStream.importanceDocsStream]]). The fold
+    * as a literal), so it runs unchanged on a document stream
+    * ([[graft.streaming.DocStream.docsStream]]). The fold
     * is left-to-right per document on every engine path, so batch and
     * streamed scores are bit-identical. `n_tokens` stays the UNIGRAM
     * count (the resampling budget is measured in tokens, not
@@ -2401,7 +2401,7 @@ object Curation {
   /** The FULL Gopher curation chain — repetition rules ∧ the table-A1
     * quality rules — fused into one narrow per-row projection (zero
     * shuffle, zero state): the form that runs unchanged inside the
-    * streaming tier ([[graft.streaming.TickStream.fullQualityDocsStream]]).
+    * streaming tier (over [[graft.streaming.DocStream.docsStream]]).
     * Emits both stage verdicts plus the conjunction, so a pipeline can
     * attribute every drop to its rule family.
     *
@@ -2538,7 +2538,7 @@ object Curation {
     *
     * Scale shape: one narrow per-row projection — zero shuffle, zero
     * state, streaming-legal like the Gopher chain
-    * ([[graft.streaming.TickStream]] serves it stateless).
+    * ([[c4FiltersDocs]] over [[graft.streaming.DocStream.docsStream]]).
     */
   def c4Filters(spark: SparkSession, dir: String): DataFrame =
     c4FiltersDocs(fanDocs(Tables.documents(spark, dir)))
@@ -2627,7 +2627,7 @@ object Curation {
   /** (doc_id, pos, line, rn) with rn = 1 on each line's first corpus
     * occurrence — the shared marking pass of [[lineDedupDocs]], also
     * the ground truth the streaming dual
-    * ([[graft.streaming.TickStream.lineDedupDocsStream]]) is spec'd
+    * ([[graft.streaming.DocStream.lineDedupDocsStream]]) is spec'd
     * against.
     */
   private[graft] def lineMarkedDocs(docs: DataFrame): DataFrame = {
@@ -3798,7 +3798,7 @@ object Curation {
     * vocabulary is therefore the TOP-[[CurriculumVocabCap]] types by
     * (count desc, word) — a distributed TakeOrdered, no single-task
     * window — and out-of-vocabulary tokens score with count 1, the
-    * max-surprisal ceiling [[graft.streaming.TickStream
+    * max-surprisal ceiling [[graft.streaming.DocStream
     * .curriculumScoreStream]] already applies to unseen words (rare
     * types are exactly the ones whose true count is near 1, so the
     * approximation error vanishes where the cap bites). The token
@@ -4253,8 +4253,8 @@ object Curation {
     compressRatioDocs(Tables.documents(spark, dir))
 
   /** The per-row projection itself — stateless and shuffle-free, so
-    * [[graft.streaming.TickStream.compressDocsStream]] reuses it
-    * verbatim inside a streaming pipeline (the gopherNarrowDocs
+    * it runs verbatim over [[graft.streaming.DocStream.docsStream]]
+    * inside a streaming pipeline (the gopherNarrowDocs
     * composition discipline).
     */
   private[graft] def compressRatioDocs(docs: DataFrame): DataFrame =

@@ -1525,7 +1525,7 @@ object Dedup {
     * [[IndexManifest]] discipline every other standing artifact has
     * (family guard, per-part schema hash): this is the durability leg
     * of the maintainStream contract for
-    * [[graft.streaming.TickStream.canonicalMaintainStream]] — persist
+    * [[graft.streaming.DocStream.canonicalMaintainStream]] — persist
     * each published generation, restart with the loaded pair as
     * `initial`.
     */
@@ -2272,7 +2272,7 @@ object Dedup {
 
   /** Build the standing tier's fingerprint Bloom filter — the
     * compaction-time artifact both the batch gate and the streaming
-    * gate ([[graft.streaming.TickStream.dedupDocsStreamGated]]) probe.
+    * gate ([[graft.streaming.DocStream.dedupDocsStreamGated]]) probe.
     */
   private[graft] def fingerprintBloom(standing: DataFrame,
       fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter = {

@@ -1260,7 +1260,7 @@ object Forecast {
     * the serve path never loses a model to an in-flight refresh —
     * callers swap the returned registry in only when it is complete,
     * serving from the previous one meanwhile (same publish-then-swap
-    * contract as [[graft.streaming.TickStream.hnswMaintainStream]]).
+    * contract as [[graft.streaming.DocStream.hnswMaintainStream]]).
     */
   def refreshModelRegistry(spark: SparkSession, dir: String,
       registry: DataFrame, minNewObs: Long = 10,

@@ -433,7 +433,7 @@ object Multimodal {
     }: _*)).as("chunk_key"))
 
   /** Build the standing tier's chunk-key Bloom — the compaction
-    * artifact [[graft.streaming.TickStream.modalNearDupDocsStream]]
+    * artifact [[graft.streaming.DocStream.modalNearDupDocsStream]]
     * probes (the [[graft.operators.Dedup.bandBloom]] idiom for the
     * perceptual family). One corpus pass; the sketch holds 4 keys per
     * standing payload at `fpp` per probe.

@@ -595,9 +595,6 @@ object Sinks {
       .map(f => s"${f.name} VARCHAR(32672)") // Derby's max VARCHAR
     val writer = deduped.write.mode(SaveMode.Overwrite)
       .format("jdbc").option("url", url).option("dbtable", staging)
-    (if (stringCols.isEmpty) writer
-     else writer.option("createTableColumnTypes", stringCols.mkString(", ")))
-      .save()
     val cols = deduped.schema.fieldNames
     val colList = cols.map(qid).mkString(", ")
     val onClause = keyCols.map(k => s"t.${qid(k)} = s.${qid(k)}").mkString(" AND ")
@@ -606,18 +603,23 @@ object Sinks {
     val insertVals = cols.map(c => s"s.${qid(c)}").mkString(", ")
     val conn = java.sql.DriverManager.getConnection(url)
     try {
-      // probe existence with a no-row SELECT rather than metadata
-      // getTables: the JDBC pattern API treats '_' as a wildcard and
-      // is case-folding-sensitive per engine (Derby stores uppercase,
-      // PostgreSQL lowercase) — a direct query is exact everywhere
-      val exists =
-        try {
-          val st0 = conn.createStatement()
-          try { st0.executeQuery(s"SELECT 1 FROM $table WHERE 1 = 0").close(); true }
-          finally st0.close()
-        } catch { case _: java.sql.SQLException => false }
       val st = conn.createStatement()
       try {
+        // inside the try: Spark creates the staging table before it
+        // inserts, so a failed insert leaves a table to drop
+        (if (stringCols.isEmpty) writer
+         else writer.option("createTableColumnTypes", stringCols.mkString(", ")))
+          .save()
+        // probe existence with a no-row SELECT rather than metadata
+        // getTables: the JDBC pattern API treats '_' as a wildcard and
+        // is case-folding-sensitive per engine (Derby stores uppercase,
+        // PostgreSQL lowercase) — a direct query is exact everywhere
+        val exists =
+          try {
+            val st0 = conn.createStatement()
+            try { st0.executeQuery(s"SELECT 1 FROM $table WHERE 1 = 0").close(); true }
+            finally st0.close()
+          } catch { case _: java.sql.SQLException => false }
         val target = (url, table, keyCols)
         if (!exists)
           st.executeUpdate(
@@ -637,8 +639,9 @@ object Sinks {
              |WHEN NOT MATCHED THEN INSERT ($colList) VALUES ($insertVals)
              |""".stripMargin)
       } finally {
-        // always drop the staging copy — even on a failed MERGE —
-        // so aborted invocations don't leak uniquely-named tables
+        // always drop the staging copy — even on a failed staging
+        // write or MERGE — so aborted invocations don't leak
+        // uniquely-named tables
         try st.executeUpdate(s"DROP TABLE $staging")
         catch { case _: java.sql.SQLException => () }
         st.close()

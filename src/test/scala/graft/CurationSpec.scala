@@ -1670,8 +1670,8 @@ class CurationSpec extends SparkSuite {
     }
     // serving from the LOADED artifacts equals serving from fresh ones
     val docs = Tables.documents(spark, sfDir)
-    val fresh = graft.streaming.TickStream.curriculumScoreStream(docs, vocab, total)
-    val loaded = graft.streaming.TickStream.curriculumScoreStream(docs, v2, t2)
+    val fresh = graft.streaming.DocStream.curriculumScoreStream(docs, vocab, total)
+    val loaded = graft.streaming.DocStream.curriculumScoreStream(docs, v2, t2)
     assert(fresh.exceptAll(loaded).count() == 0 &&
       loaded.exceptAll(fresh).count() == 0, "loaded vocab serve parity")
   }

@@ -170,7 +170,7 @@ class PreferenceSpec extends SparkSuite {
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(flat.toString)
     val ckpt = java.nio.file.Files.createTempDirectory("bon_ckpt").toString
-    val q = graft.streaming.TickStream.bestOfNDocsStream(spark, stream)
+    val q = graft.streaming.DocStream.bestOfNDocsStream(spark, stream)
       .toDF().writeStream.outputMode("update")
       .format("memory").queryName("bon_snap")
       .option("checkpointLocation", ckpt).start()
@@ -221,7 +221,7 @@ class PreferenceSpec extends SparkSuite {
     // make an interim-snapshot assertion vacuous)
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[Seq[org.apache.spark.sql.Row]]
-    val q = graft.streaming.TickStream.prefPairsStream(spark, stream)
+    val q = graft.streaming.DocStream.prefPairsStream(spark, stream)
       .toDF().writeStream.outputMode("update")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         val rows = b.collect().toSeq

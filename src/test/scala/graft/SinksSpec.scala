@@ -604,6 +604,22 @@ class SinksSpec extends SparkSuite {
     assert(rowsOf(readJdbc(url, "pre")) == Seq("[1,x,2,11.0]", "[2,y,1,20.0]"))
   }
 
+  test("upsertJdbc drops its staging table when the staging write fails") {
+    val db = java.nio.file.Files.createTempDirectory("derby_stg").toString + "/db"
+    val url = s"jdbc:derby:$db;create=true"
+    // one char past Derby's VARCHAR(32672): Spark creates the staging
+    // table, then its insert fails
+    val batch = Seq((1L, 1L, "x" * 32673)).toDF("id", "v", "tag")
+    intercept[Exception](Sinks.upsertJdbc(batch, url, "wide", Seq("id"), "v"))
+    val conn = java.sql.DriverManager.getConnection(url)
+    val staged = try {
+      val rs = conn.createStatement().executeQuery(
+        """SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLENAME LIKE 'WIDE\_STG\_%' ESCAPE '\'""")
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+    } finally conn.close()
+    assert(staged.isEmpty, s"staging tables left behind: $staged")
+  }
+
   test("upsertJdbc fails on a pre-existing target that holds duplicate keys") {
     val db = java.nio.file.Files.createTempDirectory("derby_dup").toString + "/db"
     val url = s"jdbc:derby:$db;create=true"

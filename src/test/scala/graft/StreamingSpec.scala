@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Indicators, Multimodal, Warehouse}
-import graft.streaming.TickStream
+import graft.streaming.{DocStream, TickStream}
 import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkSuite {
@@ -404,6 +404,74 @@ class StreamingSpec extends SparkSuite {
     assert(closed.exceptAll(streamed).count() == 0, "batch-only sessions")
   }
 
+  test("indicator ring equals a full-history fold; late and re-delivered ticks emit nothing") {
+    import spark.implicits._
+    // 100 ticks of one symbol in five microbatches (the ring wraps),
+    // then a tick older than the high-water mark, the next tick, an
+    // exact re-delivery of that tick, and the tick after it — one
+    // file per trigger, delivered in mtime order
+    val price = (1 to 102).map(i => 100.0 + 10.0 * math.sin(i * 0.7) + (i % 7) * 0.13)
+    def tick(i: Int) = (i.toLong, new java.sql.Timestamp(i * 60000L), 7L, price(i - 1))
+    val late = (1000L, new java.sql.Timestamp(50 * 60000L), 7L, 999.0)
+    val deliveries = (0 until 5).map(b => (1 to 20).map(j => tick(b * 20 + j))) ++
+      Seq(Seq(late), Seq(tick(101)), Seq(tick(101)), Seq(tick(102)))
+    val streamDir = java.nio.file.Files.createTempDirectory("ring_ticks")
+    for ((rows, k) <- deliveries.zipWithIndex) {
+      val path = streamDir.resolve(f"b$k%02d.parquet").toString
+      rows.toDF("event_id", "ts", "user_id", "value").coalesce(1).write.parquet(path)
+      new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach(f => require(f.setLastModified(1700000000000L + k * 60000L)))
+    }
+    val schema = spark.read.parquet(streamDir.resolve("b00.parquet").toString).schema
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(streamDir.toString + "/*")
+    runToMemory(TickStream.statefulIndicators(spark, stream).toDF(), "ring_ind")
+    val rows = spark.table("ring_ind").as[TickStream.IndicatorRow].collect()
+    assert(rows.map(_.event_id).sorted.toSeq == (1L to 102L),
+      "the late tick or the re-delivery emitted a row")
+    // the fold over the whole price history, in updateIndicators' order
+    val (k12, k26) = (2.0 / 13.0, 2.0 / 27.0)
+    var (e12, e26, rN, rMean, rM2) = (0.0, 0.0, 0L, 0.0, 0.0)
+    val expected = (1 to 102).map { n =>
+      val v = price(n - 1)
+      e12 = if (n == 1) v else v * k12 + e12 * (1.0 - k12)
+      e26 = if (n == 1) v else v * k26 + e26 * (1.0 - k26)
+      if (n > 1) {
+        val ret = (v - price(n - 2)) / price(n - 2)
+        rN += 1
+        val d = ret - rMean
+        rMean += d / rN
+        rM2 += d * (ret - rMean)
+      }
+      val rsi = if (n >= 15) {
+        var (g, l) = (0.0, 0.0)
+        for (i <- n - 14 until n) {
+          val d = price(i) - price(i - 1)
+          g += math.max(d, 0.0)
+          l += math.max(-d, 0.0)
+        }
+        val (gm, lm) = (g / 14.0, l / 14.0)
+        Some(if (lm == 0.0) 100.0 else 100.0 - 100.0 / (1.0 + gm / lm))
+      } else None
+      val sma = if (n >= 20) {
+        var sum = 0.0
+        for (i <- n - 20 until n) sum += price(i)
+        Some(sum / 20.0)
+      } else None
+      val vol = if (n >= 21) Some(math.sqrt(rM2 / rN) * math.sqrt(252.0)) else None
+      n.toLong -> Seq(rsi, sma, if (n >= 12) Some(e12) else None,
+        if (n >= 26) Some(e26) else None, vol)
+    }.toMap
+    def bits(xs: Seq[Option[Double]]) =
+      xs.map(_.map(java.lang.Double.doubleToRawLongBits))
+    for (r <- rows) {
+      val got = Seq(r.rsi_14, r.sma_20, r.ema_12, r.ema_26, r.volatility)
+      assert(bits(got) == bits(expected(r.event_id)),
+        s"tick ${r.event_id}: streamed $got, full-history fold ${expected(r.event_id)}")
+    }
+  }
+
   test("stateful indicators are identical on the RocksDB state store") {
     // the 100 TB streaming backend: state spills to disk instead of
     // living on the JVM heap; results must not change
@@ -622,8 +690,8 @@ class StreamingSpec extends SparkSuite {
     val docs = Tables.documents(spark, sfDir)
     val standing = docs.filter($"doc_id" % 5 =!= 0)
     val bloom = Multimodal.modalChunkBloom(standing)
-    val out = TickStream.modalNearDupDocsStream(
-      TickStream.docsStream(spark, sfDir), bloom)
+    val out = DocStream.modalNearDupDocsStream(
+      DocStream.docsStream(spark, sfDir), bloom)
     runToMemory(out, "modal_gate")
     val streamed = spark.table("modal_gate")
     assert(streamed.count() == docs.count(), "stateless: one row per doc")
@@ -639,7 +707,7 @@ class StreamingSpec extends SparkSuite {
     // modality-prefixed keys), nor does a disjoint payload
     val st2 = Seq((3L, "standing payload body of words")).toDF("doc_id", "text")
     val b2 = Multimodal.modalChunkBloom(st2) // doc 3 → image
-    val probed = TickStream.modalNearDupDocsStream(
+    val probed = DocStream.modalNearDupDocsStream(
       Seq((0L, "standing payload body of words"), // image, identical
         (1L, "standing payload body of words"), // audio, identical bytes
         (6L, "entirely different content here")) // image, disjoint
@@ -774,7 +842,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming doc dedup matches the batch fingerprint-distinct set") {
-    val out = TickStream.dedupDocsStream(TickStream.docsStream(spark, sfDir))
+    val out = DocStream.dedupDocsStream(DocStream.docsStream(spark, sfDir))
     runToMemory(out, "doc_dedup")
     val streamed = spark.table("doc_dedup").collect()
     val batchFps = graft.operators.TextOps.fingerprint(spark, sfDir)
@@ -816,7 +884,7 @@ class StreamingSpec extends SparkSuite {
       .schema(docs.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString)
-    runToMemory(TickStream.dedupDocsStream(stream), "doc_dedup_split")
+    runToMemory(DocStream.dedupDocsStream(stream), "doc_dedup_split")
     val survivors = spark.table("doc_dedup_split")
       .select("fingerprint").collect().map(_.getString(0))
     assert(survivors.length == survivors.distinct.length,
@@ -861,7 +929,7 @@ class StreamingSpec extends SparkSuite {
       .schema(docs.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(streamDir.toString)
-    runToMemory(TickStream.lineDedupDocsStream(spark, stream).toDF, "line_dedup_stream")
+    runToMemory(DocStream.lineDedupDocsStream(spark, stream).toDF, "line_dedup_stream")
     val streamed = spark.table("line_dedup_stream").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("pos")) ->
         (r.getAs[String]("line"), r.getAs[Boolean]("kept"))).toMap
@@ -888,8 +956,8 @@ class StreamingSpec extends SparkSuite {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val out = TickStream.lineDedupDocsStream(spark,
-        TickStream.docsStream(spark, sfDir))
+      val out = DocStream.lineDedupDocsStream(spark,
+        DocStream.docsStream(spark, sfDir))
       runToMemory(out.toDF, "line_dedup_rocks")
       val streamed = spark.table("line_dedup_rocks").collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("pos"),
@@ -932,7 +1000,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     val ckpt = java.nio.file.Files.createTempDirectory("annserve_ckpt").toString
-    val q = TickStream.annServeStream(probeStream, idx, corpus) { (df, _) =>
+    val q = DocStream.annServeStream(probeStream, idx, corpus) { (df, _) =>
       buf.synchronized { buf ++= df.collect().map(_.toString): Unit }
     }.option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
@@ -979,7 +1047,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     val ckpt = java.nio.file.Files.createTempDirectory("gserve_ckpt").toString
-    val q = TickStream.annGraphServeStream(probeStream, idx) { (df, _) =>
+    val q = DocStream.annGraphServeStream(probeStream, idx) { (df, _) =>
       buf.synchronized { buf ++= df.collect().map(_.toString): Unit }
     }.option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
@@ -1001,8 +1069,8 @@ class StreamingSpec extends SparkSuite {
     val standingIds = docs.filter(col("doc_id") < 400)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val bloom = Dedup.fingerprintBloom(docs.filter(col("doc_id") < 400))
-    val out = TickStream.dedupDocsStreamGated(
-      TickStream.docsStream(spark, sfDir), bloom)
+    val out = DocStream.dedupDocsStreamGated(
+      DocStream.docsStream(spark, sfDir), bloom)
     runToMemory(out, "doc_dedup_gated")
     val survivors = spark.table("doc_dedup_gated")
       .select("doc_id").collect().map(_.getLong(0))
@@ -1020,7 +1088,7 @@ class StreamingSpec extends SparkSuite {
     import graft.operators.{Bpe, Unigram}
     val docs = Tables.documents(spark, sfDir)
     val merges = Bpe.trainOnDocs(docs)
-    val outB = TickStream.bpeDocsStream(TickStream.docsStream(spark, sfDir), merges)
+    val outB = Bpe.encodeDocsWith(DocStream.docsStream(spark, sfDir), merges)
     runToMemory(outB, "doc_bpe_stream")
     val batchB = Bpe.tokenizeDocs(spark, sfDir)
     val streamedB = spark.table("doc_bpe_stream")
@@ -1028,7 +1096,7 @@ class StreamingSpec extends SparkSuite {
     assert(batchB.exceptAll(streamedB).count() == 0)
     assert(streamedB.exceptAll(batchB).count() == 0)
     val model = Unigram.fitModelDocs(docs)
-    val outU = TickStream.unigramDocsStream(TickStream.docsStream(spark, sfDir), model)
+    val outU = Unigram.encodeDocsWith(DocStream.docsStream(spark, sfDir), model)
     runToMemory(outU, "doc_unigram_stream")
     val batchU = Unigram.tokenizeDocs(spark, sfDir)
     val streamedU = spark.table("doc_unigram_stream")
@@ -1038,7 +1106,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming compression verdicts equal the batch ratio query") {
-    val out = TickStream.compressDocsStream(TickStream.docsStream(spark, sfDir))
+    val out = graft.operators.Curation.compressRatioDocs(DocStream.docsStream(spark, sfDir))
     runToMemory(out, "doc_compress")
     val streamed = spark.table("doc_compress")
     val batch = graft.operators.Curation.compressRatio(spark, sfDir)
@@ -1048,7 +1116,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming gopher verdicts equal the batch quality filter") {
-    val out = TickStream.qualityDocsStream(TickStream.docsStream(spark, sfDir))
+    val out = graft.operators.Curation.gopherNarrowDocs(DocStream.docsStream(spark, sfDir))
     runToMemory(out, "doc_quality")
     val streamed = spark.table("doc_quality")
     val batch = graft.operators.Curation.gopherFilters(spark, sfDir)
@@ -1059,8 +1127,8 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming curriculum scores equal the batch difficulty") {
     val (vocab, total) = graft.operators.Curation.curriculumVocab(spark, sfDir)
-    val out = TickStream.curriculumScoreStream(
-      TickStream.docsStream(spark, sfDir), vocab, total)
+    val out = DocStream.curriculumScoreStream(
+      DocStream.docsStream(spark, sfDir), vocab, total)
     runToMemory(out, "doc_curriculum")
     val streamed = spark.table("doc_curriculum")
     // the stream passes zero-token docs through (NULL difficulty);
@@ -1075,7 +1143,7 @@ class StreamingSpec extends SparkSuite {
     assert(streamed.count() == Tables.documents(spark, sfDir).count())
     // OOV fallback: an unseen word scores at the count-1 ceiling
     import spark.implicits._
-    val oov = TickStream.curriculumScoreStream(
+    val oov = DocStream.curriculumScoreStream(
       Seq((999L, "zzzunseen zzzunseen")).toDF("doc_id", "text"),
       vocab, total).collect().head
     val ceil = BigDecimal(math.log(total.toDouble))
@@ -1090,8 +1158,8 @@ class StreamingSpec extends SparkSuite {
   test("streaming boilerplate scores equal the batch template pass") {
     val templates = graft.operators.Curation.boilerplateTemplates(spark, sfDir)
     assert(templates.nonEmpty, "standing template set is empty")
-    val out = TickStream.boilerplateDocsStream(
-      TickStream.docsStream(spark, sfDir), templates)
+    val out = DocStream.boilerplateDocsStream(
+      DocStream.docsStream(spark, sfDir), templates)
     runToMemory(out, "doc_boiler")
     val streamed = spark.table("doc_boiler")
     val batch = graft.operators.Curation.boilerplate(spark, sfDir)
@@ -1100,7 +1168,7 @@ class StreamingSpec extends SparkSuite {
     assert(streamed.exceptAll(batch).count() == 0, "stream minus batch")
     // an unseen source scores zero template grams, never crashes
     import spark.implicits._
-    val fresh = TickStream.boilerplateDocsStream(
+    val fresh = DocStream.boilerplateDocsStream(
       Seq((999L, "a b a b", "src_new")).toDF("doc_id", "text", "source"),
       templates).collect().head
     assert(fresh.getLong(2) == 2L && fresh.getLong(3) == 0L,
@@ -1108,7 +1176,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming full-quality chain equals the batch gopher chain") {
-    val out = TickStream.fullQualityDocsStream(TickStream.docsStream(spark, sfDir))
+    val out = graft.operators.Curation.gopherChainDocs(DocStream.docsStream(spark, sfDir))
     runToMemory(out, "doc_quality_chain")
     val streamed = spark.table("doc_quality_chain")
     val batch = graft.operators.Curation.gopherChain(spark, sfDir)
@@ -1134,7 +1202,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming C4 cleaning verdicts equal the batch query") {
-    val out = TickStream.c4DocsStream(TickStream.docsStream(spark, sfDir))
+    val out = graft.operators.Curation.c4FiltersDocs(DocStream.docsStream(spark, sfDir))
     runToMemory(out, "doc_c4")
     val streamed = spark.table("doc_c4")
     val batch = graft.operators.Curation.c4Filters(spark, sfDir)
@@ -1144,7 +1212,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming PII scrub equals the batch redaction") {
-    val out = TickStream.redactDocsStream(TickStream.docsStream(spark, sfDir))
+    val out = graft.operators.Curation.redactDocs(DocStream.docsStream(spark, sfDir))
     runToMemory(out, "doc_redact")
     val streamed = spark.table("doc_redact")
     val batch = graft.operators.Curation.redactPiiDocs(spark, sfDir)
@@ -1154,7 +1222,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming FIM rewrites equal the batch transform") {
-    val out = TickStream.fimDocsStream(TickStream.docsStream(spark, sfDir))
+    val out = graft.operators.Curation.fimDocs(DocStream.docsStream(spark, sfDir))
     runToMemory(out, "doc_fim")
     val streamed = spark.table("doc_fim")
     val batch = graft.operators.Curation.fim(spark, sfDir)
@@ -1164,7 +1232,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming UL2 pairs equal the batch mixture-of-denoisers") {
-    val out = TickStream.ul2DocsStream(TickStream.docsStream(spark, sfDir))
+    val out = graft.operators.Curation.ul2MixDocs(DocStream.docsStream(spark, sfDir))
     runToMemory(out, "doc_ul2")
     val streamed = spark.table("doc_ul2")
     val batch = graft.operators.Curation.ul2Mix(spark, sfDir)
@@ -1174,7 +1242,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming mixed-language verdicts equal the batch gate") {
-    val out = TickStream.langMixDocsStream(TickStream.docsStream(spark, sfDir))
+    val out = graft.operators.TextOps.langMixDocs(DocStream.docsStream(spark, sfDir))
     runToMemory(out, "doc_langmix")
     val streamed = spark.table("doc_langmix")
     val batch = graft.operators.TextOps.langMix(spark, sfDir)
@@ -1186,8 +1254,8 @@ class StreamingSpec extends SparkSuite {
   test("streamed hashed importance scores are bit-identical to batch") {
     val batchDocs = Tables.documents(spark, sfDir)
     val model = graft.operators.Curation.hashedImportanceModel(batchDocs)
-    val out = TickStream.importanceDocsStream(
-      TickStream.docsStream(spark, sfDir), model)
+    val out = graft.operators.Curation.hashedImportanceScore(
+      DocStream.docsStream(spark, sfDir), model)
     runToMemory(out, "doc_importance")
     val streamed = spark.table("doc_importance")
     val batch = graft.operators.Curation.hashedImportanceScore(batchDocs, model)
@@ -1201,8 +1269,8 @@ class StreamingSpec extends SparkSuite {
     val batchDocs = Tables.documents(spark, sfDir)
     val (model, _) = Classifier.fit(Classifier.featurize(
       batchDocs.filter(pmod(xxhash64(col("doc_id")), lit(5L)) =!= 0L)))
-    val out = TickStream.classifierDocsStream(
-      TickStream.docsStream(spark, sfDir), model)
+    val out = Classifier.classifierScore(
+      DocStream.docsStream(spark, sfDir), model)
     runToMemory(out, "doc_classifier")
     val streamed = spark.table("doc_classifier")
     val batch = Classifier.classifierScore(batchDocs, model)
@@ -1218,8 +1286,8 @@ class StreamingSpec extends SparkSuite {
     def run(bar: Long): Seq[Array[Double]] = {
       val published = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
       val ckpt = java.nio.file.Files.createTempDirectory("cmnt_ckpt").toString
-      val q = TickStream.classifierMaintainStream(
-        TickStream.docsStream(spark, sfDir),
+      val q = DocStream.classifierMaintainStream(
+        DocStream.docsStream(spark, sfDir),
         new Array[Double](Classifier.defaultBuckets + 1),
         () => docs, minNewDocs = bar) { (m, _) =>
         published.synchronized { published += m: Unit }
@@ -1243,7 +1311,7 @@ class StreamingSpec extends SparkSuite {
 
   test("streamed mixture acceptance equals the batch sample exactly") {
     val rates = graft.operators.Curation.mixtureRates(spark, sfDir)
-    val out = TickStream.mixtureDocsStream(TickStream.docsStream(spark, sfDir), rates)
+    val out = graft.operators.Curation.mixtureAcceptDocs(DocStream.docsStream(spark, sfDir), rates)
     runToMemory(out, "doc_mixture")
     val streamed = spark.table("doc_mixture")
       .select("doc_id", "source", "accept_ppm").collect()
@@ -1293,7 +1361,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Array[org.apache.spark.sql.Row]]
     val ckpt = java.nio.file.Files.createTempDirectory("hsegserve_ckpt").toString
-    val q = TickStream.annHnswServeStreamSegmented(probeStream, () => seg) {
+    val q = DocStream.annHnswServeStreamSegmented(probeStream, () => seg) {
       (df, _) =>
         perBatch.synchronized {
           perBatch += df.collect()
@@ -1347,7 +1415,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     val ckpt = java.nio.file.Files.createTempDirectory("hserve_ckpt").toString
-    val q = TickStream.annHnswServeStream(probeStream, idx) { (df, _) =>
+    val q = DocStream.annHnswServeStream(probeStream, idx) { (df, _) =>
       buf.synchronized { buf ++= df.collect().map(_.toString): Unit }
     }.option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
@@ -1385,7 +1453,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Map[Long, Boolean]]
     val ckpt = java.nio.file.Files.createTempDirectory("ndr_ckpt").toString
-    val q = TickStream.nearDupDocsStreamRolling(stream, () => gate) { (df, _) =>
+    val q = DocStream.nearDupDocsStreamRolling(stream, () => gate) { (df, _) =>
       perBatch.synchronized {
         perBatch += df.select("doc_id", "candidate_near_dup").collect()
           .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
@@ -1432,7 +1500,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Map[Long, Boolean]]
     val ckpt = java.nio.file.Files.createTempDirectory("der_ckpt").toString
-    val q = TickStream.dedupDocsStreamRolling(stream, () => gate) { (df, _) =>
+    val q = DocStream.dedupDocsStreamRolling(stream, () => gate) { (df, _) =>
       perBatch.synchronized {
         perBatch += df.select("doc_id", "candidate_dup").collect()
           .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
@@ -1502,7 +1570,7 @@ class StreamingSpec extends SparkSuite {
       val published = scala.collection.mutable.ArrayBuffer
         .empty[Dedup.RollingBandGate]
       val ckpt = java.nio.file.Files.createTempDirectory(s"grs_${tag}_ck").toString
-      val q = TickStream.rollingGateMaintainStream(stream, init,
+      val q = DocStream.rollingGateMaintainStream(stream, init,
         dayMs, "ts", sliceOf) { (g, _) =>
         published.synchronized { published += g: Unit }
       }.option("checkpointLocation", ckpt).start()
@@ -1566,7 +1634,7 @@ class StreamingSpec extends SparkSuite {
     }
     val published = scala.collection.mutable.ArrayBuffer.empty[(Long, Dedup.RollingBandGate)]
     val ckpt = java.nio.file.Files.createTempDirectory("rgm_ckpt").toString
-    val q = TickStream.rollingGateMaintainStream(stream,
+    val q = DocStream.rollingGateMaintainStream(stream,
       Dedup.emptyRollingGate(windowEpochs = 1, capacity = 400L),
       dayMs, "ts", sliceOf) { (g, e) =>
       published.synchronized { published += e -> g: Unit }
@@ -1651,7 +1719,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     val sinkDir = java.nio.file.Files.createTempDirectory("ndg_sink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ndg_ckpt").toString
-    val q = TickStream.nearDupDocsStream(stream, bloom)
+    val q = DocStream.nearDupDocsStream(stream, bloom)
       .select("doc_id", "candidate_near_dup")
       .writeStream.outputMode("append").format("parquet")
       .option("path", sinkDir).option("checkpointLocation", ckpt)
@@ -1661,7 +1729,7 @@ class StreamingSpec extends SparkSuite {
     val streamed = spark.read.parquet(sinkDir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("candidate_near_dup"))
       .sorted.toSeq
-    val batch = TickStream.nearDupDocsStream(batchDocs, bloom)
+    val batch = DocStream.nearDupDocsStream(batchDocs, bloom)
       .select("doc_id", "candidate_near_dup").collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("candidate_near_dup"))
       .sorted.toSeq
@@ -1689,7 +1757,7 @@ class StreamingSpec extends SparkSuite {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     var live: Similarity.HnswIndex = idx0
     val ckpt = java.nio.file.Files.createTempDirectory("hmnt_ckpt").toString
-    val q = TickStream.hnswMaintainStream(stream, idx0) { (ix, bid) =>
+    val q = DocStream.hnswMaintainStream(stream, idx0) { (ix, bid) =>
       live = ix
       seen += ix.nodes.count()
     }.option("checkpointLocation", ckpt).start()
@@ -1733,7 +1801,7 @@ class StreamingSpec extends SparkSuite {
     var live = standing
     var generations = 0
     val ckpt = java.nio.file.Files.createTempDirectory("cmnt_ckpt").toString
-    val q = TickStream.componentsMaintainStream(stream, standing) { (labels, _) =>
+    val q = DocStream.componentsMaintainStream(stream, standing) { (labels, _) =>
       live = labels
       generations += 1
     }.option("checkpointLocation", ckpt).start()
@@ -1779,7 +1847,7 @@ class StreamingSpec extends SparkSuite {
     var live: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
       (standing, canon0)
     val ckpt = java.nio.file.Files.createTempDirectory("canmnt_ckpt").toString
-    val q = TickStream.canonicalMaintainStream(stream, standing, canon0, scores) {
+    val q = DocStream.canonicalMaintainStream(stream, standing, canon0, scores) {
       (pair, _) => live = pair
     }.option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
@@ -1845,7 +1913,7 @@ class StreamingSpec extends SparkSuite {
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
       var live = init
       val ckpt = java.nio.file.Files.createTempDirectory(s"res_${tag}_ckpt").toString
-      val q = TickStream.canonicalMaintainStream(stream, init._1, init._2, scores) {
+      val q = DocStream.canonicalMaintainStream(stream, init._1, init._2, scores) {
         (pair, _) => live = pair
       }.option("checkpointLocation", ckpt).start()
       q.processAllAvailable()
@@ -1965,7 +2033,7 @@ class StreamingSpec extends SparkSuite {
     val traj = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
     var live = Similarity.HnswSegmented(idx0, Nil)
     val ckpt = java.nio.file.Files.createTempDirectory("hseg_ckpt").toString
-    val q = TickStream.hnswSegmentMaintainStream(stream, live,
+    val q = DocStream.hnswSegmentMaintainStream(stream, live,
       maxSegments = 2) { (s, _) =>
       live = s
       traj += s.segments.length -> s.main.nodes.count(): Unit
@@ -2018,7 +2086,7 @@ class StreamingSpec extends SparkSuite {
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
       var live = initial
       val ckpt = java.nio.file.Files.createTempDirectory("hsr_ckpt").toString
-      val q = TickStream.hnswSegmentMaintainStream(stream, live,
+      val q = DocStream.hnswSegmentMaintainStream(stream, live,
         maxSegments = 2) { (s, _) => live = s }
         .option("checkpointLocation", ckpt).start()
       try { q.processAllAvailable() } finally { q.stop() }
@@ -2078,7 +2146,7 @@ class StreamingSpec extends SparkSuite {
     val traj = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
     var live = Similarity.NswSegmented(idx0, Nil)
     val ckpt = java.nio.file.Files.createTempDirectory("nseg_ckpt").toString
-    val q = TickStream.nswSegmentMaintainStream(stream, live,
+    val q = DocStream.nswSegmentMaintainStream(stream, live,
       maxSegments = 2) { (s, _) =>
       live = s
       traj += s.segments.length -> s.main.nodes.count(): Unit
@@ -2169,7 +2237,7 @@ class StreamingSpec extends SparkSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("dl_ckpt").toString
     val stream = spark.readStream.schema(dirty.schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = TickStream.deadLetterStream(stream).writeStream
+    val q = graft.operators.ErrorLedger.ingestionErrorsOf(stream).writeStream
       .outputMode("append").format("parquet")
       .option("path", sinkDir).option("checkpointLocation", ckpt)
       .start()
