@@ -20,8 +20,17 @@
 # code and reason, and its pair is left out of the metric table.
 #
 # Output: per end-to-end metric of BENCHMARK.json, each side's median
-# [first–third quartile], the relative change of the medians and the
-# pairs the change won; then each side's range of calib.cpu_ms,
+# [first–third quartile], the relative change of the medians, the pairs
+# the change won and a verdict, the first of these that applies:
+#   gain holds        at least 10 pairs, the change won at least 9 in 10
+#                     of them and the medians differ by more than the
+#                     parent's quartile distance;
+#   worse than bound  the change's median is worse than the parent's by
+#                     more than the metric's BENCHMARK.json bound;
+#   unresolved        the parent's quartile distance exceeds the bound
+#                     and not every change run beats every parent run;
+#   within bound      otherwise.
+# Then each side's range of calib.cpu_ms,
 # calib.mt_ms and host.steal_pct and its total of failed operations;
 # then each side's malformed runs.
 set -euo pipefail
@@ -121,20 +130,32 @@ seeds = sorted(s for s in set(by["parent"]) & set(by["change"])
 print(f"{workload}: {len(seeds)} pairs, seeds {', '.join(map(str, seeds))}" if seeds
       else f"{workload}: no complete pair")
 print()
-print("| metric | parent | change | Δ | won |")
-print("| --- | --- | --- | --- | --- |")
+print("| metric | parent | change | Δ | won | verdict |")
+print("| --- | --- | --- | --- | --- | --- |")
 for m in metrics:
     name, lower = m["name"], m["better"] == "lower"
     pairs = [(e2e(by["parent"][s], name), e2e(by["change"][s], name)) for s in seeds]
     pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
     if not pairs:
-        print(f"| `{name}` | – | – | | |")
+        print(f"| `{name}` | – | – | | | |")
         continue
     (pm, p1, p3), (cm, c1, c3) = quart([p for p, _ in pairs]), quart([c for _, c in pairs])
-    won = sum(1 for p, c in pairs if (c < p if lower else c > p))
+    beats = lambda c, p: c < p if lower else c > p
+    won = sum(1 for p, c in pairs if beats(c, p))
     delta = (cm / pm - 1.0) * 100.0 if pm else float("nan")
+    worse = (cm - pm if lower else pm - cm) / abs(pm) if pm else 0.0
+    if len(pairs) >= 10 and won >= 0.9 * len(pairs) and beats(cm, pm) \
+            and abs(cm - pm) > p3 - p1:
+        verdict = "gain holds"
+    elif worse > m["bound"]:
+        verdict = "worse than bound"
+    elif pm and (p3 - p1) / abs(pm) > m["bound"] and not all(
+            beats(c, p) for _, c in pairs for p, _ in pairs):
+        verdict = "unresolved"
+    else:
+        verdict = "within bound"
     print(f"| `{name}` | {fmt(pm)} [{fmt(p1)}–{fmt(p3)}] | {fmt(cm)} [{fmt(c1)}–{fmt(c3)}] "
-          f"| {delta:+.1f}% (bound {m['bound'] * 100:.0f}%) | {won}/{len(pairs)} |")
+          f"| {delta:+.1f}% (bound {m['bound'] * 100:.0f}%) | {won}/{len(pairs)} | {verdict} |")
 print()
 for side in ("parent", "change"):
     rs = [by[side][s] for s in seeds]

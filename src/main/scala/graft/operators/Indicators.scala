@@ -243,7 +243,8 @@ object Indicators {
     * materialized view (db/enhanced_schema.sql:297-314): per (symbol,
     * day) price/RSI/volatility aggregates enriched with the broadcast
     * dim. In a lakehouse this materializes incrementally via
-    * [[graft.sources.Sinks.upsertParquet]] keyed on (user_id, day).
+    * [[graft.sources.Sinks.upsertParquet]] keyed on (trade_date,
+    * user_id): a day's update rewrites only the part files of that day.
     */
   def dailySummary(spark: SparkSession, dir: String): DataFrame = {
     val dim = graft.Tables.customer(spark, dir)

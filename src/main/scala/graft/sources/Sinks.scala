@@ -1,14 +1,15 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.{Column, DataFrame, GraftShim, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import org.json4s.jackson.Serialization
 
 /** Sink-side semantics of the reference pipeline re-expressed for a
   * data-lake target.
@@ -17,10 +18,11 @@ import org.apache.spark.sql.types._
   * db/current_schema.sql:165-200; predictions upsert,
   * batch_predict_linear_regression.py:60-76). On a cluster the target
   * is a table-format/parquet sink, and the same contract is
-  * merge-by-key-keep-latest. [[upsertParquet]] appends a batch whose
-  * keys provably cannot collide with the table's (the live tick case:
-  * each batch's event ids lie past the table's) and runs a full
-  * read-merge-write only for any other batch. For the reference's own
+  * merge-by-key-keep-latest. [[upsertParquet]] commits each batch
+  * through a log of table snapshots: a batch whose keys provably cannot
+  * collide with a part file's leaves that file alone (the live tick
+  * case appends), and only the files it overlaps are rewritten. For the
+  * reference's own
   * target, [[upsertJdbc]] runs a staging table + MERGE. Both keep the
   * winner [[mergeByKey]] picks.
   */
@@ -56,127 +58,198 @@ object Sinks {
   }
 
   /** Merge `updates` into the parquet table at `path` with
-    * [[mergeByKey]], in work that scales with the batch whenever the
-    * batch cannot touch a row already in the table.
+    * [[mergeByKey]], rewriting only the part files the batch can touch.
     *
-    * Every call first writes the batch, deduplicated by
-    * [[mergeByKey]], to `<path>.staging`, and observes on that write
-    * each key column's range and null count (no extra job). Then one
-    * of three paths:
-    *  - Append: the staged part files (and their `.crc` sidecars) are
-    *    moved into the live directory. Taken only when this process
-    *    recorded the live table's key range, the live directory holds
-    *    exactly the part files that range covers, no `.old` directory
-    *    exists, the batch has the table's column layout, the table
-    *    stays within [[MaxAppendFiles]] part files, and on at least one
-    *    key column the batch's range and the table's are disjoint. Only
-    *    integral, date and timestamp columns can prove that: a string's
-    *    order depends on its collation (and UTF-8 vs UTF-16), a float's
-    *    on NaN and ±0.0. A column in which both sides hold a null
-    *    cannot prove it either.
-    *  - First write: with no table yet (and no `.old`), the staging
-    *    directory is promoted as the live one.
-    *  - Full merge: anything else (no record in this process, key
-    *    overlap, a foreign file, crash leftovers, the file bound). The
-    *    live table (or `.old`, see below) is read, merged with the
-    *    staged batch, written to `<path>.merged` and swapped in:
-    *    delete(stale `.old`) + rename(live→`.old`) + rename(merged→live)
-    *    + delete(`.old`). Every crash point leaves a directory the next
-    *    call recovers from: live, or `.old` while live is absent.
-    *    Without live, `.old` is the only durable copy and is dropped
-    *    only after the promote. The merged write is observed as well,
-    *    so the next batch can append again; the merge also compacts the
-    *    table back to one write's files.
+    * The table keeps a log, `<path>/_graft_log/<version>.json`. Each
+    * version is a full snapshot: the table schema, every live part file
+    * with its size and each key column's observed range, the files the
+    * version dropped, and for a stream write the checkpoint and batch id
+    * that wrote it. Creating a version with
+    * `CheckpointFileManager.createAtomic`, never overwriting, is the
+    * sink's one commit point. A call:
+    *  1. stages the batch, deduplicated by [[mergeByKey]], under
+    *     `<path>/_graft_stage/`, which Spark's readers skip, observing
+    *     its key ranges on the same job. If the batch overlaps some part
+    *     files, it is merged with only those, and the merge is staged
+    *     instead. Past [[MaxAppendFiles]] part files, the smallest files
+    *     join that merge;
+    *  2. creates version N+1. A writer that loses that create fails;
+    *  3. moves the staged files into the table;
+    *  4. deletes the files version N+1 dropped;
+    *  5. deletes the versions before N and every staged file.
     *
-    * The recorded range lives in the Spark driver's memory, keyed by
-    * table path. It is dropped before any step that changes the live
-    * directory and set again only after that step completes, so a
-    * failed step leaves no record and the next call merges.
+    * A batch overlaps a file unless their ranges on some key column are
+    * disjoint. Only integral, date and timestamp columns can prove that
+    * (a string's order depends on its collation, a float's on NaN and
+    * ±0.0), and not when both sides hold a null.
     *
-    * Crash and replay: under [[commitOnce]], a crash after some or all
-    * staged files were moved but before the ledger was written replays
-    * the batch. The replay overlaps the table on every key column — in
-    * a fresh process because there is no record, in the same process
-    * because the record was widened over the batch or dropped — so it
-    * takes the full merge, which leaves one row per key.
-    *
-    * Readers: a reader that lists the table during an append may see
-    * part of the batch; one that lists it during a swap may find no
-    * table at all. Nothing stronger is promised.
+    * Every call first rolls the latest version forward (steps 3-5), so
+    * a stop after any step leaves a table the next call completes. A
+    * visible part file that the log does not list (from a table written
+    * before the log, or a foreign writer) is adopted into the next
+    * version, with its ranges observed on read. One writer per table: a
+    * concurrent one fails at the create or loses its staged files.
+    * [[readTable]] reads the latest version as one snapshot; a plain
+    * `spark.read.parquet(path)` is exact while no call runs.
     */
   def upsertParquet(updates: DataFrame, path: String, keyCols: Seq[String],
-      versionCol: String): Unit = {
-    val spark = updates.sparkSession
-    val live = new java.io.File(path)
-    val old = new java.io.File(path + ".old")
-    val staging = new java.io.File(path + ".staging")
-    val table = live.getAbsoluteFile.toPath.normalize.toString
+      versionCol: String): Unit =
+    upsertLogged(updates, path, keyCols, versionCol, None): Unit
+
+  /** [[upsertParquet]], skipped (false) when `writer` is a stream
+    * batch the latest version shows as applied: same checkpoint and
+    * query, batch id at or below the recorded one. */
+  private def upsertLogged(updates: DataFrame, path: String, keyCols: Seq[String],
+      versionCol: String, writer: Option[Writer]): Boolean = {
+    val t = new TableFiles(updates.sparkSession, path)
+    val versions = t.versions
+    val latest = versions.lastOption.map(t.read)
+    val foreign = settle(t, versions, latest, _ => ())
+    if (writer.exists(w => latest.flatMap(_.writer).exists(l =>
+        l.checkpoint == w.checkpoint && l.query == w.query && l.batch >= w.batch)))
+      return false
     val batch = mergeByKey(None, updates, keyCols, versionCol)
-    val (rows, batchKeys) = writeObserved(batch, staging, keyCols)
-    val layout = layoutOf(batch)
-    val staged = if (rows == 0) Map.empty[String, Long]
-      else filesOf(staging).filter(_._1.endsWith(".parquet"))
-    Option(tableRanges.remove(table)).filter { t =>
-      live.isDirectory && !old.exists() && filesOf(live) == t.files &&
-        t.layout == layout && t.files.size + staged.size <= MaxAppendFiles &&
-        t.keys.zip(batchKeys).exists {
-          case (Some(a), Some(b)) => disjoint(a, b)
-          case _ => false
-        }
-    } match {
-      case Some(t) =>
-        staged.keys.foreach { name =>
-          move(staging, live, name)
-          if (new java.io.File(staging, s".$name.crc").exists())
-            move(staging, live, s".$name.crc")
-        }
-        rm(staging)
-        val keys = t.keys.zip(batchKeys).map { case (a, b) =>
-          for (x <- a; y <- b) yield widen(x, y)
-        }
-        tableRanges.put(table, TableRange(layout, keys, t.files ++ staged))
-      case None if !live.exists() && !old.exists() =>
-        val files = filesOf(staging)
-        if (!staging.renameTo(live))
-          throw new java.io.IOException(s"could not promote $staging into $path")
-        tableRanges.put(table, TableRange(layout, batchKeys, files))
-      case None =>
-        val existing = spark.read.parquet(if (live.exists()) path else old.getPath)
-        val merged = mergeByKey(Some(existing),
-          spark.read.schema(batch.schema).parquet(staging.getPath),
+    val id = java.util.UUID.randomUUID().toString
+    val (rows, batchKeys) = writeObserved(batch, new Path(t.stage, id), keyCols)
+    if (rows == 0 && (latest.nonEmpty || foreign.nonEmpty)) {
+      t.fs.delete(t.stage, true)
+      return true
+    }
+    val schema = latest.fold(batch.schema)(v => DataType.fromJson(v.schema).asInstanceOf[StructType])
+    val table = latest.fold(Seq.empty[PartFile])(_.files) ++
+      observeFiles(t, foreign, schema, keyCols)
+    val sameLayout = schema.map(f => f.name -> f.dataType) ==
+      batch.schema.map(f => f.name -> f.dataType)
+    val (hit, kept) = table.partition(f => !sameLayout || !keyCols.exists(k =>
+      f.keys.get(k).zip(batchKeys.get(k)).exists { case (a, b) => disjoint(a, b) }))
+    val staged = t.filesIn(new Path(t.stage, id))
+    val small = if (kept.size + staged.size <= MaxAppendFiles) Nil
+      else kept.sortBy(f => (f.size, f.name)).dropRight(MaxAppendFiles / 2)
+    val rewrite = hit ++ small
+    val (dir, schemaOut, added) =
+      if (rewrite.isEmpty) (id, schema, staged.map { case (n, s) => PartFile(n, s, batchKeys) })
+      else {
+        val merged = mergeByKey(
+          Some(t.spark.read.schema(schema).parquet(rewrite.map(f => t.live(f.name).toString): _*)),
+          t.spark.read.schema(batch.schema).parquet(new Path(t.stage, id).toString),
           keyCols, versionCol)
-        val mergedDir = new java.io.File(path + ".merged")
-        val (_, keys) = writeObserved(merged, mergedDir, keyCols)
-        val files = filesOf(mergedDir)
-        if (live.exists()) {
-          rm(old) // stale leftover from a completed swap
-          if (!live.renameTo(old))
-            throw new java.io.IOException(s"could not retire $path")
-        }
-        if (!mergedDir.renameTo(live))
-          throw new java.io.IOException(s"could not promote $mergedDir into $path")
-        rm(old)
-        rm(staging)
-        tableRanges.put(table, TableRange(layoutOf(merged), keys, files))
+        val dir = s"$id-merged"
+        val (_, keys) = writeObserved(merged, new Path(t.stage, dir), keyCols)
+        (dir, merged.schema,
+          t.filesIn(new Path(t.stage, dir)).map { case (n, s) => PartFile(n, s, keys) })
+      }
+    stopAt("staged")
+    val dropped = rewrite.map(_.name).toSet
+    val next = Version(schemaOut.json, table.filterNot(f => dropped(f.name)) ++ added,
+      dropped.toSeq.sorted, dir, writer)
+    val n = versions.lastOption.getOrElse(0L) + 1
+    t.create(n, next)
+    stopAt("committed")
+    settle(t, versions :+ n, Some(next), stopAt)
+    true
+  }
+
+  /** Steps 3-5 of [[upsertParquet]] for the latest version: reveal its
+    * staged files, delete the visible files it dropped, then the
+    * versions before its predecessor and every staged file. Returns the
+    * visible part files it does not list (name → size). */
+  private def settle(t: TableFiles, versions: Seq[Long], latest: Option[Version],
+      stop: String => Unit): Map[String, Long] = {
+    val visible = t.filesIn(t.root)
+    latest.foreach(v => v.files.filterNot(f => visible.contains(f.name)).foreach { f =>
+      if (!t.fs.rename(t.staged(v, f.name), t.live(f.name)))
+        throw new java.io.IOException(s"${t.root}: ${f.name} of the latest version is neither live nor staged")
+    })
+    stop("revealed")
+    val dropped = latest.fold(Seq.empty[String])(_.dropped).filter(visible.contains)
+    dropped.foreach(f => t.fs.delete(t.live(f), false))
+    stop("dropped")
+    versions.dropRight(2).foreach(v => t.fs.delete(t.versionPath(v), false))
+    t.fs.delete(t.stage, true)
+    visible -- latest.fold(Seq.empty[String])(_.files.map(_.name)) -- dropped
+  }
+
+  /** The latest version of the parquet table [[upsertParquet]] keeps at
+    * `path`, read as one snapshot: a file not yet moved into the table
+    * is read where it is staged. A read that races later commits fails;
+    * it never mixes versions. A table without a log is read as plain
+    * parquet.
+    */
+  def readTable(spark: SparkSession, path: String): DataFrame = {
+    val t = new TableFiles(spark, path)
+    t.versions.lastOption.map(t.read) match {
+      case None => spark.read.parquet(path)
+      case Some(v) =>
+        val visible = t.filesIn(t.root)
+        spark.read.schema(DataType.fromJson(v.schema).asInstanceOf[StructType])
+          .parquet(v.files.map(f =>
+            (if (visible.contains(f.name)) t.live(f.name) else t.staged(v, f.name)).toString): _*)
     }
   }
 
-  /** One key column's observed values: the range of the non-null ones
-    * as longs (None when there are none) and whether a null occurs. */
-  private case class KeyRange(bounds: Option[(Long, Long)], nulls: Boolean)
+  /** Stops [[upsertParquet]] after a named step ("staged", "committed",
+    * "revealed", "dropped") when it throws; specs use it to stand in
+    * for a crash at that point. */
+  @volatile private[graft] var stopAt: String => Unit = _ => ()
 
-  /** What this process knows of a live table it last changed: its
-    * column layout, each key column's range (None for a column whose
-    * type cannot prove two ranges disjoint), and the part files
-    * (name → size) that range covers. */
-  private case class TableRange(layout: Seq[(String, DataType)],
-      keys: Seq[Option[KeyRange]], files: Map[String, Long])
+  /** One key column's observed values as order-preserving longs: the
+    * range of the non-null ones (lo > hi when there are none) and
+    * whether a null occurs. */
+  private case class KeyRange(lo: Long, hi: Long, nulls: Boolean)
+  /** A live part file, with each provable key column's range. */
+  private case class PartFile(name: String, size: Long, keys: Map[String, KeyRange])
+  /** The stream batch that wrote a version. `query` is the id Spark
+    * keeps in the checkpoint: a checkpoint reset at one path is a new
+    * writer. */
+  private case class Writer(checkpoint: String, query: String, batch: Long)
+  /** One version of a table's log. `stage` names the staging directory
+    * of the files this version adds, until they are moved in. */
+  private case class Version(schema: String, files: Seq[PartFile],
+      dropped: Seq[String], stage: String, writer: Option[Writer])
 
-  private val tableRanges =
-    new java.util.concurrent.ConcurrentHashMap[String, TableRange]()
+  private implicit val logFormats: org.json4s.Formats = org.json4s.DefaultFormats
 
-  /** Part files a table may hold before an append is refused and the
-    * full merge compacts it. */
+  /** The files of a logged parquet table at `path`. */
+  private class TableFiles(val spark: SparkSession, path: String) {
+    val root = new Path(path)
+    val conf = GraftShim.hadoopConf(spark)
+    val fs = root.getFileSystem(conf)
+    val log = new Path(root, "_graft_log")
+    val stage = new Path(root, "_graft_stage")
+
+    def live(name: String): Path = new Path(root, name)
+    def staged(v: Version, name: String): Path = new Path(new Path(stage, v.stage), name)
+    def versionPath(v: Long): Path = new Path(log, s"$v.json")
+
+    /** The log's version numbers, ascending. */
+    def versions: Seq[Long] = list(log).map(_.getPath.getName)
+      .filter(_.matches("""\d+\.json""")).map(_.stripSuffix(".json").toLong).sorted
+
+    def read(v: Long): Version = {
+      val in = fs.open(versionPath(v))
+      try Serialization.read[Version](new String(in.readAllBytes(), "UTF-8"))
+      finally in.close()
+    }
+
+    /** The commit point: create version `v`, failing if it exists. */
+    def create(v: Long, version: Version): Unit = {
+      fs.mkdirs(log)
+      val fm = CheckpointFileManager.create(log, conf)
+      try writeAtomic(fm, versionPath(v), Serialization.write(version), overwrite = false)
+      finally fm.close()
+    }
+
+    /** The part files a parquet reader of `dir` lists, name → size. */
+    def filesIn(dir: Path): Map[String, Long] = list(dir)
+      .filter(s => s.isFile && !"_.".contains(s.getPath.getName.head))
+      .map(s => s.getPath.getName -> s.getLen).toMap
+
+    private def list(dir: Path): Seq[FileStatus] =
+      try fs.listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** Part files a table may hold before the smallest are compacted. */
   private val MaxAppendFiles = 256
 
   /** An order-preserving long for the key types whose order can prove
@@ -188,8 +261,22 @@ object Sinks {
     case _ => None
   }
 
-  /** Write `df` over `dir` as parquet, observing its row count and each
-    * key column's [[KeyRange]] on the same job.
+  /** Per provable key column `k`: its ordinal's min and max and its
+    * null count, as `lo_k`, `hi_k` and `nulls_k`. */
+  private def rangeAggs(schema: StructType, keyCols: Seq[String]): Seq[Column] =
+    keyCols.flatMap(k => ordinalOf(col(k), schema(k).dataType).toSeq.flatMap(o =>
+      Seq(min(o).as(s"lo_$k"), max(o).as(s"hi_$k"), count_if(col(k).isNull).as(s"nulls_$k"))))
+
+  /** The [[KeyRange]]s that [[rangeAggs]]' values (by name) give. */
+  private def rangesOf(get: String => Any, schema: StructType,
+      keyCols: Seq[String]): Map[String, KeyRange] =
+    keyCols.filter(k => ordinalOf(col(k), schema(k).dataType).nonEmpty).map { k =>
+      def long(name: String, none: Long) = Option(get(s"${name}_$k")).fold(none)(_.asInstanceOf[Long])
+      k -> KeyRange(long("lo", Long.MaxValue), long("hi", Long.MinValue), long("nulls", 0L) > 0)
+    }.toMap
+
+  /** Write `df` under `dir` as parquet, observing its row count and
+    * each key column's [[KeyRange]] on the same job.
     *
     * The write is coalesced to one part file per AQE advisory partition
     * size (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) of the
@@ -198,134 +285,36 @@ object Sinks {
     * key, so the dedup adds none: without this, a live batch of 50 rows
     * lands as one file per state partition.
     */
-  private def writeObserved(df: DataFrame, dir: java.io.File,
-      keyCols: Seq[String]): (Long, Seq[Option[KeyRange]]) = {
+  private def writeObserved(df: DataFrame, dir: Path,
+      keyCols: Seq[String]): (Long, Map[String, KeyRange]) = {
     val target = JavaUtils.byteStringAsBytes(df.sparkSession.conf.get(
       "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")).max(1L)
     val files = ((df.queryExecution.analyzed.stats.sizeInBytes + target - 1) / target)
       .max(1).min(Int.MaxValue).toInt
-    val ordinals = keyCols.map(k => ordinalOf(col(k), df.select(k).schema.head.dataType))
-    val ranges = ordinals.zipWithIndex.collect { case (Some(o), i) =>
-      Seq(min(o).as(s"lo$i"), max(o).as(s"hi$i"),
-        count_if(col(keyCols(i)).isNull).as(s"nulls$i"))
-    }.flatten
     val obs = Observation()
-    df.coalesce(files).observe(obs, count(lit(1)).as("rows"), ranges: _*)
-      .write.mode(SaveMode.Overwrite).parquet(dir.getPath)
+    df.coalesce(files).observe(obs, count(lit(1)).as("rows"), rangeAggs(df.schema, keyCols): _*)
+      .write.mode(SaveMode.Overwrite).parquet(dir.toString)
     val m = obs.get
-    val keys = ordinals.indices.map { i =>
-      if (ordinals(i).isEmpty) None
-      else Some(KeyRange(
-        Option(m(s"lo$i")).map(lo => (lo.asInstanceOf[Long], m(s"hi$i").asInstanceOf[Long])),
-        m(s"nulls$i").asInstanceOf[Long] > 0))
-    }
-    (m("rows").asInstanceOf[Long], keys)
+    (m("rows").asInstanceOf[Long], rangesOf(m, df.schema, keyCols))
+  }
+
+  /** The part files `files` (name → size) of the table `t`, with their
+    * key ranges observed on one read. */
+  private def observeFiles(t: TableFiles, files: Map[String, Long], schema: StructType,
+      keyCols: Seq[String]): Seq[PartFile] = {
+    val aggs = rangeAggs(schema, keyCols)
+    val observed = if (files.isEmpty || aggs.isEmpty) Map.empty[String, Row]
+      else t.spark.read.schema(schema).parquet(files.keys.map(t.live(_).toString).toSeq: _*)
+        .groupBy(col("_metadata.file_name").as("file")).agg(aggs.head, aggs.tail: _*)
+        .collect().map(r => r.getAs[String]("file") -> r).toMap
+    files.map { case (name, size) =>
+      PartFile(name, size, rangesOf(c => observed.get(name).map(_.getAs[Any](c)).orNull,
+        schema, keyCols))
+    }.toSeq
   }
 
   private def disjoint(a: KeyRange, b: KeyRange): Boolean =
-    !(a.nulls && b.nulls) && ((a.bounds, b.bounds) match {
-      case (Some((aLo, aHi)), Some((bLo, bHi))) => aHi < bLo || bHi < aLo
-      case _ => true
-    })
-
-  private def widen(a: KeyRange, b: KeyRange): KeyRange =
-    KeyRange((a.bounds ++ b.bounds).reduceOption { (x, y) =>
-      (math.min(x._1, y._1), math.max(x._2, y._2))
-    }, a.nulls || b.nulls)
-
-  private def layoutOf(df: DataFrame): Seq[(String, DataType)] =
-    df.schema.map(f => f.name -> f.dataType)
-
-  /** The entries a parquet reader of `dir` lists, name → size. */
-  private def filesOf(dir: java.io.File): Map[String, Long] =
-    Option(dir.listFiles()).toSeq.flatten
-      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-      .map(f => f.getName -> f.length).toMap
-
-  private def move(from: java.io.File, to: java.io.File, name: String): Unit =
-    java.nio.file.Files.move(new java.io.File(from, name).toPath,
-      new java.io.File(to, name).toPath): Unit
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
-  /** Partition-aware upsert: merge `updates` into a table
-    * partitioned by `partitionCol`, rewriting ONLY the partitions the
-    * update batch touches (dynamic partition overwrite). This is the
-    * 100 TB sink shape — a daily tick batch touches a handful of date
-    * partitions, so the merge reads and rewrites O(batch) data, not
-    * O(table) like a whole-table swap.
-    *
-    * Same merge contract as [[upsertParquet]]: one row per `keyCols`
-    * survives per partition, newest by `versionCol`, ties → update
-    * wins.
-    */
-  def upsertPartitioned(updates: DataFrame, path: String,
-      keyCols: Seq[String], versionCol: String, partitionCol: String): Unit = {
-    val spark = updates.sparkSession
-    val touched = updates.select(partitionCol).distinct().collect()
-      .map(_.get(0))
-    // a null partition value would silently vanish (the pruning
-    // filter below can't isin-match null and dynamic overwrite would
-    // write it unmerged to the default partition) — reject upfront
-    require(!touched.contains(null),
-      s"upsertPartitioned: null $partitionCol in update batch")
-    if (touched.isEmpty) return
-    val existing =
-      if (new java.io.File(path).exists())
-        // filter on the partition column prunes to touched partitions
-        // at the file-listing level (verified in SinksSpec's plan check)
-        Some(spark.read.parquet(path)
-          .filter(col(partitionCol).isin(touched.toIndexedSeq: _*)))
-      else None
-    val merged = mergeByKey(existing, updates, keyCols, versionCol)
-    // materialize before writing: Spark (correctly) refuses to
-    // overwrite a path its plan still reads; the eager localCheckpoint
-    // truncates lineage and is O(touched partitions), not O(table)
-    val materialized = merged.localCheckpoint(true)
-    materialized.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(path)
-  }
-
-  /** Small-file compaction for a partitioned table: incremental
-    * upserts leave one file per merge per partition; over time a hot
-    * partition accumulates hundreds of small files and scan tasks
-    * drown in open/seek overhead. Rewrites every partition whose file
-    * count exceeds `maxFiles` down to `targetFiles` files, leaving
-    * compact partitions untouched (their bytes stay as-is — safe to
-    * run concurrently with readers of other partitions).
-    */
-  def compactPartitions(spark: SparkSession, path: String,
-      partitionCol: String, maxFiles: Int = 8, targetFiles: Int = 1): Unit = {
-    val root = new java.io.File(path)
-    if (!root.exists()) return
-    val needCompaction = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith(partitionCol + "="))
-      .filter(d => d.listFiles().count(_.getName.endsWith(".parquet")) > maxFiles)
-    if (needCompaction.isEmpty) return
-    // Hive dir-name escaping percent-encodes specials but leaves '+'
-    // literal — URLDecoder would corrupt it to a space, so decode
-    // only %XX sequences
-    def unescape(s: String): String =
-      "%([0-9A-Fa-f]{2})".r.replaceAllIn(s,
-        m => java.util.regex.Matcher.quoteReplacement(
-          Integer.parseInt(m.group(1), 16).toChar.toString))
-    val values = needCompaction.map(_.getName.stripPrefix(partitionCol + "="))
-      .map(unescape)
-    val compacted = spark.read.parquet(path)
-      .filter(col(partitionCol).cast("string").isin(values.toIndexedSeq: _*))
-      .repartition(targetFiles)
-      .localCheckpoint(true) // reading + overwriting the same path
-    compacted.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(path)
-  }
+    !(a.nulls && b.nulls) && (a.hi < b.lo || b.hi < a.lo)
 
   /** COMPANIES-DIM WRITE PATH — the reference's dim maintenance
     * (utils/company_manager.py:62-122 get_or_create_company, :215-252
@@ -341,9 +330,9 @@ object Sinks {
     * one row per key survives, `action` says what the merge did.
     *
     * Scale shape: ONE key-partitioned window over base ∪ batch — at a
-    * real dim size the batch is tiny and [[upsertPartitioned]]'s
-    * partition pruning bounds the rewrite; the query form grades the
-    * merge algebra.
+    * real dim size the batch is tiny and [[upsertParquet]] rewrites
+    * only the part files whose key ranges it meets; the query form
+    * grades the merge algebra.
     */
   def companyUpsert(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.Tables.customer(spark, dir)
@@ -377,9 +366,9 @@ object Sinks {
     * carry TWO rows (v0 closed + v1 current), carried keys one open
     * v0 row, inserted keys one open v1 row. An SCD-2 merge is pure
     * append algebra — one key-partitioned window computes valid_to as
-    * the next version's stamp — so at scale it rides the identical
-    * partition-pruned write path as [[upsertPartitioned]] with NO
-    * read-modify-write of history (closed rows never change).
+    * the next version's stamp — so at scale it rides [[upsertParquet]],
+    * which rewrites only the files whose key ranges a batch meets, with
+    * NO read-modify-write of history (closed rows never change).
     */
   def companyScd2(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.Tables.customer(spark, dir)
@@ -486,22 +475,12 @@ object Sinks {
       .start()
   }
 
-  // a missing, unreadable or truncated ledger degrades to RE-APPLY —
-  // the merge is idempotent — never to a permanently failing sink
-  private def committedBatch(fm: CheckpointFileManager, ledger: Path): Long =
-    scala.util.Try {
-      val in = fm.open(ledger)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }.getOrElse(-1L)
-
-  /** One exactly-once microbatch commit: run `apply`, then record the
-    * batch id in the ledger file. A RE-DELIVERED batch (id ≤ ledger)
-    * is skipped entirely. foreachBatch is at-least-once after
-    * failures; the merge body is already idempotent per key, so the
-    * ledger's job is to also make side effects (file churn, write
-    * amplification) happen once per batch. Returns true when the batch
-    * was applied.
+  /** One exactly-once microbatch commit of [[streamUpsertJdbc]]: run
+    * `apply`, then record the batch id in the ledger file. A
+    * RE-DELIVERED batch (id ≤ ledger) is skipped entirely. foreachBatch
+    * is at-least-once after failures; the MERGE is already idempotent
+    * per key, so the ledger makes its side effects happen once per
+    * batch too. Returns true when the batch was applied.
     *
     * The ledger lives with the CHECKPOINT, not the table: batch ids
     * are only monotonic within one checkpoint lineage, so a checkpoint
@@ -509,37 +488,51 @@ object Sinks {
     * idempotently instead of silently dropping the first batches. It
     * is read and written through Spark's checkpoint file manager, as
     * the checkpoint itself is: a Hadoop path (file:/, hdfs://,
-    * s3a://...) replaced by an atomic create.
+    * s3a://...) replaced by an atomic create — on `file:` a rename
+    * that deletes the old ledger first, a window that re-applies too.
     */
   private[graft] def commitOnce(spark: SparkSession, ledgerPath: String,
       batchId: Long)(apply: => Unit): Boolean = {
     val ledger = new Path(ledgerPath)
     val fm = CheckpointFileManager.create(ledger, GraftShim.hadoopConf(spark))
     try {
-      if (batchId <= committedBatch(fm, ledger)) return false
+      // a missing, unreadable or truncated ledger degrades to RE-APPLY —
+      // the merge is idempotent — never to a permanently failing sink
+      val committed = scala.util.Try {
+        val in = fm.open(ledger)
+        try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
+      }.getOrElse(-1L)
+      if (batchId <= committed) return false
       apply
       fm.mkdirs(ledger.getParent)
-      val out = fm.createAtomic(ledger, overwriteIfPossible = true)
-      try out.write(batchId.toString.getBytes("UTF-8"))
-      catch { case e: Throwable => out.cancel(); throw e }
-      out.close()
+      writeAtomic(fm, ledger, batchId.toString, overwrite = true)
       true
     } finally fm.close()
   }
 
+  /** Write `text` to `file` with `fm`'s atomic create. */
+  private def writeAtomic(fm: CheckpointFileManager, file: Path, text: String,
+      overwrite: Boolean): Unit = {
+    val out = fm.createAtomic(file, overwrite)
+    try out.write(text.getBytes("UTF-8")) catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
+  }
+
   /** Streaming sink: the consumer→database leg (consumer/consumer.py
     * + analytics_consumer.py:97-192) as a foreachBatch [[upsertParquet]]
-    * under the per-batch commit ledger — exactly-once in effects as
-    * well as in results: Structured Streaming replays the last
-    * uncommitted microbatch after a crash, and the ledger makes the
-    * replay a no-op when the previous attempt got through.
+    * that records each batch's checkpoint and id in the version it
+    * creates — exactly-once in effects as well as in results:
+    * Structured Streaming replays the last uncommitted microbatch after
+    * a crash, and a batch the table's latest version already shows is
+    * skipped. Batch ids are monotonic only within one checkpoint, so a
+    * reset checkpoint (ids from 0 again, a new query id) re-applies
+    * idempotently instead of dropping its first batches.
     */
   def streamUpsertExactlyOnce(ticks: DataFrame, path: String, checkpoint: String,
       keyCols: Seq[String], versionCol: String): StreamingQuery =
     startForeachBatch(ticks, checkpoint) { (batch, id) =>
-      commitOnce(batch.sparkSession, s"$checkpoint/graft.commit", id) {
-        upsertParquet(batch, path, keyCols, versionCol)
-      }: Unit
+      val query = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+      upsertLogged(batch, path, keyCols, versionCol, Some(Writer(checkpoint, query, id))): Unit
     }
 
   // ---------------------------------------------------------------- JDBC

@@ -991,18 +991,19 @@ object TickStream extends Serializable {
     * `(lastMicros, lastEventId)` is the event-time high-water mark for
     * the late-data guard — the event id breaks timestamp ties exactly
     * like the batch dual's (ts, event_id) ordering, and makes an exact
-    * re-delivery of the last tick drop instead of double-counting.
-    * `prices` stays a `List[Double]`, so a state restored from a
-    * checkpoint written with a longer history (64 prices in earlier
-    * builds) keeps the same encoder schema and trims itself to
-    * [[MaxHistory]] on its next tick.
+    * re-delivery of an accepted tick drop instead of double-counting.
+    * `ring` holds the prices as raw IEEE-754 doubles, tick `k` in slot
+    * `(k - 1) % MaxHistory`, updated in place: a binary field decodes
+    * without `MapObjects`, which resolves with fresh lambda ids in each
+    * microbatch and so compiles a new state decoder every time.
     *
-    * NOTE: adding state fields changes the flatMapGroupsWithState
-    * encoder schema — a checkpoint written by an older build cannot
-    * resume on this one (Spark rejects the state schema); restart
-    * streaming jobs with a fresh checkpoint across upgrades.
+    * NOTE: changing the state fields changes the flatMapGroupsWithState
+    * encoder schema — a checkpoint written by an older build (a
+    * `prices` list) cannot resume on this one (Spark rejects the state
+    * schema); restart streaming jobs with a fresh checkpoint across
+    * upgrades.
     */
-  case class IndicatorState(prices: List[Double], ema12: Double, ema26: Double,
+  case class IndicatorState(ring: Array[Byte], ema12: Double, ema26: Double,
       n: Long, retN: Long = 0L, retMean: Double = 0.0, retM2: Double = 0.0,
       lastMicros: Long = Long.MinValue, lastEventId: Long = Long.MinValue)
 
@@ -1040,40 +1041,43 @@ object TickStream extends Serializable {
     */
   def updateIndicators(userId: Long, ticks: Iterator[Tick],
       state: GroupState[IndicatorState]): Iterator[IndicatorRow] = {
-    var st = state.getOption.getOrElse(IndicatorState(Nil, 0.0, 0.0, 0L))
-    // late-data guard: a tick at or before the state's (ts, event_id)
-    // high-water mark (out-of-order ACROSS microbatches — within one
-    // batch we sort) would silently corrupt the recurrences or
-    // double-count a re-delivery; drop it like a watermark would
-    val out = ticks.toSeq.sortBy(t => (tsMicros(t.ts), t.event_id))
-      .filter(t => ordAfter(tsMicros(t.ts), t.event_id,
-        st.lastMicros, st.lastEventId))
-      .map { t =>
-      val n = st.n + 1
-      val e12 = if (n == 1) t.value else t.value * K12 + st.ema12 * (1.0 - K12)
-      val e26 = if (n == 1) t.value else t.value * K26 + st.ema26 * (1.0 - K26)
-      // Welford update on this tick's return (defined from tick 2 on)
-      var (rN, rMean, rM2) = (st.retN, st.retMean, st.retM2)
-      if (n > 1) {
-        val ret = (t.value - st.prices.last) / st.prices.last
-        rN += 1
-        val d = ret - rMean
-        rMean += d / rN
-        rM2 += d * (ret - rMean)
+    var st = state.getOption.getOrElse(IndicatorState(new Array[Byte](MaxHistory * 8), 0.0, 0.0, 0L))
+    val ring = java.nio.ByteBuffer.wrap(st.ring)
+    def slot(k: Long): Int = ((k - 1) % MaxHistory).toInt * 8
+    def price(k: Long): Double = ring.getDouble(slot(k))
+    // late-data guard: a tick at or before the (ts, event_id) of the
+    // last tick accepted (out-of-order ACROSS microbatches — within one
+    // batch we sort — or re-delivered) would silently corrupt the
+    // recurrences or double-count; drop it like a watermark would
+    val out = ticks.toSeq.sortBy(t => (tsMicros(t.ts), t.event_id)).flatMap { t =>
+      if (!ordAfter(tsMicros(t.ts), t.event_id, st.lastMicros, st.lastEventId)) None
+      else {
+        val n = st.n + 1
+        val e12 = if (n == 1) t.value else t.value * K12 + st.ema12 * (1.0 - K12)
+        val e26 = if (n == 1) t.value else t.value * K26 + st.ema26 * (1.0 - K26)
+        // Welford update on this tick's return (defined from tick 2 on)
+        var (rN, rMean, rM2) = (st.retN, st.retMean, st.retM2)
+        if (n > 1) {
+          val ret = (t.value - price(n - 1)) / price(n - 1)
+          rN += 1
+          val d = ret - rMean
+          rMean += d / rN
+          rM2 += d * (ret - rMean)
+        }
+        ring.putDouble(slot(n), t.value)
+        st = st.copy(ema12 = e12, ema26 = e26, n = n, retN = rN, retMean = rMean,
+          retM2 = rM2, lastMicros = tsMicros(t.ts), lastEventId = t.event_id)
+        val rsi = if (n >= 15) {
+          val deltas = (n - 13 to n).map(k => price(k) - price(k - 1))
+          val g = deltas.foldLeft(0.0)((a, d) => a + math.max(d, 0.0)) / 14.0
+          val l = deltas.foldLeft(0.0)((a, d) => a + math.max(-d, 0.0)) / 14.0
+          Some(if (l == 0.0) 100.0 else 100.0 - 100.0 / (1.0 + g / l))
+        } else None
+        val sma = if (n >= 20) Some((n - 19 to n).foldLeft(0.0)(_ + price(_)) / 20.0) else None
+        val vol = if (n >= 21) Some(math.sqrt(rM2 / rN) * math.sqrt(252.0)) else None
+        Some(IndicatorRow(userId, t.event_id, t.ts, t.value, rsi, sma,
+          if (n >= 12) Some(e12) else None, if (n >= 26) Some(e26) else None, vol))
       }
-      val prices = (st.prices :+ t.value).takeRight(MaxHistory)
-      st = IndicatorState(prices, e12, e26, n, rN, rMean, rM2,
-        tsMicros(t.ts), t.event_id)
-      val rsi = if (prices.length >= 15) {
-        val deltas = prices.takeRight(15).sliding(2).map(p => p(1) - p(0)).toArray
-        val g = deltas.map(d => math.max(d, 0.0)).sum / 14.0
-        val l = deltas.map(d => math.max(-d, 0.0)).sum / 14.0
-        Some(if (l == 0.0) 100.0 else 100.0 - 100.0 / (1.0 + g / l))
-      } else None
-      val sma = if (prices.length >= 20) Some(prices.takeRight(20).sum / 20.0) else None
-      val vol = if (n >= 21) Some(math.sqrt(rM2 / rN) * math.sqrt(252.0)) else None
-      IndicatorRow(userId, t.event_id, t.ts, t.value, rsi, sma,
-        if (n >= 12) Some(e12) else None, if (n >= 26) Some(e26) else None, vol)
     }
     state.update(st)
     out.iterator
@@ -1117,17 +1121,14 @@ object TickStream extends Serializable {
       val out = Seq.newBuilder[SessionRow]
       var st = state.getOption.orNull
       // late-data guard: see updateIndicators — a tick at or before
-      // the open session's (end, event_id) mark would produce sessions
-      // that run backwards or double-count a re-delivery
-      val (hwM, hwId) =
-        if (st == null) (Long.MinValue, Long.MinValue)
-        else (st.endMicros, st.lastEventId)
-      ts.toSeq.sortBy(t => (tsMicros(t.ts), t.event_id))
-        .filter(t => ordAfter(tsMicros(t.ts), t.event_id, hwM, hwId))
-        .foreach { t =>
+      // the last accepted tick's (ts, event_id), the open session's
+      // (end, event_id), would produce sessions that run backwards or
+      // double-count a re-delivery
+      ts.toSeq.sortBy(t => (tsMicros(t.ts), t.event_id)).foreach { t =>
         val micros = tsMicros(t.ts)
         if (st == null)
           st = SessionState(0L, micros, micros, 1L, t.value, t.event_id)
+        else if (!ordAfter(micros, t.event_id, st.endMicros, st.lastEventId)) ()
         else if (micros / 1e6 - st.endMicros / 1e6 > SessionGapSec) {
           out += closedRow(userId, st)
           st = SessionState(st.sessionId + 1, micros, micros, 1L, t.value, t.event_id)

@@ -87,72 +87,6 @@ class SinksSpec extends SparkSuite {
     assert(spark.read.parquet(path).count() == 1)
   }
 
-  test("upsertPartitioned merges by key and rewrites only touched partitions") {
-    val path = java.nio.file.Files.createTempDirectory("upsert_part").toString + "/t"
-    val batch1 = Seq(
-      (1L, 1L, 10.0, "2024-01-01"), (2L, 1L, 20.0, "2024-01-01"),
-      (3L, 1L, 30.0, "2024-01-02"), (4L, 1L, 40.0, "2024-01-03"))
-      .toDF("id", "v", "price", "day")
-    Sinks.upsertPartitioned(batch1, path, Seq("id"), "v", "day")
-
-    def filesOf(day: String): Map[String, Long] = {
-      val d = new java.io.File(s"$path/day=$day")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    val d2Before = filesOf("2024-01-02")
-    val d3Before = filesOf("2024-01-03")
-
-    // update a 01-01 key, add a new key to 01-01 — other days untouched
-    val batch2 = Seq(
-      (2L, 2L, 21.0, "2024-01-01"), (9L, 1L, 90.0, "2024-01-01"))
-      .toDF("id", "v", "price", "day")
-    Sinks.upsertPartitioned(batch2, path, Seq("id"), "v", "day")
-
-    assert(filesOf("2024-01-02") == d2Before, "untouched partition rewritten")
-    assert(filesOf("2024-01-03") == d3Before, "untouched partition rewritten")
-    val result = spark.read.parquet(path)
-    assert(result.count() == 5)
-    val id2 = result.filter("id = 2").head
-    assert(id2.getAs[Double]("price") == 21.0, "id=2 should take newer version")
-    assert(result.filter("id = 9").count() == 1)
-  }
-
-  test("upsertPartitioned is idempotent per partition") {
-    val path = java.nio.file.Files.createTempDirectory("upsert_part_idem").toString + "/t"
-    val batch = Seq((1L, 1L, 10.0, "2024-01-01")).toDF("id", "v", "price", "day")
-    Sinks.upsertPartitioned(batch, path, Seq("id"), "v", "day")
-    Sinks.upsertPartitioned(batch, path, Seq("id"), "v", "day")
-    assert(spark.read.parquet(path).count() == 1)
-  }
-
-  test("compactPartitions shrinks fragmented partitions, leaves compact ones") {
-    val path = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
-    // fragment day 1 with 12 single-row appends; day 2 stays compact
-    (1 to 12).foreach { i =>
-      Seq((i.toLong, i * 1.0, "2024-01-01")).toDF("id", "price", "day")
-        .coalesce(1).write.mode("append").partitionBy("day").parquet(path)
-    }
-    Seq((100L, 1.0, "2024-01-02"), (101L, 2.0, "2024-01-02")).toDF("id", "price", "day")
-      .coalesce(1).write.mode("append").partitionBy("day").parquet(path)
-
-    def files(day: String): Map[String, Long] = {
-      val d = new java.io.File(s"$path/day=$day")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    assert(files("2024-01-01").size == 12)
-    val d2Before = files("2024-01-02")
-    val before = spark.read.parquet(path).collect().map(_.toString).sorted
-
-    Sinks.compactPartitions(spark, path, "day", maxFiles = 8, targetFiles = 1)
-
-    assert(files("2024-01-01").size == 1, "fragmented partition not compacted")
-    assert(files("2024-01-02") == d2Before, "compact partition was rewritten")
-    val after = spark.read.parquet(path).collect().map(_.toString).sorted
-    assert(before.sameElements(after), "compaction changed the data")
-  }
-
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
@@ -215,8 +149,11 @@ class SinksSpec extends SparkSuite {
       Seq("user_id", "ts"), "event_id")
     assert(rowsOf(landed) == rowsOf(spark.read.parquet(s"$out/batch")),
       "the stream must land what one batch upsert of the same input does")
-    // ledger recorded the last batch, namespaced under the checkpoint
-    assert(new java.io.File(s"$out/ckpt/graft.commit").exists())
+    // the table's latest version records the checkpoint; no ledger
+    val log = new java.io.File(s"$out/table/_graft_log").listFiles()
+      .filter(_.getName.endsWith(".json")).maxBy(_.getName.stripSuffix(".json").toLong)
+    assert(java.nio.file.Files.readString(log.toPath).contains(s"\"checkpoint\":\"$out/ckpt\""))
+    assert(!new java.io.File(s"$out/ckpt/graft.commit").exists())
   }
 
   private def readJdbc(url: String, table: String) =
@@ -311,38 +248,6 @@ class SinksSpec extends SparkSuite {
     assert(first.head.size == 2)
     // each table re-applies the batch in the other union order
     assert(applyAll(orders.reverse) == first, "re-applying a batch changed a table")
-  }
-
-  test("upsertParquet recovers from each crash point of its swap") {
-    val b1 = Seq((1L, 1L, 10.0), (2L, 1L, 20.0)).toDF("id", "v", "price")
-    val b2 = Seq((2L, 2L, 21.0), (3L, 1L, 30.0)).toDF("id", "v", "price")
-    val stale = Seq((9L, 9L, 99.0)).toDF("id", "v", "price")
-    val dir = java.nio.file.Files.createTempDirectory("swap_crash").toString
-    def upsert(u: org.apache.spark.sql.DataFrame, path: String): Unit =
-      Sinks.upsertParquet(u, path, Seq("id"), "v")
-    def rename(from: String, to: String): Unit =
-      assert(new java.io.File(from).renameTo(new java.io.File(to)))
-    upsert(b1, s"$dir/expected")
-    upsert(b2, s"$dir/expected")
-    val expected = rowsOf(spark.read.parquet(s"$dir/expected"))
-    // each state is laid out over a table holding b1 (the last durable
-    // table); a leftover directory holds rows that must not survive
-    val crashes = Seq[(String, String => Unit)](
-      "staging written, live intact" -> { p =>
-        stale.write.parquet(s"$p.staging") },
-      "live renamed to .old, no live directory" -> { p =>
-        stale.write.parquet(s"$p.staging"); rename(p, s"$p.old") },
-      "staging promoted, .old left behind" -> { p =>
-        stale.write.parquet(s"$p.old") })
-    crashes.zipWithIndex.foreach { case ((state, crash), i) =>
-      val path = s"$dir/t$i"
-      upsert(b1, path)
-      crash(path)
-      upsert(b2, path)
-      assert(rowsOf(spark.read.parquet(path)) == expected, state)
-      assert(!new java.io.File(s"$path.old").exists() &&
-        !new java.io.File(s"$path.staging").exists(), s"$state: a swap dir is left")
-    }
   }
 
   test("upsertJdbc creates its target with a unique index on the key columns") {
@@ -486,18 +391,20 @@ class SinksSpec extends SparkSuite {
       val path = tempPath("file_bound")
       val batches = (0 until 5).map(i =>
         idRows((1 to 400).map(k => (i * 1000L + k, 1L, k.toDouble)): _*))
-      val counts = batches.map { b => upsertById(b, path); partFiles(path).size }
+      val tables = batches.map { b => upsertById(b, path); fileSizes(path) }
+      val counts = tables.map(_.size)
       val perWrite = counts.head
       assert(perWrite > 32, s"a write should spread over many files: $counts")
-      assert(counts.sliding(2).forall(p => p(1) > p(0) || p(1) <= perWrite),
-        s"file counts: $counts")
-      val crossed = counts.indexWhere(_ <= perWrite, 1)
+      assert(counts.forall(_ <= 256), s"the table passed the file bound: $counts")
+      val crossed = counts.indices.indexWhere(i => i > 0 && counts(i) <= counts(i - 1))
       assert(crossed > 1 && counts(crossed - 1) + perWrite > 256,
-        s"the merge ran before the bound was reached: $counts")
-      // a full merge of the same rows into a fresh table writes this many
-      val fresh = tempPath("file_bound_fresh")
-      upsertById(batches.take(crossed + 1).reduce(_ union _), fresh)
-      assert(counts(crossed) == partFiles(fresh).size, s"file counts: $counts")
+        s"compaction ran before the bound was reached: $counts")
+      // the compaction rewrote the smallest files and kept the others
+      val (prior, next) = (tables(crossed - 1), tables(crossed))
+      val (kept, compacted) = prior.partition { case (f, size) => next.get(f).contains(size) }
+      assert(kept.nonEmpty && compacted.nonEmpty, s"file counts: $counts")
+      assert(compacted.values.max <= kept.values.min,
+        "a larger file was compacted while a smaller one was kept")
       assertTable(path, rowsOf(batches.reduce(_ union _)), "after compaction")
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -519,11 +426,7 @@ class SinksSpec extends SparkSuite {
     upsertById(idRows(b2: _*), path)
     // a copy of the directory is a table no process has a record of
     val copy = tempPath("replay_fresh_copy")
-    val src = java.nio.file.Paths.get(path)
-    java.nio.file.Files.walk(src).forEach { f =>
-      java.nio.file.Files.copy(f, java.nio.file.Paths.get(copy).resolve(src.relativize(f)),
-        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-    }
+    copyDir(path, copy)
     upsertById(idRows(b2: _*), copy)
     assertTable(copy, mergedOnce(idRows(b1: _*), idRows(b2: _*)), "fresh replay")
   }
@@ -569,6 +472,187 @@ class SinksSpec extends SparkSuite {
     val r = spark.read.parquet(path).filter("id IN (1, 10)").orderBy("id").collect()
     assert(r(0).getAs[Double]("price") == 11.0, "the newer version must win")
     assert(r(1).getAs[Double]("price") == 100.0, "an older version must lose")
+  }
+
+  /** The data files of a table directory, name → size. */
+  private def fileSizes(path: String): Map[String, Long] =
+    new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.length).toMap
+
+  private def copyDir(from: String, to: String): Unit = {
+    val src = java.nio.file.Paths.get(from)
+    java.nio.file.Files.walk(src).forEach { f =>
+      java.nio.file.Files.copy(f, java.nio.file.Paths.get(to).resolve(src.relativize(f)),
+        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+    }
+  }
+
+  test("a fresh process appends its first key-disjoint batch, keeping every part file") {
+    // a copy of a logged table, and a table written without a log: no
+    // process has touched either
+    val written = tempPath("fresh_src")
+    upsertById(idRows(b1: _*), written)
+    val logged = tempPath("fresh_logged")
+    copyDir(written, logged)
+    val plain = tempPath("fresh_plain")
+    idRows(b1: _*).coalesce(1).write.parquet(plain)
+    for (path <- Seq(logged, plain)) {
+      val before = fileSizes(path)
+      upsertById(idRows(b2: _*), path)
+      val after = fileSizes(path)
+      assert(before.forall { case (f, size) => after.get(f).contains(size) },
+        s"$path: an existing part file was rewritten")
+      assert(after.size > before.size, s"$path: the batch's files were not moved in")
+      assertTable(path, mergedOnce(idRows(b1: _*), idRows(b2: _*)), path)
+    }
+  }
+
+  test("upsertParquet rewrites only the part files of the day an update touches") {
+    val path = tempPath("by_day")
+    def rows(rs: (String, Long, Long, Double)*): Frame =
+      rs.toDF("day", "id", "v", "price").withColumn("day", to_date(col("day")))
+    def upsert(b: Frame): Unit = Sinks.upsertParquet(b, path, Seq("day", "id"), "v")
+    // one upsert per day: the table is clustered by day
+    Seq(rows(("2024-01-01", 1L, 1L, 10.0), ("2024-01-01", 2L, 1L, 20.0)),
+      rows(("2024-01-02", 3L, 1L, 30.0)), rows(("2024-01-03", 4L, 1L, 40.0))).foreach(upsert)
+    val dayOf = spark.read.parquet(path).select(col("_metadata.file_name"), col("day").cast("string"))
+      .distinct().collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val before = partFiles(path)
+    assert(dayOf.size == 3 && dayOf.values.toSet.size == 3, s"files by day: $dayOf")
+    // update a 01-01 key and add one to 01-01: the other days stay
+    val update = rows(("2024-01-01", 2L, 2L, 21.0), ("2024-01-01", 9L, 1L, 90.0))
+    upsert(update)
+    val after = partFiles(path)
+    for ((f, day) <- dayOf)
+      assert(after.get(f).contains(before(f)) == (day != "2024-01-01"),
+        s"$day: its file was ${if (day == "2024-01-01") "kept" else "rewritten"}")
+    upsert(update) // re-applied: idempotent
+    val result = spark.read.parquet(path)
+    assert(result.count() == 5)
+    assert(result.groupBy("day", "id").count().filter("count > 1").isEmpty)
+    assert(result.filter("id = 2").head.getAs[Double]("price") == 21.0,
+      "id=2 should take the newer version")
+    assert(result.filter("id = 9").count() == 1)
+  }
+
+  test("upsertParquet re-applies a day update idempotently, keeping the other days' files") {
+    val path = tempPath("by_day_idem")
+    def rows(rs: (String, Long, Long, Double)*): Frame =
+      rs.toDF("day", "id", "v", "price").withColumn("day", to_date(col("day")))
+    def upsert(b: Frame): Unit = Sinks.upsertParquet(b, path, Seq("day", "id"), "v")
+    Seq(rows(("2024-01-01", 1L, 1L, 10.0)), rows(("2024-01-02", 2L, 1L, 20.0))).foreach(upsert)
+    val day2 = spark.read.parquet(path).filter("id = 2").select(col("_metadata.file_name"))
+      .collect().map(_.getString(0)).toSet
+    val update = rows(("2024-01-01", 1L, 1L, 10.0))
+    upsert(update)
+    val once = rowsOf(spark.read.parquet(path))
+    val before = partFiles(path)
+    upsert(update)
+    assert(rowsOf(spark.read.parquet(path)) == once, "the re-apply changed the table")
+    assert(once.size == 2, s"one row per key: $once")
+    assert(day2.nonEmpty && day2.forall(f => partFiles(path).get(f) == before.get(f)),
+      "the re-apply rewrote a file of the other day")
+  }
+
+  test("upsertParquet compacts a table fragmented into tiny files, keeping its large file") {
+    val path = tempPath("fragmented")
+    // a table written without the sink: one large file, 300 one-row files
+    idRows((10000L to 12000L).map(k => (k, 1L, k.toDouble)): _*)
+      .coalesce(1).write.parquet(path)
+    val large = fileSizes(path)
+    idRows((1L to 300L).map(k => (k, 1L, k.toDouble)): _*)
+      .coalesce(1).write.mode("append").option("maxRecordsPerFile", 1L).parquet(path)
+    val before = fileSizes(path)
+    assert(large.size == 1 && before.size == 301, s"${before.size} files")
+    val batch = idRows((20000L to 20002L).map(k => (k, 1L, k.toDouble)): _*)
+    val prior = rowsOf(spark.read.parquet(path))
+    upsertById(batch, path)
+    val after = fileSizes(path)
+    assert(after.size <= 256 && after.size < before.size, s"${after.size} files")
+    assert(large.forall { case (f, size) => after.get(f).contains(size) },
+      "the large file was rewritten")
+    val (kept, compacted) = before.partition { case (f, size) => after.get(f).contains(size) }
+    assert(compacted.nonEmpty && compacted.values.max <= kept.values.min,
+      "a larger file was compacted while a smaller one was kept")
+    assertTable(path, (prior ++ rowsOf(batch)).sorted, "after compaction")
+  }
+
+  private class Stopped extends RuntimeException
+
+  /** The part-file names the table's latest version lists. */
+  private def listed(path: String): Set[String] =
+    Sinks.readTable(spark, path).inputFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
+
+  test("upsertParquet recovers from a stop after each commit step") {
+    val appended = idRows(b2: _*)
+    val merged = idRows((2L, 2L, 21.0), (7L, 1L, 70.0))
+    for ((batch, kind) <- Seq(appended -> "append", merged -> "merge");
+         step <- Seq("staged", "committed", "revealed", "dropped")) {
+      val clue = s"$kind, stopped after $step"
+      val path = tempPath(s"stop_${kind}_$step")
+      upsertById(idRows(b1: _*), path)
+      val before = rowsOf(Sinks.readTable(spark, path))
+      val after = mergedOnce(idRows(b1: _*), batch)
+      Sinks.stopAt = s => if (s == step) throw new Stopped
+      try intercept[Stopped](upsertById(batch, path)) finally Sinks.stopAt = _ => ()
+      assert(rowsOf(Sinks.readTable(spark, path)) == (if (step == "staged") before else after),
+        s"$clue: readTable is not the last committed version")
+      upsertById(batch, path)
+      assertTable(path, after, clue)
+      assert(rowsOf(Sinks.readTable(spark, path)) == after, clue)
+      assert(!new java.io.File(s"$path/_graft_stage").exists(), s"$clue: staged files remain")
+      assert(partFiles(path).keySet == listed(path), s"$clue: an unlisted part file remains")
+    }
+  }
+
+  test("streamUpsertExactlyOnce skips a replayed batch and re-applies after a checkpoint reset") {
+    val input = java.nio.file.Files.createTempDirectory("replay_in")
+    val batches = Seq(idRows(b1: _*), idRows(b2: _*))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val dir = input.resolve(s"b$i").toString
+      b.coalesce(1).write.parquet(dir)
+      val dst = input.resolve(f"part$i%02d.parquet")
+      java.nio.file.Files.move(java.nio.file.Paths.get(dir, partFiles(dir).keys.head), dst)
+      assert(dst.toFile.setLastModified(1700000000000L + i * 60000L))
+    }
+    val out = java.nio.file.Files.createTempDirectory("replay_out").toString
+    def run(): Unit = {
+      val q = Sinks.streamUpsertExactlyOnce(spark.readStream.schema(batches.head.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$input/*.parquet"),
+        s"$out/table", s"$out/ckpt", Seq("id"), "v")
+      try q.processAllAvailable() finally q.stop()
+    }
+    val expected = mergedOnce(batches.head, batches(1))
+    run()
+    val files = partFiles(s"$out/table")
+    assertTable(s"$out/table", expected, "first run")
+    // the commit of batch 1 is lost: the restarted query replays it
+    Seq("1", ".1.crc").foreach(f => new java.io.File(s"$out/ckpt/commits/$f").delete())
+    run()
+    assert(partFiles(s"$out/table") == files, "the replayed batch touched the table")
+    // a reset checkpoint numbers its batches from 0 again
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$out/ckpt"))
+    run()
+    assert(partFiles(s"$out/table") != files, "the reset checkpoint's batches were skipped")
+    assertTable(s"$out/table", expected, "after the reset")
+  }
+
+  test("commitOnce re-runs the MERGE when the ledger is lost between two applications") {
+    val dir = java.nio.file.Files.createTempDirectory("ledger_window").toString
+    val url = s"jdbc:derby:$dir/db;create=true"
+    val ledger = s"$dir/ckpt/graft.commit"
+    val batch = Seq((1L, 1L, 10.0, "a"), (2L, 1L, 20.0, "b")).toDF("id", "v", "price", "tag")
+    def applyOnce(): Boolean = Sinks.commitOnce(spark, ledger, 3L) {
+      Sinks.upsertJdbc(batch, url, "win", Seq("id"), "v")
+    }
+    assert(applyOnce())
+    val before = rowsOf(readJdbc(url, "win"))
+    assert(!applyOnce(), "a recorded batch must be skipped")
+    // on file: the ledger's overwriting rename deletes the old ledger first
+    Seq("graft.commit", ".graft.commit.crc").foreach(f => new java.io.File(s"$dir/ckpt/$f").delete())
+    assert(applyOnce(), "with no ledger the batch must be applied again")
+    assert(rowsOf(readJdbc(url, "win")) == before, "the second MERGE changed the target")
+    assert(readJdbc(url, "win").groupBy("id").count().filter("count > 1").isEmpty)
   }
 
   // --------------------------------------- upsertJdbc on a pre-existing target

@@ -472,6 +472,66 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
+  private type RawTick = (Long, java.sql.Timestamp, Long, Double)
+
+  /** A MemoryStream of (event_id, ts, user_id, value) ticks, and the
+    * tick frame over it. */
+  private def tickStream() = {
+    import spark.implicits._
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[RawTick](
+      implicitly[org.apache.spark.sql.Encoder[RawTick]], spark.sqlContext)
+    (mem, mem.toDF().toDF("event_id", "ts", "user_id", "value"))
+  }
+
+  private def startToMemory(df: org.apache.spark.sql.DataFrame, name: String) =
+    df.writeStream.outputMode("append").format("memory").queryName(name)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory(s"ckpt_$name").toString)
+      .start()
+
+  test("a tick re-delivered inside one microbatch counts once, wherever the batch boundary falls") {
+    def tick(i: Int): RawTick =
+      (i.toLong, new java.sql.Timestamp(i * 60000L), 7L, 100.0 + i * 0.5 + (i % 3))
+    val ticks = (1 to 30).map(tick)
+    // 3 h after the last tick: closes the session and shows the state
+    val probe = Seq((99L, new java.sql.Timestamp(30 * 60000L + 3 * 3600000L), 7L, 50.0))
+    var runs = 0
+    def run(deliveries: Seq[RawTick]*): (Seq[String], Seq[String]) = {
+      runs += 1
+      val (mem, df) = tickStream()
+      val qi = startToMemory(TickStream.statefulIndicators(spark, df).toDF(), s"redeliver_ind$runs")
+      val qs = startToMemory(TickStream.sessionizeStream(spark, df).toDF(), s"redeliver_sess$runs")
+      try (deliveries :+ probe).foreach { d =>
+        mem.addData(d)
+        qi.processAllAvailable()
+        qs.processAllAvailable()
+      } finally { qi.stop(); qs.stop() }
+      def rows(t: String) = spark.table(t).collect().map(_.toString).sorted.toSeq
+      (rows(s"redeliver_ind$runs"), rows(s"redeliver_sess$runs"))
+    }
+    val clean = run(ticks)
+    assert(clean._2.size == 1, s"the probe should close one session: ${clean._2}")
+    // tick 12 twice in one microbatch, then split across two
+    assert(run(ticks.take(12) ++ ticks.drop(11)) == clean,
+      "a re-delivery inside one microbatch was counted")
+    assert(run(ticks.take(12), ticks.drop(11)) == clean,
+      "a re-delivery across microbatches was counted")
+  }
+
+  test("the indicator state decoder compiles once, not once per microbatch") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (mem, df) = tickStream()
+    val q = startToMemory(TickStream.statefulIndicators(spark, df).toDF(), "compile_ind")
+    val compiled = try (0 until 10).map { b =>
+      mem.addData((1 to 6).map(j => (b * 6L + j, new java.sql.Timestamp((b * 6L + j) * 60000L),
+        j % 3L, 100.0 + b + j * 0.25)))
+      q.processAllAvailable()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    } finally q.stop()
+    assert(compiled.drop(2).distinct.size == 1,
+      s"compilations so far, after each microbatch: $compiled")
+  }
+
   test("stateful indicators are identical on the RocksDB state store") {
     // the 100 TB streaming backend: state spills to disk instead of
     // living on the JVM heap; results must not change
