@@ -2,10 +2,16 @@
 """Local pre-check that mimics the driver's DuckDB oracle compare.
 
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
+       python3 scripts/check_oracle.py --against <dumpA> <dumpB>
 
 For each query in <verifyOutDir>/oracle_sql.json: register the sfDir
 parquet tables as DuckDB views, run the oracle SQL, load the Spark
 parquet result, sort columns by name, sort rows, and compare.
+
+With --against, compare two Verify dumps instead: every query present
+in both, dumpA's result in place of the oracle's, under the same canon
+and column compare. This covers rows-only queries, which have no
+oracle. Queries found in only one dump are listed by name.
 
 The compare is BYTE-STRICT to match the driver's canonical-bytes hash
 (the round-9 findings all slipped through a value-level compare):
@@ -75,9 +81,62 @@ def column_mismatch(a, b):
     return None
 
 
+def mismatch(exp, got):
+    """Return why two results differ under the driver's canon, None
+    if they are byte-equivalent."""
+    exp, got = canon(exp), canon(got)
+    if list(exp.columns) != list(got.columns):
+        return f"columns exp={list(exp.columns)} got={list(got.columns)}"
+    if len(exp) != len(got):
+        return f"rows exp={len(exp)} got={len(got)}"
+    for c in exp.columns:
+        diff = column_mismatch(exp[c], got[c])
+        if diff is not None:
+            return f"col {c} exp={diff[0]} got={diff[1]}"
+    return None
+
+
+def check(names, expected, got_dir, con):
+    """Compare each query's dump under `got_dir` to `expected(name)`;
+    print one line per query and return how many match."""
+    n_ok = 0
+    for name in names:
+        try:
+            exp = expected(name)
+            got = con.execute(
+                f"SELECT * FROM '{got_dir}/{name}/*.parquet'").df()
+            why = mismatch(exp, got)
+            if why:
+                print(f"FAIL {name}: {why}")
+            else:
+                print(f"OK   {name} ({len(exp)} rows)")
+                n_ok += 1
+        except Exception as e:
+            print(f"ERR  {name}: {e}")
+    return n_ok
+
+
+def dumped(out_dir):
+    """The query names a Verify dump holds results for."""
+    return {d for d in os.listdir(out_dir)
+            if os.path.isdir(os.path.join(out_dir, d))}
+
+
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
+    if sys.argv[1] == "--against":
+        a_dir, b_dir = sys.argv[2], sys.argv[3]
+        a, b = dumped(a_dir), dumped(b_dir)
+        both = sorted(a & b)
+        n_ok = check(both, lambda name: con.execute(
+            f"SELECT * FROM '{a_dir}/{name}/*.parquet'").df(), b_dir, con)
+        for name in sorted(a - b):
+            print(f"ONLY {name}: in {a_dir}")
+        for name in sorted(b - a):
+            print(f"ONLY {name}: in {b_dir}")
+        print(f"{n_ok}/{len(both)} queries identical")
+        return
+    sf_dir, out_dir = sys.argv[1], sys.argv[2]
     for t in TABLES:
         # testdata tables are single files; Spark-written replicas
         # (ReplicaGen) are directories of part files — accept both
@@ -87,34 +146,8 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
-    n_ok = 0
-    for name, sql in sorted(oracle.items()):
-        try:
-            exp = con.execute(sql).df()
-            got = con.execute(
-                f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
-            exp, got = canon(exp), canon(got)
-            if list(exp.columns) != list(got.columns):
-                print(f"FAIL {name}: columns exp={list(exp.columns)} "
-                      f"got={list(got.columns)}")
-                continue
-            if len(exp) != len(got):
-                print(f"FAIL {name}: rows exp={len(exp)} got={len(got)}")
-                continue
-            mismatch = None
-            for c in exp.columns:
-                diff = column_mismatch(exp[c], got[c])
-                if diff is not None:
-                    mismatch = (c,) + diff
-                    break
-            if mismatch:
-                print(f"FAIL {name}: col {mismatch[0]} exp={mismatch[1]} "
-                      f"got={mismatch[2]}")
-            else:
-                print(f"OK   {name} ({len(exp)} rows)")
-                n_ok += 1
-        except Exception as e:
-            print(f"ERR  {name}: {e}")
+    n_ok = check(sorted(oracle), lambda name: con.execute(oracle[name]).df(),
+                 out_dir, con)
     print(f"{n_ok}/{len(oracle)} queries match")
 
 

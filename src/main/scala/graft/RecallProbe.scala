@@ -97,12 +97,12 @@ object RecallProbe {
     }
     opqNp.encoded.unpersist()
     // graph ANN: one build, many searches — efSearch only affects the
-    // walk, so the sweep serves from a single cached GraphIndex
-    val nsw = operators.Similarity.graphIndex(spark, dir)
+    // walk, so the sweep serves from a single cached single-layer index
+    val nsw = operators.Similarity.hnswIndex(spark, dir, layered = false)
     nsw.nodes.cache().count(): Unit
     val nswCorpus = operators.Similarity.vecs(spark, dir).toDF("vec_id", "v", "norm")
     for (ef <- Seq(4, 8, 16, 32, 64)) {
-      val got = pairs(operators.Similarity.annGraphSearch(nsw, nswCorpus, ef))
+      val got = pairs(operators.Similarity.annHnswSearch(nsw, nswCorpus, ef))
       val recall = (exact & got).size.toDouble / exact.size
       println(f"[recall] nsw efSearch=$ef%2d recall@10=$recall%.3f")
     }

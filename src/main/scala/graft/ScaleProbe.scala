@@ -252,12 +252,12 @@ object ScaleProbe {
     // must stay a flat per-vector scan (vectors never shuffle)
     time("embed_quality")(operators.Similarity.embeddingQualityOf(bigEmb))
     val corpus = operators.Similarity.vecsOf(bigEmb).toDF("vec_id", "v", "norm")
-    val nswIdx = operators.Similarity.graphIndexOf(corpus,
-      numShards = math.max(8, replicas))
+    val nswIdx = operators.Similarity.hnswIndexOf(corpus,
+      numShards = math.max(8, replicas), layered = false)
     time("nsw_build")(nswIdx.nodes)
     val cached = nswIdx.copy(nodes = nswIdx.nodes.cache())
     cached.nodes.count(): Unit
-    time("nsw_search")(operators.Similarity.annGraphSearch(cached, corpus))
+    time("nsw_search")(operators.Similarity.annHnswSearch(cached, corpus))
     cached.nodes.unpersist(): Unit
     val hnswIdx = operators.Similarity.hnswIndexOf(corpus,
       numShards = math.max(8, replicas))

@@ -1067,10 +1067,6 @@ object Forecast {
     * that the dashboard's fetch_arima_forecasts displays).
     */
   def arimaForecast(spark: SparkSession, dir: String): DataFrame =
-    arimaForecastBase(spark, dir)
-
-  /** Unordered internal variant (no driver-output ORDER BY). */
-  private[operators] def arimaForecastBase(spark: SparkSession, dir: String): DataFrame =
     arimaForecastTicks(Warehouse.validTicks(spark, dir))
 
   private[graft] def arimaForecastTicks(ticksIn: DataFrame): DataFrame =
@@ -1260,14 +1256,8 @@ object Forecast {
     * the serve path never loses a model to an in-flight refresh —
     * callers swap the returned registry in only when it is complete,
     * serving from the previous one meanwhile (same publish-then-swap
-    * contract as [[graft.streaming.DocStream.hnswMaintainStream]]).
+    * contract as [[graft.streaming.DocStream.hnswSegmentMaintainStream]]).
     */
-  def refreshModelRegistry(spark: SparkSession, dir: String,
-      registry: DataFrame, minNewObs: Long = 10,
-      maxLagDays: Int = 7): DataFrame =
-    refreshModelRegistryTicks(registry, Warehouse.validTicks(spark, dir),
-      minNewObs, maxLagDays)
-
   private[graft] def refreshModelRegistryTicks(registry: DataFrame,
       ticksIn: DataFrame, minNewObs: Long = 10,
       maxLagDays: Int = 7): DataFrame = {
@@ -1414,12 +1404,6 @@ object Forecast {
     * contract) and identical single-reference merge; only the refit
     * leg differs.
     */
-  def refreshLinregRegistry(spark: SparkSession, dir: String,
-      registry: DataFrame, minNewObs: Long = 10,
-      maxLagDays: Int = 7): DataFrame =
-    refreshLinregRegistryTicks(registry, Warehouse.validTicks(spark, dir),
-      minNewObs, maxLagDays)
-
   private[graft] def refreshLinregRegistryTicks(registry: DataFrame,
       ticksIn: DataFrame, minNewObs: Long = 10,
       maxLagDays: Int = 7): DataFrame = {

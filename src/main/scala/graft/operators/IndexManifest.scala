@@ -79,7 +79,13 @@ object IndexManifest {
     * the failing detail named otherwise.
     */
   def validate(spark: SparkSession, path: String, family: String,
-      parts: Seq[String]): Option[Map[String, String]] = {
+      parts: Seq[String]): Option[Map[String, String]] =
+    validateAny(spark, path, Seq(family), parts).map(_._2)
+
+  /** [[validate]] for a loader that reads any of `families`: returns
+    * the family found with its params. */
+  def validateAny(spark: SparkSession, path: String, families: Seq[String],
+      parts: Seq[String]): Option[(String, Map[String, String])] = {
     val p = new org.apache.hadoop.fs.Path(path, FileName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
@@ -93,9 +99,10 @@ object IndexManifest {
         .toMap
       require(kv.get("version").contains(Version.toString),
         s"unknown manifest version at $path: ${kv.get("version")}")
-      require(kv.get("family").contains(family),
-        s"artifact at $path is family '${kv.getOrElse("family", "?")}', " +
-          s"loader expected '$family'")
+      val family = kv.getOrElse("family", "?")
+      require(families.contains(family),
+        s"artifact at $path is family '$family', " +
+          s"loader expected ${families.map(f => s"'$f'").mkString(" or ")}")
       val stored = kv.collect { case (k, v) if k.startsWith("part.") =>
         k.stripPrefix("part.") -> v }
       require(stored.keySet == parts.toSet,
@@ -105,7 +112,7 @@ object IndexManifest {
         require(cur == h,
           s"part '$pt' at $path drifted: schema hash $cur != recorded $h")
       }
-      Some(kv.collect { case (k, v) if k.startsWith("param.") =>
+      Some(family -> kv.collect { case (k, v) if k.startsWith("param.") =>
         k.stripPrefix("param.") -> v })
     }
   }

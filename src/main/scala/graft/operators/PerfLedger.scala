@@ -67,7 +67,9 @@ object PerfLedger {
     * becomes one ledger row (component = query name, rows =
     * numInputRows, processing_time_ms = the triggerExecution span);
     * a query that terminates WITH an exception contributes one error
-    * row, mirroring the reference's errors_count. Drain with
+    * row under its own name, mirroring the reference's per-component
+    * errors_count (the terminated event carries only the query id, so
+    * names are remembered from each query's start). Drain with
     * [[BatchPerfListener.records]] after `processAllAvailable` +
     * `stop` (events deliver asynchronously — poll, the spec shows
     * the pattern).
@@ -75,6 +77,8 @@ object PerfLedger {
   final class BatchPerfListener extends StreamingQueryListener {
     private val buf =
       new java.util.concurrent.ConcurrentLinkedQueue[PerfRec]()
+    private val names =
+      new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
 
     def records: Seq[PerfRec] = {
       val it = buf.iterator()
@@ -84,7 +88,8 @@ object PerfLedger {
     }
 
     override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        e: StreamingQueryListener.QueryStartedEvent): Unit =
+      Option(e.name).foreach(names.put(e.id, _))
 
     override def onQueryProgress(
         e: StreamingQueryListener.QueryProgressEvent): Unit = {
@@ -97,11 +102,13 @@ object PerfLedger {
     }
 
     override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+      val name = Option(names.remove(e.id)).getOrElse("stream")
       e.exception.foreach { _ =>
-        buf.add(PerfRec("stream", System.currentTimeMillis(),
+        buf.add(PerfRec(name, System.currentTimeMillis(),
           0.0, 0L, 1L)): Unit
       }
+    }
   }
 
   /** Durable ledger append: merge new records into the standing
@@ -116,8 +123,12 @@ object PerfLedger {
     graft.sources.Sinks.upsertParquet(ledgerOf(spark, recs), path,
       keyCols = Seq("component_name", "ts_ms"), versionCol = "ts_ms")
 
+  /** The ledger as one snapshot of its log (see
+    * [[graft.sources.Sinks.readTable]]): a plain parquet read during a
+    * merging [[appendLedger]] can see a rewritten file next to the file
+    * it replaces and count a record twice. */
   def readLedger(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.Sinks.readTable(spark, path)
 
   /** The monitoring view over a ledger — per component: batch count,
     * row/error masses, latency mean/max, and throughput (rows per

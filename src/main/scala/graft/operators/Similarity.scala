@@ -1396,27 +1396,48 @@ object Similarity {
 
   // ------------------------------------------------------- graph ANN
 
-  /** Graph-based ANN (NSW — the single-layer core of HNSW, Malkov &
-    * Yashunin 2016) as the LOW-LATENCY serve path: per-PARTITION
-    * navigable-small-world graphs + a global top-k merge.
+  /** Graph-based ANN (HNSW, Malkov & Yashunin 2016) as the LOW-LATENCY
+    * serve path: per-PARTITION navigable-small-world graphs + a global
+    * top-k merge. One implementation with two BUILD POLICIES, carried
+    * on the index as [[HnswIndex.layered]]:
     *
-    *  - BUILD (mapPartitions, no shuffle past the initial hash
-    *    partitioning): vectors insert in id order; each new node beam-
-    *    searches the graph built so far (`efConstruction` beam) for its
-    *    `maxDeg` nearest and links bidirectionally; adjacency lists
-    *    prune back to `maxDeg` keeping the highest-cosine edges. A
-    *    deployment persists each shard's adjacency next to its
-    *    vectors and reuses it across probe batches.
-    *  - SEARCH: probes broadcast; each shard beam-searches its own
-    *    graph (`efSearch` beam, greedy best-first with a visited set,
-    *    ties on id) and emits its local top-k; a window takes the
-    *    global top-k per probe — the standard shard-and-merge layout,
-    *    O(log n)-ish hops per shard instead of a shard scan.
+    *  - LAYERED, the full hierarchy: node i appears in layers
+    *    0..level(i), where level is geometric with ratio 1/maxDeg, so
+    *    layer L+1 holds ~1/maxDeg of layer L. A search GREEDY-DESCENDS
+    *    from the top layer's entry point (one closest-neighbor hop per
+    *    layer, ef=1) and only runs the wide `efSearch` beam on layer 0,
+    *    entering it next to the answer instead of at an arbitrary seed
+    *    — the upper layers are the express lanes that keep per-shard
+    *    entry O(log n) hops even when the shard no longer fits the
+    *    beam's locality. Layer-0 degree is 2·maxDeg (the standard
+    *    M0 = 2M), upper layers maxDeg. Links are chosen by the
+    *    [[selectNeighbors]] diversity heuristic (alg. 4) by default —
+    *    on clustered corpora closest-k wires each node into its own
+    *    cluster only, while the heuristic keeps the bridges
+    *    (RecallProbe ablates both).
+    *  - SINGLE-LAYER, flat NSW — HNSW's layer 0 alone: every node on
+    *    level 0, layer-0 degree maxDeg, closest-k links. With one level
+    *    the entry is always a shard's first node, so build and search
+    *    are the flat graph's: insert in id order, beam-search the graph
+    *    built so far from node 0, link bidirectionally, prune back to
+    *    maxDeg by (−cos, index).
+    *
+    * BUILD (mapPartitions, no shuffle past the initial hash
+    * partitioning): vectors insert in id order. A deployment persists
+    * each shard's adjacency next to its vectors and reuses it across
+    * probe batches. SEARCH: probes broadcast; each shard walks its own
+    * graph (greedy best-first with a visited set, ties on node index)
+    * and emits its local top-k; a window takes the global top-k per
+    * probe — the standard shard-and-merge layout.
     *
     * Cosines are computed EXACTLY during the walk (the graph only
     * decides which vectors get scored), so emitted values match the
     * brute-force kernel bit-for-bit; only the candidate set is
-    * approximate. Recall vs beam width is swept by RecallProbe.
+    * approximate. The build is deterministic: levels derive from a
+    * splitmix64 hash of the VECTOR id (not a driver RNG), so the same
+    * corpus always builds the same graph on any cluster layout, and an
+    * appended batch gets the levels it would have been built with.
+    * Recall vs beam width is swept by RecallProbe.
     */
   /** (vec_id, vector, norm) — a shard-local graph node. */
   private type NswNode = (Long, Array[Double], Double)
@@ -1433,12 +1454,12 @@ object Similarity {
   /** Greedy best-first beam over the first `built` nodes: expand the
     * best unexpanded candidate until the beam's worst member beats
     * every frontier node. Ties break on node index (deterministic).
-    * `start` is the walk's seed (node 0 for the flat NSW graph; the
-    * descent's hand-off for the layered HNSW walk).
+    * `start` is the walk's seed: the descent's hand-off, which is node
+    * 0 under the single-layer policy.
     */
   private def nswBeam(nodes: Array[NswNode], adj: Int => Iterator[Int],
       q: Array[Double], qn: Double, ef: Int,
-      built: Int, start: Int = 0): Array[(Double, Int)] = {
+      built: Int, start: Int): Array[(Double, Int)] = {
     val visited = new java.util.BitSet(built)
     // frontier: best cos first; results: worst cos first
     val frontier = scala.collection.mutable.PriorityQueue
@@ -1467,46 +1488,6 @@ object Similarity {
     results.dequeueAll.toArray.sortBy(t => (-t._1, t._2))
   }
 
-  /** NSW construction over id-sorted shard nodes: insert in order,
-    * beam-search the graph built so far, link bidirectionally, prune
-    * adjacency back to `maxDeg` keeping the highest-cosine edges.
-    */
-  private def nswBuild(nodes: Array[NswNode], maxDeg: Int,
-      efConstruction: Int): Array[Array[Int]] =
-    nswExtend(nodes,
-      Array.fill(nodes.length)(scala.collection.mutable.ArrayBuffer.empty[Int]),
-      1, maxDeg, efConstruction)
-
-  /** Insert nodes `from` until the end into a graph whose first
-    * `from` nodes already carry adjacency — the one insertion loop
-    * behind both the fresh build (`from = 1`, empty adjacency) and
-    * incremental appends ([[updateGraphIndex]]).
-    */
-  private def nswExtend(nodes: Array[NswNode],
-      adj: Array[scala.collection.mutable.ArrayBuffer[Int]], from: Int,
-      maxDeg: Int, efConstruction: Int): Array[Array[Int]] = {
-    def prune(i: Int): Unit =
-      if (adj(i).length > maxDeg) {
-        val kept = adj(i)
-          .map(j => (nswCos(nodes, nodes(i)._2, nodes(i)._3, j), j))
-          .sortBy(t => (-t._1, t._2)).take(maxDeg).map(_._2)
-        adj(i).clear()
-        adj(i) ++= kept
-      }
-    var i = math.max(from, 1) // node 0 seeds the graph edge-free
-    while (i < nodes.length) {
-      nswBeam(nodes, adj(_).iterator, nodes(i)._2, nodes(i)._3,
-        efConstruction, i)
-        .take(maxDeg).foreach { case (_, j) =>
-          adj(i) += j
-          adj(j) += i
-          prune(j)
-        }
-      i += 1
-    }
-    adj.map(_.toArray)
-  }
-
   /** Probe vectors as a driver array (id asc) for the graph walks. */
   private def probeArray(corpus: DataFrame): Array[NswNode] =
     probeArrayOf(corpus.filter(col("vec_id") < NumProbes)
@@ -1533,32 +1514,33 @@ object Similarity {
         round(col("cos"), 6).as("cosine"))
   }
 
+  /** The single-layer (flat NSW) build, fused with its search. */
   def annGraph(spark: SparkSession, dir: String, efSearch: Int = 32,
       maxDeg: Int = 8, efConstruction: Int = 32, numShards: Int = 4): DataFrame =
-    annGraphOf(vecs(spark, dir).toDF("vec_id", "v", "norm"),
-      efSearch, maxDeg, efConstruction, numShards)
+    annHnswOf(vecs(spark, dir).toDF("vec_id", "v", "norm"),
+      efSearch, maxDeg, efConstruction, numShards, layered = false)
 
-  /** Corpus-size ceiling for serving FLAT NSW (round 12): the single
-    * layer navigates fine at small scale (recall@10 at efSearch=32:
-    * 1.00 at N=500, 0.88 at N=2000) but its greedy entry degrades
-    * with graph diameter — the 10×-replica sweep measured the
+  /** Corpus-size ceiling for serving the SINGLE-LAYER policy (round
+    * 12): one layer navigates fine at small scale (recall@10 at
+    * efSearch=32: 1.00 at N=500, 0.88 at N=2000) but its greedy entry
+    * degrades with graph diameter — the 10×-replica sweep measured the
     * textbook NAVIGABILITY COLLAPSE at N=20k (0.26 at efSearch=16 vs
-    * HNSW's 1.00 on the same corpus; the hierarchy exists precisely
-    * to keep entry hops O(log N)). 4096 sits between the measured
-    * healthy (2k) and collapsed (20k) regimes with ~2× margin.
+    * the layered policy's 1.00 on the same corpus; the hierarchy
+    * exists precisely to keep entry hops O(log N)). 4096 sits between
+    * the measured healthy (2k) and collapsed (20k) regimes with ~2×
+    * margin.
     */
   private[graft] val NswServeCap = 4096L
 
-  /** The graph-family SERVE path (registered as q_ann_graph): flat
-    * NSW up to [[NswServeCap]] vectors, the layered [[annHnsw]]
-    * hierarchy above it. Flat NSW stays available directly via
-    * [[annGraph]] as the teaching/verify-scale baseline — it is never
-    * the index a production corpus is served from, because its
-    * single-layer recall collapses with graph diameter (see
-    * [[NswServeCap]]). Both branches share the beam kernel, the exact
-    * cosine rerank, and the result contract, so the routed surface is
-    * drop-in either way; the route is decided by ONE corpus count
-    * (parquet metadata — no data scan).
+  /** The graph-family SERVE path (registered as q_ann_graph): the
+    * single-layer build up to [[NswServeCap]] vectors, the layered
+    * [[annHnsw]] hierarchy above it. The single layer stays available
+    * directly via [[annGraph]] as the teaching/verify-scale baseline —
+    * it is never the index a production corpus is served from, because
+    * its recall collapses with graph diameter (see [[NswServeCap]]).
+    * Both policies are one implementation with one result contract,
+    * so the routed surface is drop-in either way; the route is decided
+    * by ONE corpus count (parquet metadata — no data scan).
     */
   def annGraphAuto(spark: SparkSession, dir: String,
       efSearch: Int = 32): DataFrame =
@@ -1566,315 +1548,19 @@ object Similarity {
       annGraph(spark, dir, efSearch)
     else annHnsw(spark, dir, efSearch)
 
-  private[graft] def annGraphOf(corpus: DataFrame, efSearch: Int = 32,
-      maxDeg: Int = 8, efConstruction: Int = 32,
-      numShards: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bProbes = spark.sparkContext.broadcast(probeArray(corpus))
-    val local = corpus.repartition(numShards, col("vec_id"))
-      .as[(Long, Seq[Double], Double)]
-      .mapPartitions { iter =>
-        val nodes = iter.map { case (id, v, n) => (id, v.toArray, n) }
-          .toArray.sortBy(_._1)
-        if (nodes.isEmpty) Iterator.empty
-        else {
-          val adj = nswBuild(nodes, maxDeg, efConstruction)
-          bProbes.value.iterator.flatMap { case (pid, pv, pn) =>
-            nswBeam(nodes, adj(_).iterator, pv, pn, efSearch, nodes.length)
-              .filter { case (_, j) => nodes(j)._1 != pid }
-              .take(TopK)
-              .map { case (c, j) => (pid, nodes(j)._1, c) }
-          }
-        }
-      }.toDF("probe_id", "neighbor_id", "cos")
-    mergeShardTopK(local)
-  }
-
-  /** A fitted per-shard NSW graph: one row per vector carrying its
-    * shard id, float vector, norm, and neighbor VEC ids. Build once,
-    * serve many probe batches; persistable like the quantized indexes.
-    * Graphs are identical to the fused [[annGraph]] build (same hash
-    * sharding, same id-ordered insertion), so searches agree exactly
-    * (spec-asserted). `numShards` is carried IN the index (not
-    * re-derived as max(shard)+1, which NPEs on an empty standing
-    * index and undercounts when the top-numbered shard happens to be
-    * empty — an undercount silently changes append hash routing, so a
-    * re-delivered vec_id could land in a different shard and bypass
-    * the per-shard duplicate-id check).
-    */
-  case class GraphIndex(nodes: DataFrame, numShards: Int)
-
-  def graphIndex(spark: SparkSession, dir: String, maxDeg: Int = 8,
-      efConstruction: Int = 32, numShards: Int = 4): GraphIndex =
-    graphIndexOf(vecs(spark, dir).toDF("vec_id", "v", "norm"),
-      maxDeg, efConstruction, numShards)
-
-  private[graft] def graphIndexOf(corpus: DataFrame, maxDeg: Int = 8,
-      efConstruction: Int = 32, numShards: Int = 4): GraphIndex = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val nodesDf = corpus.repartition(numShards, col("vec_id"))
-      .as[(Long, Seq[Double], Double)]
-      .mapPartitions { iter =>
-        val shard = org.apache.spark.TaskContext.getPartitionId()
-        val nodes = iter.map { case (id, v, n) => (id, v.toArray, n) }
-          .toArray.sortBy(_._1)
-        if (nodes.isEmpty) Iterator.empty
-        else {
-          val adj = nswBuild(nodes, maxDeg, efConstruction)
-          nodes.indices.iterator.map { i =>
-            (shard, nodes(i)._1, nodes(i)._2.toSeq, nodes(i)._3,
-              adj(i).map(j => nodes(j)._1).toSeq)
-          }
-        }
-      }.toDF("shard", "vec_id", "v", "norm", "nbrs")
-    GraphIndex(nodesDf, numShards)
-  }
-
-  /** Serve a probe batch from a fitted graph: shards regroup (one
-    * shuffle of the index, none of any corpus), rebuild their local
-    * id maps, and beam-search; the shard top-ks merge globally.
-    * Probes here ARE corpus rows (the eval surface), so self-matches
-    * are excluded.
-    */
-  def annGraphSearch(idx: GraphIndex, corpus: DataFrame,
-      efSearch: Int = 32): DataFrame =
-    annGraphSearchProbes(idx,
-      corpus.filter(col("vec_id") < NumProbes).toDF("probe_id", "p_v", "p_norm"),
-      efSearch, excludeSelf = true)
-
-  /** Graph search against an EXPLICIT probe batch — the serve-path
-    * entry (see [[annPqSearchProbes]] for the excludeSelf contract:
-    * external probe ids live in their own space and never filter the
-    * corpus).
-    */
-  def annGraphSearchProbes(idx: GraphIndex, probes: DataFrame,
-      efSearch: Int = 32, excludeSelf: Boolean = false): DataFrame = {
-    val spark = idx.nodes.sparkSession
-    import spark.implicits._
-    val bProbes = spark.sparkContext.broadcast(probeArrayOf(probes))
-    val local = idx.nodes.as[(Int, Long, Seq[Double], Double, Seq[Long])]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, rows) =>
-        val rs = rows.toArray.sortBy(_._2)
-        val nodes: Array[NswNode] = rs.map(r => (r._2, r._3.toArray, r._4))
-        val idToIdx = nodes.iterator.map(_._1).zipWithIndex.toMap
-        val adj = rs.map(_._5.iterator.map(idToIdx).toArray)
-        bProbes.value.iterator.flatMap { case (pid, pv, pn) =>
-          nswBeam(nodes, adj(_).iterator, pv, pn, efSearch, nodes.length)
-            .filter { case (_, j) => !excludeSelf || nodes(j)._1 != pid }
-            .take(TopK)
-            .map { case (c, j) => (pid, nodes(j)._1, c) }
-        }
-      }.toDF("probe_id", "neighbor_id", "cos")
-    mergeShardTopK(local)
-  }
-
-  /** INCREMENTAL graph maintenance — append an ingest batch to a
-    * fitted [[GraphIndex]] without rebuilding: new vectors hash to
-    * their shard with the SAME partitioner as the build (so routing
-    * matches a from-scratch shard layout), and each shard inserts its
-    * arrivals into the EXISTING graph via the same id-ordered
-    * insertion loop the build uses — existing adjacency is untouched
-    * except where pruning rewires a neighbor toward a closer new
-    * node. INSERTION work is O(batch · ef · deg) per shard and the
-    * standing corpus is never re-LINKED — but as an immutable-
-    * DataFrame index the append still rewrites the index rows (one
-    * shuffle of index + batch; amortize by micro-batching appends,
-    * and persist/save the result before serving repeatedly — the
-    * returned frame is lazy). A mutable shard store (e.g. RocksDB
-    * per executor) would make the rewrite in-place. (Unlike the IVF
-    * path there is no model to drift: the graph IS the data
-    * structure, so appends never force a refit.)
-    *
-    * Shard count comes from the index itself (see [[GraphIndex]]) —
-    * routing stays identical to the build's partitioner even on an
-    * empty or unevenly-occupied standing index.
-    */
-  def updateGraphIndex(idx: GraphIndex, newVecs: DataFrame,
-      maxDeg: Int = 8, efConstruction: Int = 32): GraphIndex = {
-    val spark = idx.nodes.sparkSession
-    import spark.implicits._
-    val numShards = idx.numShards
-    val batch = newVecs
-      .select(col("vec_id"), col("v").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(Dedup.dot(col("v"), col("v"))))
-      .repartition(numShards, col("vec_id"))
-      .as[(Long, Seq[Double], Double)]
-      .mapPartitions { iter =>
-        val shard = org.apache.spark.TaskContext.getPartitionId()
-        iter.map { case (id, v, n) =>
-          (shard, id, v, n, null: Seq[Long])
-        }
-      }.toDF("shard", "vec_id", "v", "norm", "nbrs")
-    val merged = idx.nodes.unionByName(batch)
-      .as[(Int, Long, Seq[Double], Double, Seq[Long])]
-      .groupByKey(_._1)
-      .flatMapGroups { (shard, rows) =>
-        val (oldRows, newRows) = rows.toArray.partition(_._5 != null)
-        val olds = oldRows.sortBy(_._2)
-        val news = newRows.sortBy(_._2)
-        val nodes: Array[NswNode] =
-          (olds ++ news).map(r => (r._2, r._3.toArray, r._4))
-        if (nodes.isEmpty) Iterator.empty
-        else {
-          val idToIdx = nodes.iterator.map(_._1).zipWithIndex.toMap
-          // a re-delivered id would silently rewire in-links to the
-          // newest copy and strand the old node — fail loudly instead
-          // (duplicates always land in the same shard: same hash)
-          require(idToIdx.size == nodes.length,
-            s"duplicate vec_ids appended into shard $shard")
-          val adj = Array.fill(nodes.length)(
-            scala.collection.mutable.ArrayBuffer.empty[Int])
-          olds.zipWithIndex.foreach { case (r, i) =>
-            adj(i) ++= r._5.iterator.map(idToIdx)
-          }
-          val full = nswExtend(nodes, adj, olds.length, maxDeg, efConstruction)
-          nodes.indices.iterator.map { i =>
-            (shard, nodes(i)._1, nodes(i)._2.toSeq, nodes(i)._3,
-              full(i).map(j => nodes(j)._1).toSeq)
-          }
-        }
-      }.toDF("shard", "vec_id", "v", "norm", "nbrs")
-    GraphIndex(merged, numShards)
-  }
-
-  /** Persist / reload a fitted NSW graph index; loaded search == fresh
-    * (spec-asserted). The shard count rides in a tiny sidecar file
-    * next to the parquet (written AFTER the overwrite so the mode
-    * doesn't delete it); pre-sidecar saves fall back to the old
-    * max(shard)+1 derivation, which is only wrong in the
-    * empty-top-shard corner the sidecar now closes.
-    */
-  def saveGraphIndex(idx: GraphIndex, path: String): Unit = {
-    idx.nodes.write.mode("overwrite").parquet(path)
-    writeShardMeta(idx.nodes.sparkSession, path, idx.numShards)
-    IndexManifest.write(idx.nodes.sparkSession, path, "ann_nsw", Seq("."),
-      Map("num_shards" -> idx.numShards.toString))
-  }
-
-  def loadGraphIndex(spark: SparkSession, path: String): GraphIndex = {
-    IndexManifest.validate(spark, path, "ann_nsw", Seq(".")): Unit
-    val nodes = spark.read.parquet(path)
-    require(nodes.columns.toSet == Set("shard", "vec_id", "v", "norm", "nbrs"),
-      s"invalid graph index at $path: ${nodes.columns.mkString(",")}")
-    val ns = readShardMeta(spark, path).getOrElse(
-      nodes.agg(coalesce(max("shard") + 1, lit(1))).head.getInt(0))
-    GraphIndex(nodes.select("shard", "vec_id", "v", "norm", "nbrs"), ns)
-  }
-
-  /** Shared WRITE leg of the two segmented-tier artifacts: all open
-    * segments flatten into ONE `seg_id`-tagged parquet (they are
-    * single-shard by construction — callers assert it), so an
-    * overwrite with a different segment count can never orphan a
-    * stale per-segment directory. One definition so the HNSW and
-    * flat-NSW duals cannot drift.
-    */
-  private def writeSegmentsPart(segNodes: List[DataFrame],
-      emptyLike: DataFrame, path: String): Unit =
-    segNodes.zipWithIndex
-      .map { case (n, i) => n.withColumn("seg_id", lit(i)) }
-      .reduceOption(_ unionByName _)
-      .getOrElse(emptyLike.filter(lit(false)).withColumn("seg_id", lit(0)))
-      .write.mode("overwrite").parquet(s"$path/segments")
-
-  /** Shared READ leg: validate the family manifest, split the flat
-    * segments part back into per-segment node frames (callers wrap
-    * them in their index type).
-    */
-  private def readSegmentsPart(spark: SparkSession, path: String,
-      family: String, cols: Seq[String]): List[DataFrame] = {
-    val params = IndexManifest
-      .validate(spark, path, family, Seq("main", "segments"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no segmented-index manifest at $path"))
-    val segNodes = spark.read.parquet(s"$path/segments")
-    (0 until params("num_segments").toInt).toList.map { i =>
-      segNodes.filter(col("seg_id") === i).drop("seg_id")
-        .select(cols.map(col): _*)
-    }
-  }
-
-  /** [[saveHnswSegmented]]'s flat-NSW dual — same two-part layout,
-    * same single-shard segment contract, own family name so the two
-    * segmented tiers cannot load each other's artifacts.
-    */
-  def saveNswSegmented(seg: NswSegmented, path: String): Unit = {
-    require(seg.segments.forall(_.numShards == 1),
-      "segment tier persists single-shard segments only (appendSegment builds them)")
-    saveGraphIndex(seg.main, s"$path/main")
-    writeSegmentsPart(seg.segments.map(_.nodes), seg.main.nodes, path)
-    IndexManifest.write(seg.main.nodes.sparkSession, path,
-      "ann_nsw_segmented", Seq("main", "segments"),
-      Map("num_segments" -> seg.segments.length.toString))
-  }
-
-  def loadNswSegmented(spark: SparkSession, path: String): NswSegmented = {
-    // the OUTER family manifest validates first — a cross-family load
-    // must fail naming the segmented families, not deep inside the
-    // nested main artifact
-    val segs = readSegmentsPart(spark, path, "ann_nsw_segmented",
-      Seq("shard", "vec_id", "v", "norm", "nbrs")).map(GraphIndex(_, 1))
-    NswSegmented(loadGraphIndex(spark, s"$path/main"), segs)
-  }
-
-  private[graft] def writeShardMeta(spark: SparkSession, path: String,
-      numShards: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_shards")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(numShards.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private[graft] def readShardMeta(spark: SparkSession,
-      path: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(path, "_graft_shards")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
+  /** A node's level: geometric with ratio 1/maxDeg under the layered
+    * policy, 0 under the single-layer one. */
+  private def hnswLevel(id: Long, maxDeg: Int, layered: Boolean): Int =
+    if (!layered) 0
     else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-      finally in.close()
+      var h = id * 0x9E3779B97F4A7C15L
+      h ^= (h >>> 30); h *= 0xBF58476D1CE4E5B9L
+      h ^= (h >>> 27); h *= 0x94D049BB133111EBL
+      h ^= (h >>> 31)
+      val u = ((h >>> 11) + 1).toDouble / (1L << 53).toDouble // (0, 1]
+      val mL = 1.0 / math.log(math.max(maxDeg, 2).toDouble)
+      math.min(12, (-math.log(u) * mL).toInt)
     }
-  }
-
-  // ------------------------------------------------------ HNSW layers
-
-  /** HIERARCHICAL NSW (the full Malkov & Yashunin 2016 layout): the
-    * flat per-shard NSW graph above gains a layer hierarchy — node i
-    * appears in layers 0..level(i), where level is geometric with
-    * ratio 1/maxDeg, so layer L+1 holds ~1/maxDeg of layer L. A
-    * search GREEDY-DESCENDS from the top layer's entry point (one
-    * closest-neighbor hop per layer, ef=1) and only runs the wide
-    * `efSearch` beam on layer 0, entering it next to the answer
-    * instead of at an arbitrary seed — the upper layers are the
-    * express lanes that make per-shard entry O(log n) hops even when
-    * the shard no longer fits the beam's locality, which is what the
-    * flat NSW walk loses at 100 TB shard sizes.
-    *
-    * Everything the flat graph pins still holds here: cosines are
-    * computed exactly during the walk (bit-equal to the brute-force
-    * kernel on whatever the walk scores), ties break on node index,
-    * and the build is deterministic — levels derive from a splitmix64
-    * hash of the VECTOR id (not a driver RNG), so the same corpus
-    * always builds the same hierarchy on any cluster layout, and an
-    * appended batch assigns the same levels it would have been built
-    * with. Layer-0 degree is 2·maxDeg (the standard M0 = 2M), upper
-    * layers maxDeg. Links are chosen by the [[selectNeighbors]]
-    * diversity heuristic (alg. 4) by default — on clustered corpora
-    * closest-k wires each node into its own cluster only, while the
-    * heuristic keeps the bridges (RecallProbe ablates both).
-    */
-  private def hnswLevel(id: Long, maxDeg: Int): Int = {
-    var h = id * 0x9E3779B97F4A7C15L
-    h ^= (h >>> 30); h *= 0xBF58476D1CE4E5B9L
-    h ^= (h >>> 27); h *= 0x94D049BB133111EBL
-    h ^= (h >>> 31)
-    val u = ((h >>> 11) + 1).toDouble / (1L << 53).toDouble // (0, 1]
-    val mL = 1.0 / math.log(math.max(maxDeg, 2).toDouble)
-    math.min(12, (-math.log(u) * mL).toInt)
-  }
 
   /** One greedy ef=1 hop sequence at `layer`: move to the strictly
     * best neighbor until local maximum (strict improvement only, so
@@ -1923,22 +1609,22 @@ object Similarity {
     kept.toSeq
   }
 
-  /** Insert nodes `from` until the end into a layered graph whose
-    * first `from` nodes already carry adjacency — the HNSW analogue
-    * of [[nswExtend]], shared by fresh builds (`from = 1`) and
-    * incremental appends. `adj(i)(l)` is node i's layer-l neighbor
-    * list (length level(i)+1). Returns the final entry node.
-    * `heuristic` picks the link selector: alg. 4 diversity pruning
-    * (default) or plain closest-k (the flat graph's rule).
+  /** Insert nodes `from` until the end into a graph whose first `from`
+    * nodes already carry adjacency — the one insertion loop behind
+    * fresh builds (`from = 1`) and incremental appends, under either
+    * policy. `adj(i)(l)` is node i's layer-l neighbor list (length
+    * level(i)+1). Returns the final entry node. `heuristic` picks the
+    * layered policy's link selector: alg. 4 diversity pruning
+    * (default) or plain closest-k, which the single layer always uses.
     */
   private def hnswExtend(nodes: Array[NswNode], levels: Array[Int],
       adj: Array[Array[scala.collection.mutable.ArrayBuffer[Int]]],
-      from: Int, maxDeg: Int, efConstruction: Int,
+      from: Int, maxDeg: Int, efConstruction: Int, layered: Boolean,
       heuristic: Boolean = true): Int = {
     def layerAdj(l: Int)(j: Int): Iterator[Int] =
       if (l <= levels(j)) adj(j)(l).iterator else Iterator.empty
     def select(cands: Array[(Double, Int)], deg: Int): Seq[Int] =
-      if (heuristic) selectNeighbors(nodes, cands, deg)
+      if (layered && heuristic) selectNeighbors(nodes, cands, deg)
       else cands.take(deg).map(_._2).toSeq
     def prune(j: Int, l: Int, deg: Int): Unit =
       if (adj(j)(l).length > deg) {
@@ -1954,7 +1640,7 @@ object Similarity {
     var entry = 0
     var e = 1
     while (e < from) { if (levels(e) > levels(entry)) entry = e; e += 1 }
-    var i = math.max(from, 1) // node 0 seeds the hierarchy edge-free
+    var i = math.max(from, 1) // node 0 seeds the graph edge-free
     while (i < nodes.length) {
       val (q, qn) = (nodes(i)._2, nodes(i)._3)
       var ep = entry
@@ -1965,7 +1651,7 @@ object Similarity {
       }
       while (l >= 0) { // link layers the new node participates in
         val found = nswBeam(nodes, layerAdj(l), q, qn, efConstruction, i, ep)
-        val deg = if (l == 0) maxDeg * 2 else maxDeg
+        val deg = if (l == 0 && layered) maxDeg * 2 else maxDeg
         select(found, deg).foreach { j =>
           adj(i)(l) += j
           adj(j)(l) += i
@@ -1981,12 +1667,14 @@ object Similarity {
   }
 
   private def hnswBuild(nodes: Array[NswNode], maxDeg: Int,
-      efConstruction: Int, heuristic: Boolean = true): (Array[Int],
+      efConstruction: Int, layered: Boolean, heuristic: Boolean): (Array[Int],
       Array[Array[scala.collection.mutable.ArrayBuffer[Int]]], Int) = {
-    val levels = Array.tabulate(nodes.length)(i => hnswLevel(nodes(i)._1, maxDeg))
+    val levels = Array.tabulate(nodes.length)(i =>
+      hnswLevel(nodes(i)._1, maxDeg, layered))
     val adj = Array.tabulate(nodes.length)(i =>
       Array.fill(levels(i) + 1)(scala.collection.mutable.ArrayBuffer.empty[Int]))
-    val entry = hnswExtend(nodes, levels, adj, 1, maxDeg, efConstruction, heuristic)
+    val entry = hnswExtend(nodes, levels, adj, 1, maxDeg, efConstruction,
+      layered, heuristic)
     (levels, adj, entry)
   }
 
@@ -2004,6 +1692,7 @@ object Similarity {
     nswBeam(nodes, adj(_)(0).iterator, q, qn, ef, nodes.length, ep)
   }
 
+  /** The layered build, fused with its search. */
   def annHnsw(spark: SparkSession, dir: String, efSearch: Int = 32,
       maxDeg: Int = 8, efConstruction: Int = 32, numShards: Int = 4): DataFrame =
     annHnswOf(vecs(spark, dir).toDF("vec_id", "v", "norm"),
@@ -2011,7 +1700,7 @@ object Similarity {
 
   private[graft] def annHnswOf(corpus: DataFrame, efSearch: Int = 32,
       maxDeg: Int = 8, efConstruction: Int = 32,
-      numShards: Int = 4): DataFrame = {
+      numShards: Int = 4, layered: Boolean = true): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val bProbes = spark.sparkContext.broadcast(probeArray(corpus))
@@ -2022,7 +1711,8 @@ object Similarity {
           .toArray.sortBy(_._1)
         if (nodes.isEmpty) Iterator.empty
         else {
-          val (levels, adj, entry) = hnswBuild(nodes, maxDeg, efConstruction)
+          val (levels, adj, entry) =
+            hnswBuild(nodes, maxDeg, efConstruction, layered, heuristic = true)
           bProbes.value.iterator.flatMap { case (pid, pv, pn) =>
             hnswSearchLocal(nodes, levels, adj, entry, pv, pn, efSearch)
               .filter { case (_, j) => nodes(j)._1 != pid }
@@ -2034,25 +1724,32 @@ object Similarity {
     mergeShardTopK(local)
   }
 
-  /** A fitted per-shard HNSW hierarchy: one row per vector carrying
-    * its layered neighbor lists (`lnbrs(l)` = layer-l neighbor VEC
-    * ids; `lnbrs.size - 1` IS the node's level, so the hierarchy
-    * round-trips through parquet with no extra column). The entry
-    * point is derived, not stored: the lowest-id node of maximal
-    * level — the same node the id-ordered build promotes last.
-    * `numShards` is carried in the index for the same append-routing
-    * reason as [[GraphIndex]].
+  /** A fitted per-shard graph: one row per vector carrying its shard
+    * id, float vector, norm, and layered neighbor lists (`lnbrs(l)` =
+    * layer-l neighbor VEC ids; `lnbrs.size - 1` IS the node's level, so
+    * the hierarchy round-trips through parquet with no extra column).
+    * Build once, serve many probe batches. The entry point is derived,
+    * not stored: the lowest-id node of maximal level — the same node
+    * the id-ordered build promotes last. `layered` is the build policy
+    * (see the section header); appends and segments keep it.
+    * `numShards` is carried IN the index (not re-derived as
+    * max(shard)+1, which NPEs on an empty standing index and
+    * undercounts when the top-numbered shard happens to be empty — an
+    * undercount silently changes append hash routing, so a
+    * re-delivered vec_id could land in a different shard and bypass
+    * the per-shard duplicate-id check).
     */
-  case class HnswIndex(nodes: DataFrame, numShards: Int)
+  case class HnswIndex(nodes: DataFrame, numShards: Int, layered: Boolean)
 
   def hnswIndex(spark: SparkSession, dir: String, maxDeg: Int = 8,
-      efConstruction: Int = 32, numShards: Int = 4): HnswIndex =
+      efConstruction: Int = 32, numShards: Int = 4,
+      layered: Boolean = true): HnswIndex =
     hnswIndexOf(vecs(spark, dir).toDF("vec_id", "v", "norm"),
-      maxDeg, efConstruction, numShards)
+      maxDeg, efConstruction, numShards, layered = layered)
 
   private[graft] def hnswIndexOf(corpus: DataFrame, maxDeg: Int = 8,
       efConstruction: Int = 32, numShards: Int = 4,
-      heuristic: Boolean = true): HnswIndex = {
+      heuristic: Boolean = true, layered: Boolean = true): HnswIndex = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val nodesDf = corpus.repartition(numShards, col("vec_id"))
@@ -2063,24 +1760,30 @@ object Similarity {
           .toArray.sortBy(_._1)
         if (nodes.isEmpty) Iterator.empty
         else {
-          val (_, adj, _) = hnswBuild(nodes, maxDeg, efConstruction, heuristic)
+          val (_, adj, _) = hnswBuild(nodes, maxDeg, efConstruction, layered, heuristic)
           nodes.indices.iterator.map { i =>
             (shard, nodes(i)._1, nodes(i)._2.toSeq, nodes(i)._3,
               adj(i).map(_.map(j => nodes(j)._1).toSeq).toSeq)
           }
         }
       }.toDF("shard", "vec_id", "v", "norm", "lnbrs")
-    HnswIndex(nodesDf, numShards)
+    HnswIndex(nodesDf, numShards, layered)
   }
 
+  /** Serve the corpus' probe rows from a fitted graph; probes here ARE
+    * corpus rows (the eval surface), so self-matches are excluded. */
   def annHnswSearch(idx: HnswIndex, corpus: DataFrame,
       efSearch: Int = 32): DataFrame =
     annHnswSearchProbes(idx,
       corpus.filter(col("vec_id") < NumProbes).toDF("probe_id", "p_v", "p_norm"),
       efSearch, excludeSelf = true)
 
-  /** Layered search against an explicit probe batch (same serve-path
-    * contract as [[annGraphSearchProbes]]).
+  /** Search against an EXPLICIT probe batch — the serve-path entry
+    * (see [[annPqSearchProbes]] for the excludeSelf contract: external
+    * probe ids live in their own space and never filter the corpus).
+    * Shards regroup (one shuffle of the index, none of any corpus),
+    * rebuild their local id maps, and walk; the shard top-ks merge
+    * globally.
     */
   def annHnswSearchProbes(idx: HnswIndex, probes: DataFrame,
       efSearch: Int = 32, excludeSelf: Boolean = false): DataFrame = {
@@ -2109,18 +1812,30 @@ object Similarity {
     mergeShardTopK(local)
   }
 
-  /** Incremental HNSW maintenance — same contract as
-    * [[updateGraphIndex]] (hash-routed batch, per-shard id-ordered
-    * insertion into the standing hierarchy, duplicate ids fail
-    * loudly); levels for the arrivals come from the same id hash the
-    * build uses, so an appended node lands on exactly the layers a
-    * from-scratch build would give it.
+  /** INCREMENTAL maintenance — append an ingest batch to a fitted
+    * [[HnswIndex]] without rebuilding: new vectors hash to their shard
+    * with the SAME partitioner as the build (so routing matches a
+    * from-scratch shard layout), and each shard inserts its arrivals
+    * into the EXISTING graph via the same id-ordered insertion loop
+    * the build uses, under the index's policy — an arrival lands on
+    * exactly the layers a from-scratch build would give it, and
+    * existing adjacency is untouched except where pruning rewires a
+    * neighbor toward a closer new node. INSERTION work is
+    * O(batch · ef · deg) per shard and the standing corpus is never
+    * re-LINKED — but as an immutable-DataFrame index the append still
+    * rewrites the index rows (one shuffle of index + batch; amortize
+    * with the segment tier, [[HnswSegmented]], and persist/save the
+    * result before serving repeatedly — the returned frame is lazy).
+    * Unlike the IVF path there is no model to drift: the graph IS the
+    * data structure, so appends never force a refit. A re-delivered id
+    * fails loudly.
     */
   def updateHnswIndex(idx: HnswIndex, newVecs: DataFrame,
       maxDeg: Int = 8, efConstruction: Int = 32): HnswIndex = {
     val spark = idx.nodes.sparkSession
     import spark.implicits._
     val numShards = idx.numShards
+    val layered = idx.layered
     val batch = newVecs
       .select(col("vec_id"), col("v").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(Dedup.dot(col("v"), col("v"))))
@@ -2144,10 +1859,13 @@ object Similarity {
         if (nodes.isEmpty) Iterator.empty
         else {
           val idToIdx = nodes.iterator.map(_._1).zipWithIndex.toMap
+          // a re-delivered id would silently rewire in-links to the
+          // newest copy and strand the old node — fail loudly instead
+          // (duplicates always land in the same shard: same hash)
           require(idToIdx.size == nodes.length,
             s"duplicate vec_ids appended into shard $shard")
           val levels = olds.map(_._5.length - 1) ++
-            news.map(r => hnswLevel(r._2, maxDeg))
+            news.map(r => hnswLevel(r._2, maxDeg, layered))
           val adj = Array.tabulate(nodes.length) { i =>
             if (i < olds.length)
               olds(i)._5.map(layer => layer.iterator.map(idToIdx)
@@ -2155,123 +1873,135 @@ object Similarity {
             else Array.fill(levels(i) + 1)(
               scala.collection.mutable.ArrayBuffer.empty[Int])
           }
-          hnswExtend(nodes, levels, adj, olds.length, maxDeg, efConstruction)
+          hnswExtend(nodes, levels, adj, olds.length, maxDeg, efConstruction, layered)
           nodes.indices.iterator.map { i =>
             (shard, nodes(i)._1, nodes(i)._2.toSeq, nodes(i)._3,
               adj(i).map(_.map(j => nodes(j)._1).toSeq).toSeq)
           }
         }
       }.toDF("shard", "vec_id", "v", "norm", "lnbrs")
-    HnswIndex(merged, numShards)
+    HnswIndex(merged, numShards, layered)
   }
 
-  /** A SEGMENTED HNSW deployment — the micro-append economics
+  /** A SEGMENTED deployment (a TIER) — the micro-append economics
     * [[updateHnswIndex]] cannot give: as an immutable-DataFrame index
     * every direct append REWRITES the whole standing index (one
     * shuffle of index + batch), so a stream of small batches pays
     * O(index) per batch. The segment tier is the standard LSM-style
     * answer: each ingest batch becomes its own small single-shard
-    * hierarchy (build cost O(batch·log batch), the standing `main` is
-    * NOT touched), serve searches main + every open segment and
-    * re-ranks the union, and a periodic [[compactHnswSegments]] folds
-    * all segments into main with ONE rewrite — amortizing the
-    * O(index) cost over however many batches accumulated between
-    * compactions. Search cost grows with the open-segment count
-    * (each segment adds a beam descent per probe), which is the knob:
-    * compact when segments × per-segment latency outweighs one
-    * rewrite.
+    * graph under main's policy (build cost O(batch·log batch), the
+    * standing `main` is NOT touched), serve searches main + every open
+    * segment and re-ranks the union, and a periodic
+    * [[compactHnswSegments]] folds all segments into main with ONE
+    * rewrite — amortizing the O(index) cost over however many batches
+    * accumulated between compactions. Search cost grows with the
+    * open-segment count (each segment adds a walk per probe), which is
+    * the knob: compact when segments × per-segment latency outweighs
+    * one rewrite. A plain index is a tier with no segments.
     */
   case class HnswSegmented(main: HnswIndex, segments: List[HnswIndex])
 
-  /** Open a new segment for an ingest batch: a fresh single-shard
-    * hierarchy over just the batch. `main` and existing segments are
-    * untouched (reference-equal — spec-asserted); duplicate ids
-    * across main/segments surface at compaction, exactly like a
-    * direct append would fail.
+  /** Open a new segment for an ingest batch: a fresh single-shard graph
+    * over just the batch. `main` and existing segments are untouched
+    * (reference-equal — spec-asserted); duplicate ids across
+    * main/segments surface at compaction, exactly like a direct append
+    * would fail.
     */
   def hnswAppendSegment(seg: HnswSegmented, newVecs: DataFrame,
       maxDeg: Int = 8, efConstruction: Int = 32): HnswSegmented = {
     val prepared = newVecs
       .select(col("vec_id"), col("v").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(Dedup.dot(col("v"), col("v"))))
-    seg.copy(segments = seg.segments :+
-      hnswIndexOf(prepared, maxDeg, efConstruction, numShards = 1))
+    seg.copy(segments = seg.segments :+ hnswIndexOf(prepared, maxDeg,
+      efConstruction, numShards = 1, layered = seg.main.layered))
   }
 
   /** Serve across main + open segments: each index answers the probe
-    * batch independently (same per-shard layered descent as
+    * batch independently (same per-shard walk as
     * [[annHnswSearchProbes]]) and the union re-ranks to one global
-    * top-k per probe — identical surface to the un-segmented search.
+    * top-k per probe — identical surface to the un-segmented search,
+    * which is what a tier with no open segment returns.
     */
   def annHnswSearchSegmented(seg: HnswSegmented, probes: DataFrame,
-      efSearch: Int = 32, excludeSelf: Boolean = false): DataFrame =
-    mergeSegmentedTopK((seg.main :: seg.segments)
-      .map(ix => annHnswSearchProbes(ix, probes, efSearch, excludeSelf)))
-
-  /** Re-rank per-index top-ks (main + open segments) into one global
-    * top-k per probe — shared by the HNSW and flat-NSW segment tiers.
-    */
-  private def mergeSegmentedTopK(per: Seq[DataFrame]): DataFrame = {
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    per.map(_.select("probe_id", "neighbor_id", "cosine"))
-      .reduce(_ unionByName _)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select("probe_id", "rank", "neighbor_id", "cosine")
+      efSearch: Int = 32, excludeSelf: Boolean = false): DataFrame = {
+    val per = (seg.main :: seg.segments)
+      .map(ix => annHnswSearchProbes(ix, probes, efSearch, excludeSelf))
+    if (seg.segments.isEmpty) per.head
+    else {
+      val w = Window.partitionBy("probe_id")
+        .orderBy(col("cosine").desc, col("neighbor_id"))
+      per.map(_.select("probe_id", "neighbor_id", "cosine"))
+        .reduce(_ unionByName _)
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= TopK)
+        .select("probe_id", "rank", "neighbor_id", "cosine")
+    }
   }
 
-  /** Segment tier for the FLAT graph — the same micro-append
-    * economics as [[HnswSegmented]] (segments never rewrite main,
-    * merged serve, one-rewrite compaction) for deployments running
-    * single-layer NSW.
-    */
-  case class NswSegmented(main: GraphIndex, segments: List[GraphIndex])
-
-  def nswAppendSegment(seg: NswSegmented, newVecs: DataFrame,
-      maxDeg: Int = 8, efConstruction: Int = 32): NswSegmented = {
-    val prepared = newVecs
-      .select(col("vec_id"), col("v").cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(Dedup.dot(col("v"), col("v"))))
-    seg.copy(segments = seg.segments :+
-      graphIndexOf(prepared, maxDeg, efConstruction, numShards = 1))
-  }
-
-  def annGraphSearchSegmented(seg: NswSegmented, probes: DataFrame,
-      efSearch: Int = 32, excludeSelf: Boolean = false): DataFrame =
-    mergeSegmentedTopK((seg.main :: seg.segments)
-      .map(ix => annGraphSearchProbes(ix, probes, efSearch, excludeSelf)))
-
-  def compactNswSegments(seg: NswSegmented, maxDeg: Int = 8,
-      efConstruction: Int = 32): NswSegmented =
-    if (seg.segments.isEmpty) seg
-    else NswSegmented(
-      updateGraphIndex(seg.main,
-        seg.segments.map(_.nodes.select("vec_id", "v"))
-          .reduce(_ unionByName _),
-        maxDeg, efConstruction),
-      Nil)
-
-  /** Fold every open segment into `main` with ONE index rewrite (the
-    * same id-ordered insertion a direct [[updateHnswIndex]] of the
-    * concatenated batches would run, so the compacted index is
-    * bit-identical to having appended them directly — spec-asserted);
-    * segment order cannot matter because insertion is id-ordered.
+  /** Fold every open segment, and the `arriving` batch if given, into
+    * `main` with ONE index rewrite (the same id-ordered insertion a
+    * direct [[updateHnswIndex]] of the concatenated batches would run,
+    * so the compacted index is bit-identical to having appended them
+    * directly — spec-asserted); segment order cannot matter because
+    * insertion is id-ordered.
     */
   def compactHnswSegments(seg: HnswSegmented, maxDeg: Int = 8,
-      efConstruction: Int = 32): HnswSegmented =
-    if (seg.segments.isEmpty) seg
-    else HnswSegmented(
-      updateHnswIndex(seg.main,
-        seg.segments.map(_.nodes.select("vec_id", "v")).reduce(_ unionByName _),
-        maxDeg, efConstruction),
-      Nil)
+      efConstruction: Int = 32,
+      arriving: Option[DataFrame] = None): HnswSegmented =
+    (seg.segments.map(_.nodes.select("vec_id", "v")) ++ arriving) match {
+      case Nil => seg
+      case batches => HnswSegmented(updateHnswIndex(seg.main,
+        batches.reduce(_ unionByName _), maxDeg, efConstruction), Nil)
+    }
 
+  /** An index's nodes in its policy's persisted layout: the layered
+    * policy keeps `lnbrs`, the single-layer one saves its one layer as
+    * `nbrs`, so its artifacts keep the flat graph's layout. */
+  private def persistedNodes(idx: HnswIndex): DataFrame =
+    if (idx.layered) idx.nodes
+    else idx.nodes.select(col("shard"), col("vec_id"), col("v"), col("norm"),
+      col("lnbrs")(0).as("nbrs"))
+
+  /** [[persistedNodes]] read back: a node frame in the policy's saved
+    * layout, in the in-memory one. */
+  private def loadedNodes(nodes: DataFrame, layered: Boolean): DataFrame =
+    if (layered) nodes.select("shard", "vec_id", "v", "norm", "lnbrs")
+    else nodes.select(col("shard"), col("vec_id"), col("v"), col("norm"),
+      array(col("nbrs")).as("lnbrs"))
+
+  /** Manifest family of a policy's index: a single-layer index saves
+    * as `ann_nsw`, a layered one as `ann_hnsw`. */
+  private def graphFamily(layered: Boolean): String =
+    if (layered) "ann_hnsw" else "ann_nsw"
+
+  /** Persist / reload a fitted graph index; loaded search == fresh
+    * (spec-asserted). The shard count rides in a tiny sidecar file next
+    * to the parquet (written AFTER the overwrite so the mode doesn't
+    * delete it); pre-sidecar saves fall back to the old max(shard)+1
+    * derivation, which is only wrong in the empty-top-shard corner the
+    * sidecar now closes.
+    */
   def saveHnswIndex(idx: HnswIndex, path: String): Unit = {
-    idx.nodes.write.mode("overwrite").parquet(path)
+    persistedNodes(idx).write.mode("overwrite").parquet(path)
     writeShardMeta(idx.nodes.sparkSession, path, idx.numShards)
-    IndexManifest.write(idx.nodes.sparkSession, path, "ann_hnsw", Seq("."),
-      Map("num_shards" -> idx.numShards.toString))
+    IndexManifest.write(idx.nodes.sparkSession, path, graphFamily(idx.layered),
+      Seq("."), Map("num_shards" -> idx.numShards.toString))
+  }
+
+  /** The one graph loader: the policy comes from the manifest family
+    * (`ann_nsw` or `ann_hnsw`; any other family fails naming both), or
+    * for a pre-manifest save from its neighbor column. */
+  def loadHnswIndex(spark: SparkSession, path: String): HnswIndex = {
+    val family = IndexManifest.validateAny(spark, path,
+      Seq(false, true).map(graphFamily), Seq(".")).map(_._1)
+    val nodes = spark.read.parquet(path)
+    val layered = family.fold(nodes.columns.contains("lnbrs"))(_ == graphFamily(true))
+    val nbrCol = if (layered) "lnbrs" else "nbrs"
+    require(nodes.columns.toSet == Set("shard", "vec_id", "v", "norm", nbrCol),
+      s"invalid graph index at $path: ${nodes.columns.mkString(",")}")
+    val ns = readShardMeta(spark, path).getOrElse(
+      nodes.agg(coalesce(max("shard") + 1, lit(1))).head.getInt(0))
+    HnswIndex(loadedNodes(nodes, layered), ns, layered)
   }
 
   /** Persist a SEGMENTED deployment (main + open segments) under the
@@ -2281,37 +2011,62 @@ object Similarity {
     * segment tier exists to amortize. Layout is two fixed parts —
     * `main` (a nested [[saveHnswIndex]] artifact, its own manifest
     * riding inside) and `segments`, ALL open segments as one parquet
-    * tagged by `seg_id` — so overwriting an older save with a
-    * different segment count can never leave a stale segment
-    * directory behind. Segments are single-shard by construction
-    * ([[hnswAppendSegment]] builds them that way; asserted at save),
-    * so flattening them into one table loses nothing.
+    * tagged by `seg_id` in the policy's node layout — so overwriting
+    * an older save with a different segment count can never leave a
+    * stale segment directory behind. Segments are single-shard by
+    * construction ([[hnswAppendSegment]] builds them that way;
+    * asserted at save), so flattening them into one table loses
+    * nothing. The family is the policy's with a `_segmented` suffix.
     */
   def saveHnswSegmented(seg: HnswSegmented, path: String): Unit = {
     require(seg.segments.forall(_.numShards == 1),
       "segment tier persists single-shard segments only (appendSegment builds them)")
     saveHnswIndex(seg.main, s"$path/main")
-    writeSegmentsPart(seg.segments.map(_.nodes), seg.main.nodes, path)
+    seg.segments.zipWithIndex
+      .map { case (s, i) => persistedNodes(s).withColumn("seg_id", lit(i)) }
+      .reduceOption(_ unionByName _)
+      .getOrElse(persistedNodes(seg.main).filter(lit(false)).withColumn("seg_id", lit(0)))
+      .write.mode("overwrite").parquet(s"$path/segments")
     IndexManifest.write(seg.main.nodes.sparkSession, path,
-      "ann_hnsw_segmented", Seq("main", "segments"),
+      graphFamily(seg.main.layered) + "_segmented", Seq("main", "segments"),
       Map("num_segments" -> seg.segments.length.toString))
   }
 
   def loadHnswSegmented(spark: SparkSession, path: String): HnswSegmented = {
-    // outer family manifest first — see [[loadNswSegmented]]
-    val segs = readSegmentsPart(spark, path, "ann_hnsw_segmented",
-      Seq("shard", "vec_id", "v", "norm", "lnbrs")).map(HnswIndex(_, 1))
+    // the OUTER family manifest validates first — a wrong family must
+    // fail naming the segmented families, not deep inside the nested
+    // main artifact
+    val (family, params) = IndexManifest.validateAny(spark, path,
+      Seq(false, true).map(graphFamily(_) + "_segmented"), Seq("main", "segments"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no segmented-index manifest at $path"))
+    val layered = family == graphFamily(true) + "_segmented"
+    val segNodes = spark.read.parquet(s"$path/segments")
+    val segs = (0 until params("num_segments").toInt).toList.map { i =>
+      HnswIndex(loadedNodes(segNodes.filter(col("seg_id") === i), layered),
+        1, layered)
+    }
     HnswSegmented(loadHnswIndex(spark, s"$path/main"), segs)
   }
 
-  def loadHnswIndex(spark: SparkSession, path: String): HnswIndex = {
-    IndexManifest.validate(spark, path, "ann_hnsw", Seq(".")): Unit
-    val nodes = spark.read.parquet(path)
-    require(nodes.columns.toSet == Set("shard", "vec_id", "v", "norm", "lnbrs"),
-      s"invalid hnsw index at $path: ${nodes.columns.mkString(",")}")
-    val ns = readShardMeta(spark, path).getOrElse(
-      nodes.agg(coalesce(max("shard") + 1, lit(1))).head.getInt(0))
-    HnswIndex(nodes.select("shard", "vec_id", "v", "norm", "lnbrs"), ns)
+  private[graft] def writeShardMeta(spark: SparkSession, path: String,
+      numShards: Int): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path, "_graft_shards")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(p, true)
+    try out.write(numShards.toString.getBytes("UTF-8")) finally out.close()
+  }
+
+  private[graft] def readShardMeta(spark: SparkSession,
+      path: String): Option[Int] = {
+    val p = new org.apache.hadoop.fs.Path(path, "_graft_shards")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
+      finally in.close()
+    }
   }
 
   /** LSH-bucketed approximate top-k at the production (scale-safe)

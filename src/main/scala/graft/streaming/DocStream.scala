@@ -484,6 +484,9 @@ object DocStream extends Serializable {
 
   case class PrefCand(source: String, doc_id: Long, n_chars: Long, q: Double)
   case class PrefEntry(doc_id: Long, n_chars: Long, q: Double)
+  /** Per-group state of [[prefPairsStream]], kryo-encoded for the
+    * reason [[TickStream.FfillState]] gives; a checkpoint written with
+    * the product encoding needs a fresh one. */
   case class PrefPairState(cands: List[PrefEntry])
   case class PrefPairRow(source: String, chosen_id: Long, rejected_id: Long,
       chosen_q: Double, rejected_q: Double, margin: Double,
@@ -548,7 +551,9 @@ object DocStream extends Serializable {
       .as[PrefCand]
       .groupByKey(_.source)
       .flatMapGroupsWithState(OutputMode.Update(),
-        GroupStateTimeout.NoTimeout)(update)
+        GroupStateTimeout.NoTimeout)(update)(
+        org.apache.spark.sql.Encoders.kryo[PrefPairState],
+        implicitly[org.apache.spark.sql.Encoder[PrefPairRow]])
   }
 
   /** Streaming ANN serve — train offline, serve online for vector
@@ -572,75 +577,26 @@ object DocStream extends Serializable {
     }
 
   /** The graph-index flavor of [[annServeStream]]: the same
-    * foreachBatch serve loop over a fitted NSW [[graft.operators.Similarity.GraphIndex]]
-    * — per-shard beam searches with zero streaming state. Any fitted
-    * index family serves this way; only the per-batch search function
-    * differs.
-    */
-  def annGraphServeStream(probeStream: DataFrame,
-      idx: graft.operators.Similarity.GraphIndex, efSearch: Int = 32)(
-      writeBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    probeStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      writeBatch(graft.operators.Similarity.annGraphSearchProbes(
-        idx, probeVectors(batch), efSearch), batchId)
-    }
-
-  /** The HNSW flavor of [[annGraphServeStream]] — the layered
-    * hierarchy serves probe batches exactly like the flat graph (the
-    * descent is per-probe, stateless); at 100 TB shard sizes this is
-    * the serve leg to prefer: narrow beams keep latency down and the
-    * layer descent keeps their recall (RecallProbe: 0.96 at
-    * efSearch=8 vs the flat graph's 0.66).
+    * foreachBatch serve loop over a late-bound graph TIER
+    * ([[graft.operators.Similarity.HnswSegmented]] — a main index plus
+    * its open segments; a plain index is a tier with no segments).
+    * Each probe microbatch searches whatever tier `tier` returns at
+    * that batch — per-shard walks with zero streaming state — so serve
+    * follows the appends AND compactions [[hnswSegmentMaintainStream]]
+    * publishes mid-query with no restart, exactly like
+    * [[nearDupDocsStreamRolling]]'s gate. At 100 TB shard sizes serve
+    * a layered index: narrow beams keep latency down and the layer
+    * descent keeps their recall (RecallProbe: 0.96 at efSearch=8 vs
+    * the single layer's 0.66).
     */
   def annHnswServeStream(probeStream: DataFrame,
-      idx: graft.operators.Similarity.HnswIndex, efSearch: Int = 32)(
+      tier: () => graft.operators.Similarity.HnswSegmented,
+      efSearch: Int = 32)(
       writeBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     probeStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      writeBatch(graft.operators.Similarity.annHnswSearchProbes(
-        idx, probeVectors(batch), efSearch), batchId)
+      writeBatch(graft.operators.Similarity.annHnswSearchSegmented(
+        tier(), probeVectors(batch), efSearch), batchId)
     }
-
-  /** Streaming INDEX MAINTENANCE — the ingest-side dual of the serve
-    * streams: each microbatch of newly-arrived embeddings appends
-    * into the standing HNSW hierarchy through
-    * [[graft.operators.Similarity.updateHnswIndex]] (hash-routed to
-    * its shard, id-ordered insertion, levels from the same id hash a
-    * fresh build uses), and the updated index is handed to the
-    * caller to swap into the serve path — together with
-    * [[annHnswServeStream]] this closes the loop: ingest maintains
-    * the index, serve probes whatever the last completed batch
-    * published. The standing index is `localCheckpoint`ed each batch:
-    * appends are LAZY, so without truncation batch N's index would
-    * re-walk every prior batch's insertion on every action — the
-    * checkpoint makes each append's cost O(that batch) and unpins the
-    * microbatch source it derived from. Superseded generations'
-    * checkpoint blocks are released with a ONE-GENERATION lag (when
-    * batch N lands, batch N-2's blocks free — the same
-    * keep-one-handle discipline as the rolling probes' broadcast
-    * destroy()): the serve stream swaps to N only via `onUpdate`, so
-    * a probe batch already in flight against N-1 gets a full batch
-    * interval to drain before its blocks vanish (a localCheckpoint
-    * cannot recompute — lineage is truncated). Without the release, a
-    * long-running query leaves every generation's pinned blocks to
-    * ContextCleaner GC. The caller's `initial` is never unpersisted.
-    */
-  def hnswMaintainStream(embStream: DataFrame,
-      initial: graft.operators.Similarity.HnswIndex,
-      maxDeg: Int = 8, efConstruction: Int = 32)(
-      onUpdate: (graft.operators.Similarity.HnswIndex, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var retiring: Option[graft.operators.Similarity.HnswIndex] = None
-    maintainStream(embStream, initial) { (idx, batch, _) =>
-      val vecs = batch.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      val appended = graft.operators.Similarity
-        .updateHnswIndex(idx, vecs, maxDeg, efConstruction)
-      val next = appended.copy(nodes = appended.nodes.localCheckpoint(true))
-      retiring.filter(r => !(r eq initial)).foreach(r =>
-        org.apache.spark.sql.GraftShim.unpersistCheckpoint(r.nodes))
-      retiring = Some(idx)
-      (next, Seq(next))
-    }(onUpdate)
-  }
 
   /** Streaming CLUSTER-IDENTITY maintenance — the cross-run tier for
     * component labels, completing the standing-corpus dedup story:
@@ -657,7 +613,7 @@ object DocStream extends Serializable {
     * label table is what [[graft.operators.Dedup.dedupCanonical]]-style
     * selection reads downstream.
     *
-    * Same checkpoint-and-release discipline as [[hnswMaintainStream]]:
+    * Same checkpoint-and-release discipline as [[hnswSegmentMaintainStream]]:
     * each generation is `localCheckpoint`ed so batch N's fold costs
     * O(batch) instead of re-walking every prior batch's joins, and
     * superseded generations' blocks free with a one-generation lag
@@ -731,109 +687,63 @@ object DocStream extends Serializable {
     } { case (pair, batchId) => onUpdate(pair, batchId) }
   }
 
-  /** The SEGMENTED serve leg — [[annHnswServeStream]] over a
-    * [[graft.operators.Similarity.HnswSegmented]], late-bound through
-    * `seg` exactly like [[nearDupDocsStreamRolling]]'s gate: each
-    * probe microbatch searches whatever main + open segments the
-    * maintenance loop last published, so serve follows appends AND
-    * compactions mid-query with no restart. Compose with
-    * [[hnswSegmentMaintainStream]] for the full live loop: ingest
-    * opens segments and compacts at the bar, serve probes the
-    * current tier.
-    */
-  def annHnswServeStreamSegmented(probeStream: DataFrame,
-      seg: () => graft.operators.Similarity.HnswSegmented,
-      efSearch: Int = 32)(
-      writeBatch: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    probeStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      writeBatch(graft.operators.Similarity.annHnswSearchSegmented(
-        seg(), probeVectors(batch), efSearch), batchId)
-    }
-
-  /** SEGMENTED HNSW maintenance — [[hnswMaintainStream]] without its
-    * documented flaw: the direct-append loop rewrites the WHOLE
-    * standing index every microbatch (O(index) per batch — its own
-    * scaladoc says to amortize by batching). Here each microbatch
-    * becomes a SEGMENT (build cost O(batch·log batch), `main` is
-    * never touched — [[graft.operators.Similarity.hnswAppendSegment]]),
-    * and once `maxSegments` are open the tier compacts: ONE rewrite
-    * absorbing every open segment, bit-identical to having appended
-    * them directly. `maxSegments` is the latency-vs-rewrite knob —
-    * serve cost grows by one beam descent per open segment
-    * ([[graft.operators.Similarity.annHnswSearchSegmented]]), so
-    * compact when segments × per-segment latency outweighs one
-    * rewrite amortized over `maxSegments` batches. Fresh segments and
-    * compacted mains are `localCheckpoint`ed (appends are lazy — see
-    * [[hnswMaintainStream]]) and the whole tier publishes via
-    * `onUpdate`, publish-then-swap like every maintenance loop here.
+  /** Streaming INDEX MAINTENANCE — the ingest-side dual of
+    * [[annHnswServeStream]]: each microbatch of newly-arrived
+    * embeddings becomes a SEGMENT of the standing tier (build cost
+    * O(batch·log batch), `main` never touched —
+    * [[graft.operators.Similarity.hnswAppendSegment]]), and the batch
+    * that would open the `maxSegments`-th segment is instead folded,
+    * with every open segment, into main by ONE rewrite
+    * ([[graft.operators.Similarity.compactHnswSegments]] — id-ordered
+    * insertion, so bit-identical to having appended each batch
+    * directly, and no segment is built only to be folded). With
+    * `maxSegments = 1` every batch appends directly
+    * ([[graft.operators.Similarity.updateHnswIndex]]), rewriting the
+    * whole standing index each microbatch; a larger bar amortizes that
+    * O(index) rewrite over the batches between compactions, at the
+    * price of one more walk per open segment on serve. Both policies
+    * maintain the same way: segments and folds keep main's policy.
+    *
+    * The updated tier is handed to `onUpdate`, publish-then-swap:
+    * serve probes whatever the last completed batch published. Fresh
+    * segments and compacted mains are `localCheckpoint`ed — appends
+    * are LAZY, so without truncation batch N's index would re-walk
+    * every prior batch's insertion on every action; the checkpoint
+    * makes each append's cost O(that batch) and unpins the microbatch
+    * source it derived from. A compaction retires a whole tier (old
+    * main + every folded segment); its checkpoint blocks are released
+    * one generation later, so a probe batch already in flight against
+    * it gets a full batch interval to drain before its blocks vanish
+    * (a localCheckpoint cannot recompute — lineage is truncated).
+    * Without the release, a long-running query leaves every
+    * generation's pinned blocks to ContextCleaner GC. The caller's
+    * `initial` tier is never unpersisted.
     */
   def hnswSegmentMaintainStream(embStream: DataFrame,
       initial: graft.operators.Similarity.HnswSegmented,
       maxSegments: Int = 8, maxDeg: Int = 8, efConstruction: Int = 32)(
       onUpdate: (graft.operators.Similarity.HnswSegmented, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // compaction retires a whole tier (old main + every folded
-    // segment); release its checkpoint blocks one generation later so
-    // in-flight serve batches drain first (see hnswMaintainStream)
     var retiring: List[DataFrame] = Nil
     val initialNodes = (initial.main +: initial.segments).map(_.nodes).toSet
-    maintainStream(embStream, initial) { (seg0, batch, _) =>
+    maintainStream(embStream, initial) { (tier, batch, _) =>
       val vecs = batch.select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
-      val appended = graft.operators.Similarity
-        .hnswAppendSegment(seg0, vecs, maxDeg, efConstruction)
-      val pinned = appended.segments.init :+
-        appended.segments.last.copy(
-          nodes = appended.segments.last.nodes.localCheckpoint(true))
-      val opened = appended.copy(segments = pinned)
       retiring.foreach(org.apache.spark.sql.GraftShim.unpersistCheckpoint)
       retiring = Nil
-      val seg = if (opened.segments.length >= maxSegments) {
+      val next = if (tier.segments.length + 1 >= maxSegments) {
         val compacted = graft.operators.Similarity
-          .compactHnswSegments(opened, maxDeg, efConstruction)
-        retiring = (opened.main +: opened.segments).map(_.nodes)
+          .compactHnswSegments(tier, maxDeg, efConstruction, Some(vecs))
+        retiring = (tier.main +: tier.segments).map(_.nodes)
           .filterNot(initialNodes).toList
-        graft.operators.Similarity.HnswSegmented(
-          compacted.main.copy(
-            nodes = compacted.main.nodes.localCheckpoint(true)), Nil)
-      } else opened
-      (seg, Seq(seg))
-    }(onUpdate)
-  }
-
-  /** [[hnswSegmentMaintainStream]]'s flat-NSW dual — the same
-    * open-segment / compaction-bar economics for deployments running
-    * single-layer NSW ([[graft.operators.Similarity.NswSegmented]]):
-    * identical pin/retire discipline, only the append and compaction
-    * legs differ (single-layer build, [[graft.operators.Similarity
-    * .compactNswSegments]]'s one-rewrite fold).
-    */
-  def nswSegmentMaintainStream(embStream: DataFrame,
-      initial: graft.operators.Similarity.NswSegmented,
-      maxSegments: Int = 8, maxDeg: Int = 8, efConstruction: Int = 32)(
-      onUpdate: (graft.operators.Similarity.NswSegmented, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var retiring: List[DataFrame] = Nil
-    val initialNodes = (initial.main +: initial.segments).map(_.nodes).toSet
-    maintainStream(embStream, initial) { (seg0, batch, _) =>
-      val vecs = batch.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      val appended = graft.operators.Similarity
-        .nswAppendSegment(seg0, vecs, maxDeg, efConstruction)
-      val pinned = appended.segments.init :+
-        appended.segments.last.copy(
-          nodes = appended.segments.last.nodes.localCheckpoint(true))
-      val opened = appended.copy(segments = pinned)
-      retiring.foreach(org.apache.spark.sql.GraftShim.unpersistCheckpoint)
-      retiring = Nil
-      val seg = if (opened.segments.length >= maxSegments) {
-        val compacted = graft.operators.Similarity
-          .compactNswSegments(opened, maxDeg, efConstruction)
-        retiring = (opened.main +: opened.segments).map(_.nodes)
-          .filterNot(initialNodes).toList
-        graft.operators.Similarity.NswSegmented(
-          compacted.main.copy(
-            nodes = compacted.main.nodes.localCheckpoint(true)), Nil)
-      } else opened
-      (seg, Seq(seg))
+        compacted.copy(main = compacted.main.copy(
+          nodes = compacted.main.nodes.localCheckpoint(true)))
+      } else {
+        val opened = graft.operators.Similarity
+          .hnswAppendSegment(tier, vecs, maxDeg, efConstruction)
+        opened.copy(segments = opened.segments.init :+ opened.segments.last
+          .copy(nodes = opened.segments.last.nodes.localCheckpoint(true)))
+      }
+      (next, Seq(next))
     }(onUpdate)
   }
 

@@ -136,8 +136,7 @@ object TickStream extends Serializable {
 
   /** The GENERIC publish-then-swap maintenance loop — the one
     * skeleton every driver-held standing-artifact stream shares
-    * ([[DocStream.hnswMaintainStream]],
-    * [[DocStream.hnswSegmentMaintainStream]], [[registryMaintainStream]]
+    * ([[DocStream.hnswSegmentMaintainStream]], [[registryMaintainStream]]
     * and [[DocStream.rollingGateMaintainStream]]
     * are all thin `step` functions over it): each microbatch folds
     * into the maintenance state `S` and emits zero or more published
@@ -153,7 +152,7 @@ object TickStream extends Serializable {
     * WHAT publishes, the stream decides WHEN it runs — and owns
     * `localCheckpoint`ing any lazy plan it emits, so a publication
     * hands the serve side an artifact whose cost is already paid
-    * (see [[DocStream.hnswMaintainStream]] for why that matters).
+    * (see [[DocStream.hnswSegmentMaintainStream]] for why that matters).
     *
     * FAILURE CONTRACT: the fold state is driver-held and
     * session-scoped — it does NOT survive a restart, and `onPublish`
@@ -206,10 +205,10 @@ object TickStream extends Serializable {
     }
 
   /** Streaming REGISTRY MAINTENANCE — the refresh cadence of
-    * [[graft.operators.Forecast.refreshModelRegistry]] driven by the
+    * [[graft.operators.Forecast.refreshModelRegistryTicks]] driven by the
     * live tick stream (the ingest-side dual of [[forecastServeStream]],
     * closing the fit/serve loop the same way
-    * [[DocStream.hnswMaintainStream]] closes the index one): each
+    * [[DocStream.hnswSegmentMaintainStream]] closes the index one): each
     * microbatch counts its VALID arrivals
     * per symbol — a symbol-sized aggregate; the stream itself is
     * never buffered here, production batches land in the lake
@@ -272,6 +271,13 @@ object TickStream extends Serializable {
   case class FfillPendingDay(day: Int, ts_micros: Long, event_id: Long,
       close: Double)
 
+  /** Per-symbol state of [[priceFfillStream]], kryo-encoded like
+    * [[BarState]]: the product encoder decodes `pending` through
+    * `MapObjects`, whose lambda variable is fresh in each microbatch,
+    * so it compiled new state decoders every batch. A checkpoint
+    * written with the product encoding cannot resume on this build:
+    * restart with a fresh checkpoint (the [[IndicatorState]] contract).
+    */
   case class FfillState(lastDay: Int, lastClose: Double,
       hasEmitted: Boolean, pending: List[FfillPendingDay])
 
@@ -366,7 +372,9 @@ object TickStream extends Serializable {
       .select("user_id", "event_id", "ts", "value").as[Tick]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+        GroupStateTimeout.EventTimeTimeout)(update)(
+        org.apache.spark.sql.Encoders.kryo[FfillState],
+        implicitly[org.apache.spark.sql.Encoder[FfillRow]])
   }
 
   /** A tick carrying its parsed volume payload — the bar engine's

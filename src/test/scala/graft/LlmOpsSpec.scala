@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity, TextOps}
+import graft.operators.{Dedup, IndexManifest, Similarity, TextOps}
 import org.apache.spark.sql.functions._
 
 class LlmOpsSpec extends SparkSuite {
@@ -1303,32 +1303,46 @@ class LlmOpsSpec extends SparkSuite {
   test("graph index: build-once search equals fused; save/load round-trips") {
     val corpus = Similarity.vecs(spark, sfDir).toDF("vec_id", "v", "norm")
     val fused = Similarity.annGraph(spark, sfDir).collect().map(_.toString).toSeq
-    val idx = Similarity.graphIndex(spark, sfDir)
-    val viaIdx = Similarity.annGraphSearch(idx, corpus)
+    val idx = Similarity.hnswIndex(spark, sfDir, layered = false)
+    val viaIdx = Similarity.annHnswSearch(idx, corpus)
       .collect().map(_.toString).toSeq
     assert(fused == viaIdx, "index-path search diverged from the fused build")
     val path = java.nio.file.Files.createTempDirectory("graft_nsw").toString
-    Similarity.saveGraphIndex(idx, path)
-    val loaded = Similarity.annGraphSearch(
-      Similarity.loadGraphIndex(spark, path), corpus)
+    Similarity.saveHnswIndex(idx, path)
+    // a single-layer index saves in the flat graph's layout — the
+    // columns and encoder types of a (shard, vec_id, v, norm, nbrs)
+    // node row, manifest family ann_nsw — so earlier flat saves load
+    import spark.implicits._
+    val flatPath = java.nio.file.Files.createTempDirectory("graft_nsw_layout").toString
+    Seq.empty[(Int, Long, Seq[Double], Double, Seq[Long])]
+      .toDF("shard", "vec_id", "v", "norm", "nbrs")
+      .write.mode("overwrite").parquet(flatPath)
+    assert(spark.read.parquet(path).schema == spark.read.parquet(flatPath).schema)
+    assert(IndexManifest.validate(spark, path, "ann_nsw", Seq(".")).isDefined)
+    val reloaded = Similarity.loadHnswIndex(spark, path)
+    assert(!reloaded.layered && reloaded.numShards == idx.numShards)
+    val loaded = Similarity.annHnswSearch(reloaded, corpus)
       .collect().map(_.toString).toSeq
     assert(viaIdx == loaded)
   }
 
-  test("updateGraphIndex appends in place and new vectors become findable") {
+  test("single-layer updateHnswIndex appends in place and new vectors become findable") {
     val corpus = Similarity.vecs(spark, sfDir).toDF("vec_id", "v", "norm")
-    val idx = Similarity.graphIndex(spark, sfDir)
+    val idx = Similarity.hnswIndex(spark, sfDir, layered = false)
     // ingest batch: verbatim copies of the 5 probe vectors, fresh ids
     val batch = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 5)
       .select((col("vec_id") + 1000000L).as("vec_id"),
         col("embedding").cast("array<double>").as("v"))
-    val updated = Similarity.updateGraphIndex(idx, batch)
+    val updated = Similarity.updateHnswIndex(idx, batch)
     // row accounting: all old nodes plus each new node exactly once
     assert(updated.nodes.count() == idx.nodes.count() + 5)
     assert(updated.nodes.select("vec_id").distinct().count()
       == updated.nodes.count())
+    // the append keeps the policy: every node stays on level 0
+    assert(!updated.layered &&
+      updated.nodes.filter(size(col("lnbrs")) =!= 1).isEmpty)
     // each probe's planted twin surfaces as its rank-1 neighbor
-    val res = Similarity.annGraphSearch(updated, corpus).collect()
+    val res = Similarity.annHnswSearch(updated, corpus).collect()
     val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
     (0L until 5L).foreach { p =>
       val top = byProbe(p).minBy(_.getAs[Int]("rank"))
@@ -1337,7 +1351,7 @@ class LlmOpsSpec extends SparkSuite {
       assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
     }
     // deterministic append
-    val again = Similarity.updateGraphIndex(idx, batch)
+    val again = Similarity.updateHnswIndex(idx, batch)
     assert(updated.nodes.collect().map(_.toString).sorted.toSeq
       == again.nodes.collect().map(_.toString).sorted.toSeq)
   }
@@ -1405,86 +1419,63 @@ class LlmOpsSpec extends SparkSuite {
   }
 
   test("segmented hnsw: appends leave main untouched, merged serve, one-rewrite compaction") {
+    // under both build policies: segments, merged serve and compaction
+    // are one implementation, and each keeps main's policy
     val corpus = Similarity.vecs(spark, sfDir).toDF("vec_id", "v", "norm")
-    val mainIdx = Similarity.hnswIndex(spark, sfDir)
-    def twins(lo: Long, hi: Long) = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") >= lo && col("vec_id") < hi)
-      .select((col("vec_id") + 2000000L).as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-    var seg = Similarity.HnswSegmented(mainIdx, Nil)
-    seg = Similarity.hnswAppendSegment(seg, twins(0, 3))
-    seg = Similarity.hnswAppendSegment(seg, twins(3, 5))
-    // the append economics: main's node frame is the SAME object —
-    // nothing about the standing index was recomputed or rewritten
-    assert((seg.main.nodes eq mainIdx.nodes) && seg.segments.length == 2,
-      "segment append must not touch main")
-    // merged serve: each twin lives ONLY in a segment, so finding it
-    // rank-1 proves the segment legs participate in the global top-k
-    val probes = corpus.filter(col("vec_id") < 5)
-      .toDF("probe_id", "p_v", "p_norm")
-    val res = Similarity.annHnswSearchSegmented(seg, probes,
-      excludeSelf = true).collect()
-    val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
-    (0L until 5L).foreach { p =>
-      val top = byProbe(p).minBy(_.getAs[Int]("rank"))
-      assert(top.getAs[Long]("neighbor_id") == p + 2000000L,
-        s"probe $p: expected its segment twin first, got $top")
-      assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
+    for (layered <- Seq(true, false)) {
+      val clue = if (layered) "layered" else "single-layer"
+      val mainIdx = Similarity.hnswIndex(spark, sfDir, layered = layered)
+      def twins(lo: Long, hi: Long) = Tables.embeddings(spark, sfDir)
+        .filter(col("vec_id") >= lo && col("vec_id") < hi)
+        .select((col("vec_id") + 2000000L).as("vec_id"),
+          col("embedding").cast("array<double>").as("v"))
+      var seg = Similarity.HnswSegmented(mainIdx, Nil)
+      seg = Similarity.hnswAppendSegment(seg, twins(0, 3))
+      seg = Similarity.hnswAppendSegment(seg, twins(3, 5))
+      // the append economics: main's node frame is the SAME object —
+      // nothing about the standing index was recomputed or rewritten
+      assert((seg.main.nodes eq mainIdx.nodes) && seg.segments.length == 2,
+        s"$clue: segment append must not touch main")
+      assert(seg.segments.forall(_.layered == layered), clue)
+      // merged serve: each twin lives ONLY in a segment, so finding it
+      // rank-1 proves the segment legs participate in the global top-k
+      val probes = corpus.filter(col("vec_id") < 5)
+        .toDF("probe_id", "p_v", "p_norm")
+      val res = Similarity.annHnswSearchSegmented(seg, probes,
+        excludeSelf = true).collect()
+      val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
+      (0L until 5L).foreach { p =>
+        val top = byProbe(p).minBy(_.getAs[Int]("rank"))
+        assert(top.getAs[Long]("neighbor_id") == p + 2000000L,
+          s"$clue probe $p: expected its segment twin first, got $top")
+        assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
+      }
+      // the union re-ranks to ONE top-k: full rank runs, descending
+      byProbe.values.foreach { rows =>
+        val sorted = rows.sortBy(_.getAs[Int]("rank"))
+        assert(sorted.map(_.getAs[Int]("rank")).toSeq == (1 to rows.length),
+          s"$clue: ranks must be a contiguous 1..k run after the merge")
+        val cosines = sorted.map(_.getAs[Double]("cosine")).toSeq
+        assert(cosines == cosines.sorted.reverse, s"$clue: merge must rank by cosine")
+      }
+      // compaction = ONE rewrite, bit-identical to having appended the
+      // concatenated batches directly (id-ordered insertion makes
+      // segment order irrelevant)
+      val compacted = Similarity.compactHnswSegments(seg)
+      assert(compacted.segments.isEmpty)
+      val direct = Similarity.updateHnswIndex(mainIdx, twins(0, 5))
+      assert(compacted.main.nodes.collect().map(_.toString).sorted.toSeq
+        == direct.nodes.collect().map(_.toString).sorted.toSeq,
+        s"$clue: compacted index diverged from a direct append")
+      // and the compacted index still serves the twins rank-1
+      val resC = Similarity.annHnswSearchProbes(compacted.main, probes,
+        excludeSelf = true).collect().groupBy(_.getAs[Long]("probe_id"))
+      (0L until 5L).foreach { p =>
+        val top = resC(p).minBy(_.getAs[Int]("rank"))
+        assert(top.getAs[Long]("neighbor_id") == p + 2000000L,
+          s"$clue: post-compaction probe $p lost its twin: $top")
+      }
     }
-    // the union re-ranks to ONE top-k: full rank runs, descending
-    byProbe.values.foreach { rows =>
-      val sorted = rows.sortBy(_.getAs[Int]("rank"))
-      assert(sorted.map(_.getAs[Int]("rank")).toSeq == (1 to rows.length),
-        "ranks must be a contiguous 1..k run after the merge")
-      val cosines = sorted.map(_.getAs[Double]("cosine")).toSeq
-      assert(cosines == cosines.sorted.reverse, "merge must rank by cosine")
-    }
-    // compaction = ONE rewrite, bit-identical to having appended the
-    // concatenated batches directly (id-ordered insertion makes
-    // segment order irrelevant)
-    val compacted = Similarity.compactHnswSegments(seg)
-    assert(compacted.segments.isEmpty)
-    val direct = Similarity.updateHnswIndex(mainIdx, twins(0, 5))
-    assert(compacted.main.nodes.collect().map(_.toString).sorted.toSeq
-      == direct.nodes.collect().map(_.toString).sorted.toSeq,
-      "compacted index diverged from a direct append")
-    // and the compacted index still serves the twins rank-1
-    val resC = Similarity.annHnswSearchProbes(compacted.main, probes,
-      excludeSelf = true).collect().groupBy(_.getAs[Long]("probe_id"))
-    (0L until 5L).foreach { p =>
-      val top = resC(p).minBy(_.getAs[Int]("rank"))
-      assert(top.getAs[Long]("neighbor_id") == p + 2000000L,
-        s"post-compaction probe $p lost its twin: $top")
-    }
-  }
-
-  test("segmented flat-NSW mirrors the HNSW segment tier") {
-    val mainIdx = Similarity.graphIndex(spark, sfDir)
-    def twins(lo: Long, hi: Long) = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") >= lo && col("vec_id") < hi)
-      .select((col("vec_id") + 5000000L).as("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-    var seg = Similarity.NswSegmented(mainIdx, Nil)
-    seg = Similarity.nswAppendSegment(seg, twins(0, 3))
-    seg = Similarity.nswAppendSegment(seg, twins(3, 5))
-    assert((seg.main.nodes eq mainIdx.nodes) && seg.segments.length == 2,
-      "segment append must not touch main")
-    val probes = Similarity.vecs(spark, sfDir).toDF("vec_id", "v", "norm")
-      .filter(col("vec_id") < 5).toDF("probe_id", "p_v", "p_norm")
-    val res = Similarity.annGraphSearchSegmented(seg, probes,
-      excludeSelf = true).collect()
-    val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
-    (0L until 5L).foreach { p =>
-      val top = byProbe(p).minBy(_.getAs[Int]("rank"))
-      assert(top.getAs[Long]("neighbor_id") == p + 5000000L,
-        s"probe $p: expected its segment twin first, got $top")
-    }
-    val compacted = Similarity.compactNswSegments(seg)
-    assert(compacted.segments.isEmpty)
-    val direct = Similarity.updateGraphIndex(mainIdx, twins(0, 5))
-    assert(compacted.main.nodes.collect().map(_.toString).sorted.toSeq
-      == direct.nodes.collect().map(_.toString).sorted.toSeq,
-      "NSW compaction diverged from a direct append")
   }
 
   test("bloom_might_contain: parity with sketch probes, null-safe both sides, codegen'd") {

@@ -38,12 +38,12 @@ class ManifestSpec extends SparkSuite {
     // root-parquet families (manifest rides inside the parquet dir as
     // an underscore sidecar) — params carry the shard count
     val nswPath = tmp("man_nsw")
-    val nsw = Similarity.graphIndex(spark, sfDir)
-    Similarity.saveGraphIndex(nsw, nswPath)
+    val nsw = Similarity.hnswIndex(spark, sfDir, layered = false)
+    Similarity.saveHnswIndex(nsw, nswPath)
     val nswParams = IndexManifest.validate(spark, nswPath, "ann_nsw", Seq("."))
     assert(nswParams.exists(_.get("num_shards")
       .contains(nsw.numShards.toString)))
-    assert(Similarity.loadGraphIndex(spark, nswPath).numShards == nsw.numShards)
+    assert(Similarity.loadHnswIndex(spark, nswPath).numShards == nsw.numShards)
 
     val hnswPath = tmp("man_hnsw")
     val hnsw = Similarity.hnswIndex(spark, sfDir)
@@ -90,6 +90,13 @@ class ManifestSpec extends SparkSuite {
     }
     assert(wrong.getMessage.contains("ann_pq")
       && wrong.getMessage.contains("ann_opq"), wrong.getMessage)
+    // the one graph loader reads either graph family and no other:
+    // the error names both
+    val wrongGraph = intercept[IllegalArgumentException] {
+      Similarity.loadHnswIndex(spark, pqPath)
+    }
+    assert(Seq("ann_pq", "'ann_nsw'", "'ann_hnsw'")
+      .forall(wrongGraph.getMessage.contains), wrongGraph.getMessage)
     // same guard across artifact kinds: an ARIMA registry is not a
     // linreg registry
     val wrongReg = intercept[IllegalArgumentException] {
@@ -152,19 +159,24 @@ class ManifestSpec extends SparkSuite {
     val path0 = tmp("man_hseg0")
     Similarity.saveHnswSegmented(Similarity.HnswSegmented(main, Nil), path0)
     assert(Similarity.loadHnswSegmented(spark, path0).segments.isEmpty)
-    // NSW dual + the cross-family guard between the two segmented tiers
-    val ntier = Similarity.nswAppendSegment(
-      Similarity.NswSegmented(Similarity.graphIndexOf(
-        corpus.filter(col("vec_id") < 450)), Nil), seg2)
+    // the single-layer policy saves as its own segmented family, and
+    // the one loader restores the policy from it
+    val ntier = Similarity.hnswAppendSegment(
+      Similarity.HnswSegmented(Similarity.hnswIndexOf(
+        corpus.filter(col("vec_id") < 450), layered = false), Nil), seg2)
     val npath = tmp("man_nseg")
-    Similarity.saveNswSegmented(ntier, npath)
-    val nloaded = Similarity.loadNswSegmented(spark, npath)
-    assert(Similarity.annGraphSearchSegmented(nloaded, probes).collect()
+    Similarity.saveHnswSegmented(ntier, npath)
+    assert(IndexManifest.validate(spark, npath, "ann_nsw_segmented",
+      Seq("main", "segments")).isDefined)
+    val nloaded = Similarity.loadHnswSegmented(spark, npath)
+    assert((nloaded.main +: nloaded.segments).forall(!_.layered))
+    assert(Similarity.annHnswSearchSegmented(nloaded, probes).collect()
       .map(_.toSeq).toSeq ==
-      Similarity.annGraphSearchSegmented(ntier, probes).collect()
+      Similarity.annHnswSearchSegmented(ntier, probes).collect()
         .map(_.toSeq).toSeq)
+    // a segmented tier is not a plain index: the family guard holds
     val wrongSeg = intercept[IllegalArgumentException] {
-      Similarity.loadNswSegmented(spark, path)
+      Similarity.loadHnswIndex(spark, path)
     }
     assert(wrongSeg.getMessage.contains("ann_hnsw_segmented"),
       wrongSeg.getMessage)

@@ -68,6 +68,45 @@ class PerfLedgerSpec extends SparkSuite {
       .map(r => r.getAs[String]("component_name") -> r).toMap
     assert(roll("c1").getAs[Long]("n_batches") == 2L)
     assert(roll("c1").getAs[Long]("total_rows") == 300L)
+    // a retried flush stopped once its merge is revealed: the rewritten
+    // file and the file it replaces are both visible, and the ledger
+    // read still counts each record once
+    graft.sources.Sinks.stopAt = s =>
+      if (s == "revealed") throw new IllegalStateException("stopped")
+    try intercept[IllegalStateException](PerfLedger.appendLedger(spark, batch1, path))
+    finally graft.sources.Sinks.stopAt = _ => ()
+    assert(spark.read.parquet(path).count() > 3, "the stop left no overlap to read")
+    assert(PerfLedger.readLedger(spark, path).count() == 3)
+  }
+
+  test("a failed stream query books its error row under its own name") {
+    import spark.implicits._
+    val listener = new PerfLedger.BatchPerfListener
+    spark.streams.addListener(listener)
+    try {
+      val mem = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[Int](implicitly[org.apache.spark.sql.Encoder[Int]], spark.sqlContext)
+      val q = mem.toDF().writeStream.queryName("perf_boom")
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          throw new RuntimeException("boom")
+        }
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("ckpt_boom").toString)
+        .start()
+      mem.addData(1, 2, 3)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      q.stop()
+      // the terminated event delivers asynchronously — poll for it
+      val deadline = System.currentTimeMillis() + 30000
+      while (!listener.records.exists(_.errors_count > 0)
+          && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      val roll = PerfLedger.rollup(PerfLedger.ledgerOf(spark, listener.records))
+        .collect().map(r => r.getAs[String]("component_name") -> r).toMap
+      assert(roll.get("perf_boom").exists(_.getAs[Long]("total_errors") == 1L)
+        && !roll.contains("stream"), s"rollup rows: ${roll.values}")
+    } finally spark.streams.removeListener(listener)
   }
 
   test("streaming listener ledgers every microbatch for free") {

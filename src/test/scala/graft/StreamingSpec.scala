@@ -520,16 +520,47 @@ class StreamingSpec extends SparkSuite {
 
   test("the indicator state decoder compiles once, not once per microbatch") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    val (mem, df) = tickStream()
-    val q = startToMemory(TickStream.statefulIndicators(spark, df).toDF(), "compile_ind")
-    val compiled = try (0 until 10).map { b =>
-      mem.addData((1 to 6).map(j => (b * 6L + j, new java.sql.Timestamp((b * 6L + j) * 60000L),
-        j % 3L, 100.0 + b + j * 0.25)))
-      q.processAllAvailable()
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    } finally q.stop()
-    assert(compiled.drop(2).distinct.size == 1,
-      s"compilations so far, after each microbatch: $compiled")
+    import spark.implicits._
+    // every stateful operator whose state holds a collection. All ticks
+    // fall in the first 10 minutes, inside the day-close operators'
+    // watermark delay, so their watermark stays 0: it is a literal in
+    // their late-row predicate, and a moving one compiles a predicate
+    // per microbatch whatever the state encoding
+    def ticks(b: Int): Seq[RawTick] = (1 to 6).map(j =>
+      (b * 6L + j, new java.sql.Timestamp((b * 6L + j) * 1000L), j % 3L, 100.0 + b + j * 0.25))
+    def compiled(q: org.apache.spark.sql.streaming.StreamingQuery)(
+        feed: Int => Unit): Seq[Long] =
+      try (0 until 10).map { b =>
+        feed(b)
+        q.processAllAvailable()
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      } finally q.stop()
+    type Op = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+    val tickOps: Seq[(String, Op)] = Seq(
+      "indicators" -> (df => TickStream.statefulIndicators(spark, df).toDF()),
+      "ffill" -> (df => TickStream.priceFfillStream(spark, df).toDF()),
+      "bars" -> (df => TickStream.dailyBarStream(spark, df).toDF()))
+    val counts = tickOps.map { case (name, op) =>
+      val (mem, df) = tickStream()
+      val events = df.withColumn("event_type", lit("trade"))
+        .withColumn("props", lit(null).cast("string"))
+      name -> compiled(startToMemory(op(events), s"compile_$name"))(b => mem.addData(ticks(b)))
+    } :+ {
+      val mem = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(String, Long, Long, String)](
+          implicitly[org.apache.spark.sql.Encoder[(String, Long, Long, String)]], spark.sqlContext)
+      val docs = mem.toDF().toDF("source", "doc_id", "n_chars", "text")
+      "pref_pairs" -> compiled(DocStream.prefPairsStream(spark, docs).toDF()
+        .writeStream.outputMode("update").format("memory").queryName("compile_pref")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("ckpt_compile_pref").toString)
+        .start())(b => mem.addData((1 to 6).map(j =>
+          (s"src${j % 2}", b * 6L + j, 20L + j, s"doc $b $j says something plain"))))
+    }
+    counts.foreach { case (name, c) =>
+      assert(c.drop(2).distinct.size == 1,
+        s"$name: compilations so far, after each microbatch: $c")
+    }
   }
 
   test("stateful indicators are identical on the RocksDB state store") {
@@ -1086,7 +1117,7 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming graph-ANN serve equals the batch graph search") {
     import graft.operators.Similarity
-    val idx = Similarity.graphIndex(spark, sfDir)
+    val idx = Similarity.hnswIndex(spark, sfDir, layered = false)
     idx.nodes.cache().count(): Unit
     val emb = Tables.embeddings(spark, sfDir)
     val staged = java.nio.file.Files.createTempDirectory("gserve").toString
@@ -1107,7 +1138,8 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     val ckpt = java.nio.file.Files.createTempDirectory("gserve_ckpt").toString
-    val q = DocStream.annGraphServeStream(probeStream, idx) { (df, _) =>
+    val q = DocStream.annHnswServeStream(probeStream,
+        () => Similarity.HnswSegmented(idx, Nil)) { (df, _) =>
       buf.synchronized { buf ++= df.collect().map(_.toString): Unit }
     }.option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
@@ -1115,7 +1147,7 @@ class StreamingSpec extends SparkSuite {
     val corpus = Similarity.vecs(spark, sfDir).toDF("vec_id", "v", "norm")
     val batchProbes = corpus.filter(col("vec_id") < 5)
       .toDF("probe_id", "p_v", "p_norm")
-    val batch = Similarity.annGraphSearchProbes(idx, batchProbes)
+    val batch = Similarity.annHnswSearchProbes(idx, batchProbes)
       .collect().map(_.toString)
     assert(buf.sorted.toSeq == batch.sorted.toSeq,
       s"streamed ${buf.length} rows vs batch ${batch.length}")
@@ -1421,7 +1453,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Array[org.apache.spark.sql.Row]]
     val ckpt = java.nio.file.Files.createTempDirectory("hsegserve_ckpt").toString
-    val q = DocStream.annHnswServeStreamSegmented(probeStream, () => seg) {
+    val q = DocStream.annHnswServeStream(probeStream, () => seg) {
       (df, _) =>
         perBatch.synchronized {
           perBatch += df.collect()
@@ -1475,7 +1507,8 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
     val buf = scala.collection.mutable.ArrayBuffer.empty[String]
     val ckpt = java.nio.file.Files.createTempDirectory("hserve_ckpt").toString
-    val q = DocStream.annHnswServeStream(probeStream, idx) { (df, _) =>
+    val q = DocStream.annHnswServeStream(probeStream,
+        () => Similarity.HnswSegmented(idx, Nil)) { (df, _) =>
       buf.synchronized { buf ++= df.collect().map(_.toString): Unit }
     }.option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
@@ -1817,9 +1850,12 @@ class StreamingSpec extends SparkSuite {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     var live: Similarity.HnswIndex = idx0
     val ckpt = java.nio.file.Files.createTempDirectory("hmnt_ckpt").toString
-    val q = DocStream.hnswMaintainStream(stream, idx0) { (ix, bid) =>
-      live = ix
-      seen += ix.nodes.count()
+    // a bar of one segment: every microbatch appends straight into main
+    val q = DocStream.hnswSegmentMaintainStream(stream,
+      Similarity.HnswSegmented(idx0, Nil), maxSegments = 1) { (t, bid) =>
+      assert(t.segments.isEmpty, s"batch $bid opened a segment")
+      live = t.main
+      seen += t.main.nodes.count()
     }.option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
     q.stop()
@@ -2073,52 +2109,57 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("segmented hnsw maintenance: segments per batch, compaction at the bar") {
+    // under both build policies: one maintenance loop, and the tier
+    // keeps main's policy through appends and compactions
     import graft.operators.Similarity
-    val idx0 = Similarity.hnswIndex(spark, sfDir)
-    idx0.nodes.cache().count(): Unit
-    val n0 = idx0.nodes.count()
-    val emb = Tables.embeddings(spark, sfDir)
-    val twins = emb.filter(col("vec_id") < 5)
-      .select((col("vec_id") + 4000000L).as("vec_id"), col("embedding"))
-    val srcDir = java.nio.file.Files.createTempDirectory("hseg_src").toString
-    // three microbatches: 2 + 2 + 1 twins
-    twins.filter(col("vec_id") < 4000002L).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    twins.filter(col("vec_id") >= 4000002L && col("vec_id") < 4000004L)
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    twins.filter(col("vec_id") >= 4000004L).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    val stream = spark.readStream.schema(twins.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val traj = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    var live = Similarity.HnswSegmented(idx0, Nil)
-    val ckpt = java.nio.file.Files.createTempDirectory("hseg_ckpt").toString
-    val q = DocStream.hnswSegmentMaintainStream(stream, live,
-      maxSegments = 2) { (s, _) =>
-      live = s
-      traj += s.segments.length -> s.main.nodes.count(): Unit
-    }.option("checkpointLocation", ckpt).start()
-    q.processAllAvailable()
-    q.stop()
-    // batch 1 opens a segment (main untouched); batch 2 hits the bar
-    // and compacts both into main; batch 3 opens a fresh segment
-    assert(traj.toSeq == Seq(1 -> n0, 0 -> (n0 + 4), 1 -> (n0 + 4)),
-      s"segment/main trajectory was $traj")
-    // serve across main + the open segment: every streamed twin is
-    // its probe's rank-1 neighbor, wherever it currently lives
-    val probes = Similarity.vecs(spark, sfDir)
-      .toDF("vec_id", "v", "norm").filter(col("vec_id") < 5)
-      .toDF("probe_id", "p_v", "p_norm")
-    val res = Similarity.annHnswSearchSegmented(live, probes,
-      excludeSelf = true).collect()
-    val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
-    (0L until 5L).foreach { p =>
-      val top = byProbe(p).minBy(_.getAs[Int]("rank"))
-      assert(top.getAs[Long]("neighbor_id") == p + 4000000L,
-        s"probe $p: expected its streamed twin first, got $top")
-      assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
+    for (layered <- Seq(true, false)) {
+      val clue = if (layered) "layered" else "single-layer"
+      val idx0 = Similarity.hnswIndex(spark, sfDir, layered = layered)
+      idx0.nodes.cache().count(): Unit
+      val n0 = idx0.nodes.count()
+      val emb = Tables.embeddings(spark, sfDir)
+      val twins = emb.filter(col("vec_id") < 5)
+        .select((col("vec_id") + 4000000L).as("vec_id"), col("embedding"))
+      val srcDir = java.nio.file.Files.createTempDirectory("hseg_src").toString
+      // three microbatches: 2 + 2 + 1 twins
+      twins.filter(col("vec_id") < 4000002L).coalesce(1)
+        .write.mode("append").parquet(srcDir)
+      twins.filter(col("vec_id") >= 4000002L && col("vec_id") < 4000004L)
+        .coalesce(1).write.mode("append").parquet(srcDir)
+      twins.filter(col("vec_id") >= 4000004L).coalesce(1)
+        .write.mode("append").parquet(srcDir)
+      val stream = spark.readStream.schema(twins.schema)
+        .option("maxFilesPerTrigger", 1).parquet(srcDir)
+      val traj = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+      var live = Similarity.HnswSegmented(idx0, Nil)
+      val ckpt = java.nio.file.Files.createTempDirectory("hseg_ckpt").toString
+      val q = DocStream.hnswSegmentMaintainStream(stream, live,
+        maxSegments = 2) { (s, _) =>
+        live = s
+        traj += s.segments.length -> s.main.nodes.count(): Unit
+      }.option("checkpointLocation", ckpt).start()
+      try { q.processAllAvailable() } finally { q.stop() }
+      // batch 1 opens a segment (main untouched); batch 2 hits the bar
+      // and compacts both into main; batch 3 opens a fresh segment
+      assert(traj.toSeq == Seq(1 -> n0, 0 -> (n0 + 4), 1 -> (n0 + 4)),
+        s"$clue: segment/main trajectory was $traj")
+      assert((live.main +: live.segments).forall(_.layered == layered), clue)
+      // serve across main + the open segment: every streamed twin is
+      // its probe's rank-1 neighbor, wherever it currently lives
+      val probes = Similarity.vecs(spark, sfDir)
+        .toDF("vec_id", "v", "norm").filter(col("vec_id") < 5)
+        .toDF("probe_id", "p_v", "p_norm")
+      val res = Similarity.annHnswSearchSegmented(live, probes,
+        excludeSelf = true).collect()
+      val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
+      (0L until 5L).foreach { p =>
+        val top = byProbe(p).minBy(_.getAs[Int]("rank"))
+        assert(top.getAs[Long]("neighbor_id") == p + 4000000L,
+          s"$clue probe $p: expected its streamed twin first, got $top")
+        assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
+      }
+      idx0.nodes.unpersist(): Unit
     }
-    idx0.nodes.unpersist(): Unit
   }
 
   test("segment maintenance resumed from a saved tier equals the continuous run") {
@@ -2183,53 +2224,6 @@ class StreamingSpec extends SparkSuite {
         .collect().map(_.toSeq).toSeq
     assert(serve(resumed) == serve(cont),
       "resumed tier serves differently than the continuous run")
-    idx0.nodes.unpersist(): Unit
-  }
-
-  test("flat-NSW segment maintenance mirrors the HNSW tier's economics") {
-    import graft.operators.Similarity
-    val idx0 = Similarity.graphIndex(spark, sfDir)
-    idx0.nodes.cache().count(): Unit
-    val n0 = idx0.nodes.count()
-    val emb = Tables.embeddings(spark, sfDir)
-    val twins = emb.filter(col("vec_id") < 5)
-      .select((col("vec_id") + 4000000L).as("vec_id"), col("embedding"))
-    val srcDir = java.nio.file.Files.createTempDirectory("nseg_src").toString
-    twins.filter(col("vec_id") < 4000002L).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    twins.filter(col("vec_id") >= 4000002L && col("vec_id") < 4000004L)
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    twins.filter(col("vec_id") >= 4000004L).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    val stream = spark.readStream.schema(twins.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val traj = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    var live = Similarity.NswSegmented(idx0, Nil)
-    val ckpt = java.nio.file.Files.createTempDirectory("nseg_ckpt").toString
-    val q = DocStream.nswSegmentMaintainStream(stream, live,
-      maxSegments = 2) { (s, _) =>
-      live = s
-      traj += s.segments.length -> s.main.nodes.count(): Unit
-    }.option("checkpointLocation", ckpt).start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    // batch 1 opens a segment (main untouched); batch 2 hits the bar
-    // and compacts both into main; batch 3 opens a fresh segment
-    assert(traj.toSeq == Seq(1 -> n0, 0 -> (n0 + 4), 1 -> (n0 + 4)),
-      s"segment/main trajectory was $traj")
-    // every streamed twin is its probe's rank-1 neighbor, whether it
-    // now lives in main (compacted) or the open segment
-    val probes = Similarity.vecs(spark, sfDir)
-      .toDF("vec_id", "v", "norm").filter(col("vec_id") < 5)
-      .toDF("probe_id", "p_v", "p_norm")
-    val res = Similarity.annGraphSearchSegmented(live, probes,
-      excludeSelf = true).collect()
-    val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
-    (0L until 5L).foreach { p =>
-      val top = byProbe(p).minBy(_.getAs[Int]("rank"))
-      assert(top.getAs[Long]("neighbor_id") == p + 4000000L,
-        s"probe $p: expected its streamed twin first, got $top")
-      assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
-    }
     idx0.nodes.unpersist(): Unit
   }
 
