@@ -521,13 +521,13 @@ class StreamingSpec extends SparkSuite {
   test("the indicator state decoder compiles once, not once per microbatch") {
     import org.apache.spark.metrics.source.CodegenMetrics
     import spark.implicits._
-    // every stateful operator whose state holds a collection. All ticks
-    // fall in the first 10 minutes, inside the day-close operators'
+    // every stateful operator whose state holds a collection. The
+    // day-close operators get ticks 1 s apart, all inside their 10 min
     // watermark delay, so their watermark stays 0: it is a literal in
     // their late-row predicate, and a moving one compiles a predicate
     // per microbatch whatever the state encoding
-    def ticks(b: Int): Seq[RawTick] = (1 to 6).map(j =>
-      (b * 6L + j, new java.sql.Timestamp((b * 6L + j) * 1000L), j % 3L, 100.0 + b + j * 0.25))
+    def ticks(b: Int, stepMs: Long): Seq[RawTick] = (1 to 6).map(j =>
+      (b * 6L + j, new java.sql.Timestamp((b * 6L + j) * stepMs), j % 3L, 100.0 + b + j * 0.25))
     def compiled(q: org.apache.spark.sql.streaming.StreamingQuery)(
         feed: Int => Unit): Seq[Long] =
       try (0 until 10).map { b =>
@@ -536,15 +536,16 @@ class StreamingSpec extends SparkSuite {
         CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       } finally q.stop()
     type Op = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
-    val tickOps: Seq[(String, Op)] = Seq(
-      "indicators" -> (df => TickStream.statefulIndicators(spark, df).toDF()),
-      "ffill" -> (df => TickStream.priceFfillStream(spark, df).toDF()),
-      "bars" -> (df => TickStream.dailyBarStream(spark, df).toDF()))
-    val counts = tickOps.map { case (name, op) =>
+    val tickOps: Seq[(String, Long, Op)] = Seq(
+      ("indicators", 60000L, df => TickStream.statefulIndicators(spark, df).toDF()),
+      ("ffill", 1000L, df => TickStream.priceFfillStream(spark, df).toDF()),
+      ("bars", 1000L, df => TickStream.dailyBarStream(spark, df).toDF()))
+    val counts = tickOps.map { case (name, stepMs, op) =>
       val (mem, df) = tickStream()
       val events = df.withColumn("event_type", lit("trade"))
         .withColumn("props", lit(null).cast("string"))
-      name -> compiled(startToMemory(op(events), s"compile_$name"))(b => mem.addData(ticks(b)))
+      name -> compiled(startToMemory(op(events), s"compile_$name"))(
+        b => mem.addData(ticks(b, stepMs)))
     } :+ {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(String, Long, Long, String)](
