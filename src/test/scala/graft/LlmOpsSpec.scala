@@ -1418,64 +1418,70 @@ class LlmOpsSpec extends SparkSuite {
     }
   }
 
-  test("segmented hnsw: appends leave main untouched, merged serve, one-rewrite compaction") {
-    // under both build policies: segments, merged serve and compaction
-    // are one implementation, and each keeps main's policy
+  // segments, merged serve and compaction are one implementation under
+  // both build policies, and the tier keeps main's policy throughout
+  private def segmentedTierChecks(layered: Boolean): Unit = {
     val corpus = Similarity.vecs(spark, sfDir).toDF("vec_id", "v", "norm")
-    for (layered <- Seq(true, false)) {
-      val clue = if (layered) "layered" else "single-layer"
-      val mainIdx = Similarity.hnswIndex(spark, sfDir, layered = layered)
-      def twins(lo: Long, hi: Long) = Tables.embeddings(spark, sfDir)
-        .filter(col("vec_id") >= lo && col("vec_id") < hi)
-        .select((col("vec_id") + 2000000L).as("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-      var seg = Similarity.HnswSegmented(mainIdx, Nil)
-      seg = Similarity.hnswAppendSegment(seg, twins(0, 3))
-      seg = Similarity.hnswAppendSegment(seg, twins(3, 5))
-      // the append economics: main's node frame is the SAME object —
-      // nothing about the standing index was recomputed or rewritten
-      assert((seg.main.nodes eq mainIdx.nodes) && seg.segments.length == 2,
-        s"$clue: segment append must not touch main")
-      assert(seg.segments.forall(_.layered == layered), clue)
-      // merged serve: each twin lives ONLY in a segment, so finding it
-      // rank-1 proves the segment legs participate in the global top-k
-      val probes = corpus.filter(col("vec_id") < 5)
-        .toDF("probe_id", "p_v", "p_norm")
-      val res = Similarity.annHnswSearchSegmented(seg, probes,
-        excludeSelf = true).collect()
-      val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
-      (0L until 5L).foreach { p =>
-        val top = byProbe(p).minBy(_.getAs[Int]("rank"))
-        assert(top.getAs[Long]("neighbor_id") == p + 2000000L,
-          s"$clue probe $p: expected its segment twin first, got $top")
-        assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
-      }
-      // the union re-ranks to ONE top-k: full rank runs, descending
-      byProbe.values.foreach { rows =>
-        val sorted = rows.sortBy(_.getAs[Int]("rank"))
-        assert(sorted.map(_.getAs[Int]("rank")).toSeq == (1 to rows.length),
-          s"$clue: ranks must be a contiguous 1..k run after the merge")
-        val cosines = sorted.map(_.getAs[Double]("cosine")).toSeq
-        assert(cosines == cosines.sorted.reverse, s"$clue: merge must rank by cosine")
-      }
-      // compaction = ONE rewrite, bit-identical to having appended the
-      // concatenated batches directly (id-ordered insertion makes
-      // segment order irrelevant)
-      val compacted = Similarity.compactHnswSegments(seg)
-      assert(compacted.segments.isEmpty)
-      val direct = Similarity.updateHnswIndex(mainIdx, twins(0, 5))
-      assert(compacted.main.nodes.collect().map(_.toString).sorted.toSeq
-        == direct.nodes.collect().map(_.toString).sorted.toSeq,
-        s"$clue: compacted index diverged from a direct append")
-      // and the compacted index still serves the twins rank-1
-      val resC = Similarity.annHnswSearchProbes(compacted.main, probes,
-        excludeSelf = true).collect().groupBy(_.getAs[Long]("probe_id"))
-      (0L until 5L).foreach { p =>
-        val top = resC(p).minBy(_.getAs[Int]("rank"))
-        assert(top.getAs[Long]("neighbor_id") == p + 2000000L,
-          s"$clue: post-compaction probe $p lost its twin: $top")
-      }
+    val clue = if (layered) "layered" else "single-layer"
+    val mainIdx = Similarity.hnswIndex(spark, sfDir, layered = layered)
+    def twins(lo: Long, hi: Long) = Tables.embeddings(spark, sfDir)
+      .filter(col("vec_id") >= lo && col("vec_id") < hi)
+      .select((col("vec_id") + 2000000L).as("vec_id"),
+        col("embedding").cast("array<double>").as("v"))
+    var seg = Similarity.HnswSegmented(mainIdx, Nil)
+    seg = Similarity.hnswAppendSegment(seg, twins(0, 3))
+    seg = Similarity.hnswAppendSegment(seg, twins(3, 5))
+    // the append economics: main's node frame is the SAME object —
+    // nothing about the standing index was recomputed or rewritten
+    assert((seg.main.nodes eq mainIdx.nodes) && seg.segments.length == 2,
+      s"$clue: segment append must not touch main")
+    assert(seg.segments.forall(_.layered == layered), clue)
+    // merged serve: each twin lives ONLY in a segment, so finding it
+    // rank-1 proves the segment legs participate in the global top-k
+    val probes = corpus.filter(col("vec_id") < 5)
+      .toDF("probe_id", "p_v", "p_norm")
+    val res = Similarity.annHnswSearchSegmented(seg, probes,
+      excludeSelf = true).collect()
+    val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
+    (0L until 5L).foreach { p =>
+      val top = byProbe(p).minBy(_.getAs[Int]("rank"))
+      assert(top.getAs[Long]("neighbor_id") == p + 2000000L,
+        s"$clue probe $p: expected its segment twin first, got $top")
+      assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
     }
+    // the union re-ranks to ONE top-k: full rank runs, descending
+    byProbe.values.foreach { rows =>
+      val sorted = rows.sortBy(_.getAs[Int]("rank"))
+      assert(sorted.map(_.getAs[Int]("rank")).toSeq == (1 to rows.length),
+        s"$clue: ranks must be a contiguous 1..k run after the merge")
+      val cosines = sorted.map(_.getAs[Double]("cosine")).toSeq
+      assert(cosines == cosines.sorted.reverse, s"$clue: merge must rank by cosine")
+    }
+    // compaction = ONE rewrite, bit-identical to having appended the
+    // concatenated batches directly (id-ordered insertion makes
+    // segment order irrelevant)
+    val compacted = Similarity.compactHnswSegments(seg)
+    assert(compacted.segments.isEmpty)
+    val direct = Similarity.updateHnswIndex(mainIdx, twins(0, 5))
+    assert(compacted.main.nodes.collect().map(_.toString).sorted.toSeq
+      == direct.nodes.collect().map(_.toString).sorted.toSeq,
+      s"$clue: compacted index diverged from a direct append")
+    // and the compacted index still serves the twins rank-1
+    val resC = Similarity.annHnswSearchProbes(compacted.main, probes,
+      excludeSelf = true).collect().groupBy(_.getAs[Long]("probe_id"))
+    (0L until 5L).foreach { p =>
+      val top = resC(p).minBy(_.getAs[Int]("rank"))
+      assert(top.getAs[Long]("neighbor_id") == p + 2000000L,
+        s"$clue: post-compaction probe $p lost its twin: $top")
+    }
+  }
+
+  test("segmented hnsw: appends leave main untouched, merged serve, one-rewrite compaction") {
+    segmentedTierChecks(layered = true)
+  }
+
+  test("segmented flat-NSW mirrors the HNSW segment tier") {
+    segmentedTierChecks(layered = false)
   }
 
   test("bloom_might_contain: parity with sketch probes, null-safe both sides, codegen'd") {

@@ -2109,58 +2109,64 @@ class StreamingSpec extends SparkSuite {
     served.unpersist(): Unit
   }
 
-  test("segmented hnsw maintenance: segments per batch, compaction at the bar") {
-    // under both build policies: one maintenance loop, and the tier
-    // keeps main's policy through appends and compactions
+  // one maintenance loop under both build policies, and the tier keeps
+  // main's policy through appends and compactions
+  private def segmentMaintenanceChecks(layered: Boolean): Unit = {
     import graft.operators.Similarity
-    for (layered <- Seq(true, false)) {
-      val clue = if (layered) "layered" else "single-layer"
-      val idx0 = Similarity.hnswIndex(spark, sfDir, layered = layered)
-      idx0.nodes.cache().count(): Unit
-      val n0 = idx0.nodes.count()
-      val emb = Tables.embeddings(spark, sfDir)
-      val twins = emb.filter(col("vec_id") < 5)
-        .select((col("vec_id") + 4000000L).as("vec_id"), col("embedding"))
-      val srcDir = java.nio.file.Files.createTempDirectory("hseg_src").toString
-      // three microbatches: 2 + 2 + 1 twins
-      twins.filter(col("vec_id") < 4000002L).coalesce(1)
-        .write.mode("append").parquet(srcDir)
-      twins.filter(col("vec_id") >= 4000002L && col("vec_id") < 4000004L)
-        .coalesce(1).write.mode("append").parquet(srcDir)
-      twins.filter(col("vec_id") >= 4000004L).coalesce(1)
-        .write.mode("append").parquet(srcDir)
-      val stream = spark.readStream.schema(twins.schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      val traj = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-      var live = Similarity.HnswSegmented(idx0, Nil)
-      val ckpt = java.nio.file.Files.createTempDirectory("hseg_ckpt").toString
-      val q = DocStream.hnswSegmentMaintainStream(stream, live,
-        maxSegments = 2) { (s, _) =>
-        live = s
-        traj += s.segments.length -> s.main.nodes.count(): Unit
-      }.option("checkpointLocation", ckpt).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // batch 1 opens a segment (main untouched); batch 2 hits the bar
-      // and compacts both into main; batch 3 opens a fresh segment
-      assert(traj.toSeq == Seq(1 -> n0, 0 -> (n0 + 4), 1 -> (n0 + 4)),
-        s"$clue: segment/main trajectory was $traj")
-      assert((live.main +: live.segments).forall(_.layered == layered), clue)
-      // serve across main + the open segment: every streamed twin is
-      // its probe's rank-1 neighbor, wherever it currently lives
-      val probes = Similarity.vecs(spark, sfDir)
-        .toDF("vec_id", "v", "norm").filter(col("vec_id") < 5)
-        .toDF("probe_id", "p_v", "p_norm")
-      val res = Similarity.annHnswSearchSegmented(live, probes,
-        excludeSelf = true).collect()
-      val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
-      (0L until 5L).foreach { p =>
-        val top = byProbe(p).minBy(_.getAs[Int]("rank"))
-        assert(top.getAs[Long]("neighbor_id") == p + 4000000L,
-          s"$clue probe $p: expected its streamed twin first, got $top")
-        assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
-      }
-      idx0.nodes.unpersist(): Unit
+    val clue = if (layered) "layered" else "single-layer"
+    val idx0 = Similarity.hnswIndex(spark, sfDir, layered = layered)
+    idx0.nodes.cache().count(): Unit
+    val n0 = idx0.nodes.count()
+    val emb = Tables.embeddings(spark, sfDir)
+    val twins = emb.filter(col("vec_id") < 5)
+      .select((col("vec_id") + 4000000L).as("vec_id"), col("embedding"))
+    val srcDir = java.nio.file.Files.createTempDirectory("hseg_src").toString
+    // three microbatches: 2 + 2 + 1 twins
+    twins.filter(col("vec_id") < 4000002L).coalesce(1)
+      .write.mode("append").parquet(srcDir)
+    twins.filter(col("vec_id") >= 4000002L && col("vec_id") < 4000004L)
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    twins.filter(col("vec_id") >= 4000004L).coalesce(1)
+      .write.mode("append").parquet(srcDir)
+    val stream = spark.readStream.schema(twins.schema)
+      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val traj = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    var live = Similarity.HnswSegmented(idx0, Nil)
+    val ckpt = java.nio.file.Files.createTempDirectory("hseg_ckpt").toString
+    val q = DocStream.hnswSegmentMaintainStream(stream, live,
+      maxSegments = 2) { (s, _) =>
+      live = s
+      traj += s.segments.length -> s.main.nodes.count(): Unit
+    }.option("checkpointLocation", ckpt).start()
+    try { q.processAllAvailable() } finally { q.stop() }
+    // batch 1 opens a segment (main untouched); batch 2 hits the bar
+    // and compacts both into main; batch 3 opens a fresh segment
+    assert(traj.toSeq == Seq(1 -> n0, 0 -> (n0 + 4), 1 -> (n0 + 4)),
+      s"$clue: segment/main trajectory was $traj")
+    assert((live.main +: live.segments).forall(_.layered == layered), clue)
+    // serve across main + the open segment: every streamed twin is
+    // its probe's rank-1 neighbor, wherever it currently lives
+    val probes = Similarity.vecs(spark, sfDir)
+      .toDF("vec_id", "v", "norm").filter(col("vec_id") < 5)
+      .toDF("probe_id", "p_v", "p_norm")
+    val res = Similarity.annHnswSearchSegmented(live, probes,
+      excludeSelf = true).collect()
+    val byProbe = res.groupBy(_.getAs[Long]("probe_id"))
+    (0L until 5L).foreach { p =>
+      val top = byProbe(p).minBy(_.getAs[Int]("rank"))
+      assert(top.getAs[Long]("neighbor_id") == p + 4000000L,
+        s"$clue probe $p: expected its streamed twin first, got $top")
+      assert(math.abs(top.getAs[Double]("cosine") - 1.0) < 1e-6)
     }
+    idx0.nodes.unpersist(): Unit
+  }
+
+  test("segmented hnsw maintenance: segments per batch, compaction at the bar") {
+    segmentMaintenanceChecks(layered = true)
+  }
+
+  test("flat-NSW segment maintenance mirrors the HNSW tier's economics") {
+    segmentMaintenanceChecks(layered = false)
   }
 
   test("segment maintenance resumed from a saved tier equals the continuous run") {
